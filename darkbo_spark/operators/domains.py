@@ -254,7 +254,7 @@ def with_registered_domain(
       plan literal (isin/CASE inside whole-stage codegen). Fastest at
       seam-sized rule sets, but per-row cost GROWS with the rule count
       (measured 2.5–2.9× wall from 16 → ~430 rules under equal load,
-      scripts/ab_domains.py), and the full ~9k-rule upstream PSL would
+      BENCH/BASELINE.md "Round 7: domains-family A/B"), and the full ~9k-rule upstream PSL would
       compile a megabyte-scale expression.
     * "join" — ONE broadcast hash join per suffix label-depth k: the
       host's last-k labels probe the (suffix → rule flags) table, so

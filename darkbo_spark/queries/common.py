@@ -173,15 +173,14 @@ def _stored_table(
     sf_dir: str, name: str, source_table: str, build, partition_by=None, tag: str = ""
 ):
     """Publish-once plumbing for the stored-index queries: per-user tmp
-    base (no cross-user collisions) and the publish held under a
-    BuildLock with a double-checked fingerprint — concurrent driver /
-    bench / pytest processes must never race two writers into the same
-    v{seq} dir (the exact hazard SnapshotTable's own docs call out). A
-    loser WAITS for the winner and then finds the fingerprint fresh."""
-    import os
-    import time
-
-    from darkbo_spark.storage.snapshots import BuildLock, SnapshotTable
+    base (no cross-user collisions) and the publish held under the
+    table's BuildLock, fingerprint checked under the lock — concurrent
+    driver / bench / pytest processes must never race two writers into
+    the same v{seq} dir (the exact hazard SnapshotTable's own docs call
+    out). A loser WAITS for the winner and then finds the fingerprint
+    fresh."""
+    from darkbo_spark.storage.snapshots import SnapshotTable
+    from darkbo_spark.storage.stages import WAIT_S, locked
 
     base = _stored_base()
     table = SnapshotTable(base, name)
@@ -189,22 +188,8 @@ def _stored_table(
     # layout change must republish even over an unchanged corpus, or a
     # stale pre-change version would be served to new readers
     fp = _corpus_fp(sf_dir, source_table) + (f"|{tag}" if tag else "")
-    if table.current_fingerprint() == fp:
-        return table
-    lock = BuildLock(base, name)
-    owner = f"q-{os.getpid()}-{time.time()}"
-    for _ in range(240):
-        if lock.acquire(owner):
-            break
-        if table.current_fingerprint() == fp:
-            return table  # a concurrent publisher finished our work
-        time.sleep(0.5)
-    else:
-        raise RuntimeError(f"stored-index lock busy for {name}: {lock.owner()}")
-    try:
-        if table.current_fingerprint() != fp:  # double-checked under the lock
+    with locked(base, name, WAIT_S):
+        if table.current_fingerprint() != fp:
             table.publish(build(), fp, partition_by=partition_by)
             table.expire(retain_last=3)
-    finally:
-        lock.release(owner)
     return table

@@ -53,7 +53,7 @@ def domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # impl="auto": broadcast-probe join form at PSL-sized rule sets
     # (~430 rules → K flat hash probes; measured vs the inline-literal
-    # expr form in scripts/ab_domains.py + BENCH/BASELINE.md)
+    # expr form: BENCH/BASELINE.md, "Round 7: domains-family A/B")
     docs = with_registered_domain(d, host_of(F.expr(_DOC_URL_SQL)), "domain")
     return docs.groupBy("domain").agg(
         F.count("*").alias("n_docs"),

@@ -631,9 +631,14 @@ def prebuild_query_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
     import tempfile
-    import time
 
-    from darkbo_spark.retrieval.prebuild import prebuild_all, query_project
+    from darkbo_spark.retrieval.prebuild import (
+        _data_fingerprint,
+        _publish_indexes,
+        project_items,
+        query_project,
+    )
+    from darkbo_spark.storage.stages import WAIT_S
 
     # per-user dir (no cross-user collisions); fixture written ATOMICALLY
     # (tmp + rename — a concurrent reader never sees a half-written file)
@@ -673,16 +678,13 @@ def prebuild_query_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         with os.fdopen(fd, "w") as f:
             f.write(payload)
         os.replace(tmp, faq_path)
-    # a concurrent builder holding the project lock is fine — wait briefly
-    # and retry; it is building the very indexes this query needs
-    for attempt in range(20):
-        try:
-            prebuild_all(spark, data_dir, out_dir)  # fingerprint-skips when warm
-            break
-        except RuntimeError as e:
-            if "lock" not in str(e) or attempt == 19:
-                raise
-            time.sleep(0.5)
+    # a concurrent builder holding the project lock is fine — wait for it;
+    # it is building the very indexes this query needs
+    paths = {"faq": faq_path, "kb": None}
+    _publish_indexes(
+        spark, os.path.join(out_dir, "900"), _data_fingerprint(paths),
+        lambda: project_items(spark, "900", paths), wait_s=WAIT_S,
+    )
     return query_project(
         spark, out_dir, "900", "fast table scan with window agg", top_k=3
     )

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,52 +60,17 @@ def prebuild_twin_serve(
     """Publish the twin project's three index tables (fingerprint-gated,
     lock-protected — the exact prebuild_project shape) and serve TWIN_QUERY
     from the STORED tables via the production query_project."""
-    from darkbo_spark.functions.embed import embed_udf
-    from darkbo_spark.operators.tfidf import build_bm25_postings
-    from darkbo_spark.retrieval.prebuild import query_project
-    from darkbo_spark.storage.snapshots import BuildLock, SnapshotTable
+    from darkbo_spark.retrieval.prebuild import _publish_indexes, query_project
+    from darkbo_spark.storage.stages import WAIT_S
 
     out_dir = os.path.join(
         tempfile.gettempdir(), f"darkbo_spark_prebuild_twin_u{os.getuid()}"
     )
-    base = os.path.join(out_dir, _PROJECT)
-    os.makedirs(base, exist_ok=True)
-    tables = {
-        name: SnapshotTable(base, name)
-        for name in ("items", "dense_index", "sparse_postings")
-    }
-    if not all(t.current_fingerprint() == fingerprint for t in tables.values()):
-        lock = BuildLock(base, "prebuild")
-        owner = f"twin-{os.getpid()}-{time.time()}"
-        for _ in range(240):
-            if lock.acquire(owner):
-                break
-            if all(t.current_fingerprint() == fingerprint for t in tables.values()):
-                break  # a concurrent publisher finished our work
-            time.sleep(0.5)
-        else:
-            raise RuntimeError(f"prebuild twin lock busy: {lock.owner()}")
-        try:
-            # double-checked under the lock
-            if not all(
-                t.current_fingerprint() == fingerprint for t in tables.values()
-            ):
-                items = twin_items(
-                    spark.read.parquet(f"{sf_dir}/documents.parquet")
-                )
-                dense = items.select(
-                    "id", embed_udf(F.col("content")).alias("embedding")
-                )
-                postings = build_bm25_postings(
-                    items, text_col="content", id_col="id", persist=False
-                )
-                tables["items"].publish(items, fingerprint)
-                tables["dense_index"].publish(dense, fingerprint)
-                tables["sparse_postings"].publish(postings, fingerprint)
-                for t in tables.values():
-                    t.expire(retain_last=3)
-        finally:
-            lock.release(owner)
+    _publish_indexes(
+        spark, os.path.join(out_dir, _PROJECT), fingerprint,
+        lambda: twin_items(spark.read.parquet(f"{sf_dir}/documents.parquet")),
+        wait_s=WAIT_S,
+    )
     return query_project(spark, out_dir, _PROJECT, TWIN_QUERY, top_k=TWIN_TOP_K)
 
 

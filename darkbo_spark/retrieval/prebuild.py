@@ -13,7 +13,9 @@ ai_worker.py:172-261):
   dense_index, sparse_postings) under out_dir/{project_id}/, all gated by
   ONE data-file checksum fingerprint (unchanged inputs → zero work, the
   reference's needs_rebuild semantics), under the project's BuildLock,
-  keep-last-3 retention.
+  keep-last-3 retention. `_publish_indexes` is that lock-and-publish body,
+  shared with the driver-oracled twin (retrieval/oracle_twin.py); its
+  lock wait is storage/stages.locked.
 * `query_project` — serve a raw query string entirely from the STORED
   tables: dense (embed the query, exact cosine vs the stored vectors),
   sparse (QueryParser semantics over the stored BM25 postings), basic
@@ -32,7 +34,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +46,8 @@ from darkbo_spark.operators.similarity import brute_force_topk
 from darkbo_spark.operators.tfidf import build_bm25_postings
 from darkbo_spark.sources.discovery import discover_project_dirs
 from darkbo_spark.sources.readers import read_faq_json, read_kb_json
-from darkbo_spark.storage.snapshots import BuildLock, SnapshotTable
+from darkbo_spark.storage.snapshots import SnapshotTable
+from darkbo_spark.storage.stages import locked
 
 
 def project_items(
@@ -84,55 +86,53 @@ def _data_fingerprint(paths: dict[str, str | None]) -> str:
     return h.hexdigest()
 
 
+_INDEX_TABLES = ("items", "dense_index", "sparse_postings")
+
+
+def _publish_indexes(
+    spark: SparkSession, base: str, fp: str, items_fn, wait_s: float
+) -> tuple[bool, dict]:
+    """The one prebuild lock-and-publish body: under `base`'s prebuild
+    BuildLock (waiting up to `wait_s`), publish the item corpus
+    `items_fn()`, its dense embeddings and its BM25 postings as three
+    versions sharing fingerprint `fp` — or skip if all three already
+    carry it — then keep the last 3 versions of each. Returns
+    (skipped, {table: current version})."""
+    tables = {name: SnapshotTable(base, name) for name in _INDEX_TABLES}
+    with locked(base, "prebuild", wait_s):
+        skipped = all(t.current_fingerprint() == fp for t in tables.values())
+        if not skipped:
+            items = items_fn()
+            # one Arrow pass: embeddings ride along with the items scan
+            dense = items.select("id", embed_udf(F.col("content")).alias("embedding"))
+            postings = build_bm25_postings(
+                items, text_col="content", id_col="id", persist=False
+            )
+            for name, df in zip(_INDEX_TABLES, (items, dense, postings)):
+                tables[name].publish(df, fp)
+                tables[name].expire(retain_last=3)
+        versions = {name: t.current()["version"] for name, t in tables.items()}
+    return skipped, versions
+
+
 def prebuild_project(
     spark: SparkSession,
     project_id: str,
     paths: dict[str, str | None],
     out_dir: str,
 ) -> dict:
-    """Build (or skip) one project's retrieval indexes. Returns
+    """Build (or skip) one project's retrieval indexes; refuses at once if
+    another builder holds the project's lock. Returns
     {"project_id", "fingerprint", "skipped": bool, "versions": {...}}."""
-    base = os.path.join(out_dir, project_id)
-    os.makedirs(base, exist_ok=True)
     fp = _data_fingerprint(paths)
-    tables = {
-        name: SnapshotTable(base, name)
-        for name in ("items", "dense_index", "sparse_postings")
-    }
-    if all(t.current_fingerprint() == fp for t in tables.values()):
-        return {
-            "project_id": project_id,
-            "fingerprint": fp,
-            "skipped": True,
-            "versions": {n: t.current()["version"] for n, t in tables.items()},
-        }
-
-    lock = BuildLock(base, "prebuild")
-    owner = f"prebuild-{time.time()}"
-    if not lock.acquire(owner):
-        raise RuntimeError(
-            f"prebuild lock held by {lock.owner()} for project {project_id}"
-        )
-    try:
-        items = project_items(spark, project_id, paths)
-        # one Arrow pass: embeddings ride along with the items scan
-        dense = items.select("id", embed_udf(F.col("content")).alias("embedding"))
-        postings = build_bm25_postings(
-            items, text_col="content", id_col="id", persist=False
-        )
-        versions = {
-            "items": tables["items"].publish(items, fp),
-            "dense_index": tables["dense_index"].publish(dense, fp),
-            "sparse_postings": tables["sparse_postings"].publish(postings, fp),
-        }
-        for t in tables.values():
-            t.expire(retain_last=3)
-    finally:
-        lock.release(owner)
+    skipped, versions = _publish_indexes(
+        spark, os.path.join(out_dir, project_id), fp,
+        lambda: project_items(spark, project_id, paths), wait_s=0.0,
+    )
     return {
         "project_id": project_id,
         "fingerprint": fp,
-        "skipped": False,
+        "skipped": skipped,
         "versions": versions,
     }
 

@@ -391,22 +391,12 @@ def maintain(
     threshold = len(dirs_before) if partitioned else target_files
     needs_compact = len(files_before) > threshold
 
-    base = os.path.dirname(table.dir)
-    lock = BuildLock(base, table.name)
-    owner = f"maint-{os.getpid()}-{time.time()}"
-    deadline = time.time() + lock_wait_s
-    while not lock.acquire(owner):
-        if time.time() > deadline:
-            raise RuntimeError(
-                f"maintenance lock busy for {table.name}: {lock.owner()}"
-            )
-        time.sleep(0.25)
-    try:
+    from darkbo_spark.storage.stages import locked
+
+    with locked(os.path.dirname(table.dir), table.name, lock_wait_s, "maintenance"):
         if needs_compact:
             table.compact(spark, target_files=target_files)
         expired = table.expire(retain_last=retain_last)
-    finally:
-        lock.release(owner)
 
     files_after = table.data_files()
     return {

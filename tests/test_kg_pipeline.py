@@ -342,3 +342,39 @@ def test_pipeline_nil_mining_growth_roundtrip(spark, tmp_path):
         .count()
         > 0
     )
+
+
+def test_metrics_table_keeps_last_three(spark, tmp_path):
+    """Every run publishes a new `_metrics` version; retention must cover
+    it like the stage tables (four runs → at most 3 committed)."""
+    from darkbo_spark.storage.snapshots import SnapshotTable
+
+    out = str(tmp_path / "kg")
+    for seed in range(4):
+        assert run_pipeline(spark, out, n_pages=20, seed=seed).stages_run
+    for name in ("_metrics", "docs", "kg_triples"):
+        assert len(SnapshotTable(out, name).versions()) <= 3, name
+
+
+def test_dict_thread_failure_reraises_and_resumes(spark, tmp_path, monkeypatch):
+    """A failure inside the concurrent dictionary thread surfaces as the
+    same exception, releases the run lock, and keeps the page stages it
+    raced: the rerun builds only the dictionary-derived stages."""
+    import darkbo_spark.kg.pipeline as kp
+
+    out = str(tmp_path / "kg")
+    boom = RuntimeError("canonicalize exploded")
+
+    def _raise(*_a, **_k):
+        raise boom
+
+    monkeypatch.setattr(kp, "canonicalize_entities", _raise)
+    with pytest.raises(RuntimeError) as ei:
+        run_pipeline(spark, out, n_pages=40, seed=5)
+    assert ei.value is boom
+    assert not os.path.exists(os.path.join(out, ".pipeline.lock"))
+
+    monkeypatch.undo()
+    res = run_pipeline(spark, out, n_pages=40, seed=5)
+    assert set(res.stages_skipped) == {"docs", "raw_triples"}
+    assert set(res.stages_run) == {"eid_map", "kg_entities", "kg_triples"}

@@ -459,3 +459,35 @@ def test_envelope_merge_algebra(spark):
            for r in resolve_from_envelopes(fwd).collect()}
     assert got[("acquired", "Acme")] == ("2024-01-02", "2024-01-05", 2)
     assert got[("based_in", "Madrid")] == ("2024-01-04", "2024-01-04", 1)
+
+
+def test_fusion_pool_failure_leaves_no_pointer_and_resumes(spark, tmp_path, monkeypatch):
+    """A failure inside the fusion pool fails the run without publishing
+    the failed tables; the rerun builds only those. `entity_types` feeds
+    two stages — kg_entity_types and kg_entity_profiles (which derives
+    each entity's type from it) — so both fail and the other three
+    fusion stages publish."""
+    import os
+
+    import pytest
+
+    import darkbo_spark.kg.temporal as kt
+    from darkbo_spark.kg.pipeline import run_pipeline
+
+    out = str(tmp_path / "kg")
+    failing = {"kg_entity_types", "kg_entity_profiles"}
+
+    def _raise(*_a, **_k):
+        raise ValueError("entity_types exploded")
+
+    monkeypatch.setattr(kt, "entity_types", _raise)
+    with pytest.raises(ValueError, match="entity_types exploded"):
+        run_pipeline(spark, out, n_pages=60, seed=3, facts_asof="2024-01-02")
+    for name in failing:
+        assert not os.path.exists(os.path.join(out, name, "current.json")), name
+    assert not os.path.exists(os.path.join(out, ".pipeline.lock"))
+
+    monkeypatch.undo()
+    res = run_pipeline(spark, out, n_pages=60, seed=3, facts_asof="2024-01-02")
+    assert set(res.stages_run) == failing
+    assert {"kg_facts", "kg_conflicts", "kg_fact_history"} <= set(res.stages_skipped)

@@ -117,6 +117,117 @@ def test_live_holder_not_stolen(tmp_path):
     lock.release("holder")
 
 
+def test_lock_wait_zero_refuses_at_once(tmp_path):
+    import time as _time
+
+    import pytest
+
+    from darkbo_spark.storage.stages import locked
+
+    lock = BuildLock(str(tmp_path), "w0")
+    assert lock.acquire("holder")
+    t0 = _time.monotonic()
+    with pytest.raises(RuntimeError, match="w0 lock busy.*holder"):
+        with locked(str(tmp_path), "w0", wait_s=0):
+            pass
+    assert _time.monotonic() - t0 < 0.2  # one try, no poll
+    assert lock.owner() == "holder"
+    lock.release("holder")
+
+
+def test_lock_wait_acquires_after_mid_wait_release(tmp_path):
+    import threading
+    import time as _time
+
+    from darkbo_spark.storage.stages import locked
+
+    lock = BuildLock(str(tmp_path), "w1")
+    assert lock.acquire("holder")
+    releaser = threading.Timer(0.6, lock.release, args=("holder",))
+    releaser.start()
+    t0 = _time.monotonic()
+    with locked(str(tmp_path), "w1", wait_s=10):
+        waited = _time.monotonic() - t0
+        assert lock.owner() not in (None, "holder")
+    releaser.join()
+    assert 0.5 < waited < 5.0
+    assert lock.owner() is None  # released on exit
+
+
+def test_lock_wait_timeout_names_holder(tmp_path):
+    import time as _time
+
+    import pytest
+
+    from darkbo_spark.storage.stages import locked
+
+    lock = BuildLock(str(tmp_path), "w2")
+    assert lock.acquire("slow-holder")
+    t0 = _time.monotonic()
+    with pytest.raises(RuntimeError, match="held by slow-holder"):
+        with locked(str(tmp_path), "w2", wait_s=0.6):
+            pass
+    assert _time.monotonic() - t0 >= 0.6
+    lock.release("slow-holder")
+
+
+def test_lock_wait_takes_over_dead_holder(tmp_path):
+    """A same-host holder whose pid is gone is taken over inside the
+    wait, long before its fresh mtime would go stale."""
+    import json as _json
+    import socket
+    import subprocess
+    import sys
+    import time as _time
+
+    from darkbo_spark.storage.stages import locked
+
+    dead_pid = int(subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True,
+    ).stdout)
+    lock = BuildLock(str(tmp_path), "w3")
+    with open(lock.path, "w") as f:
+        _json.dump({"owner": "crashed", "ts": _time.time(), "pid": dead_pid,
+                    "host": socket.gethostname()}, f)
+    with locked(str(tmp_path), "w3", wait_s=5):
+        assert lock.owner() not in (None, "crashed")
+    assert not os.path.exists(lock.path)
+
+
+def test_stage_run_records_every_concurrent_stage(spark, tmp_path):
+    """run.stage() is called from several threads at once (the KG
+    pipeline's dictionary thread and fusion pool): no stage's bookkeeping
+    or metrics rows may be lost."""
+    import sys
+    from collections import Counter
+    from concurrent.futures import ThreadPoolExecutor
+
+    from darkbo_spark.storage.stages import stage_run
+
+    want = {f"s{i}": i + 1 for i in range(12)}  # more threads than cores
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with stage_run(spark, str(tmp_path), "stress", "t1") as run:
+            with ThreadPoolExecutor(max_workers=len(want)) as pool:
+                futures = [
+                    pool.submit(run.stage, name, "root", "p", lambda n=n: _df(spark, n))
+                    for name, n in want.items()
+                ]
+                for f in futures:
+                    f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    res = run.result
+    assert sorted(res.stages_run) == sorted(want) and not res.stages_skipped
+    assert res.rows == want and set(res.timings) == set(want)
+    metrics = Counter()
+    for r in SnapshotTable(str(tmp_path), "_metrics").read(spark).collect():
+        metrics[r.stage] += r.rows
+    assert dict(metrics) == want
+
+
 def test_stored_table_recovers_from_crashed_publisher(spark, tmp_path, monkeypatch):
     """_stored_table's wait loop recovers promptly when the lock holder is
     a dead process — no 120 s timeout path for a crashed publisher."""

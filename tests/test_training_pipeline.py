@@ -72,3 +72,39 @@ def test_param_change_invalidates_downstream_only(spark, tmp_path):
     assert res.stages_run == ["sampled", "packed"]
     n_half = res.rows["sampled"]
     assert 0 < n_half < res.tables["capped"].read(spark).count()
+
+
+def test_run_waits_for_a_live_holder(spark, tmp_path):
+    """A second training run queues behind the `.training_pipeline.lock`
+    holder instead of failing, and runs once it is released."""
+    import threading
+
+    from darkbo_spark.storage.snapshots import BuildLock
+
+    out = str(tmp_path / "tp")
+    os.makedirs(out)
+    lock = BuildLock(out, "training_pipeline")
+    assert lock.acquire("other-run")
+    releaser = threading.Timer(1.0, lock.release, args=("other-run",))
+    releaser.start()
+    res = run_training_pipeline(spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1")
+    releaser.join()
+    assert len(res.stages_run) == 5
+    assert lock.owner() is None
+
+
+def test_retention_covers_metrics_and_every_stage(spark, tmp_path):
+    """Four publishing runs (a new sample fraction each) leave at most 3
+    committed versions of `sampled` and of `_metrics`."""
+    from darkbo_spark.storage.snapshots import SnapshotTable
+
+    out = str(tmp_path / "tp")
+    for frac in (0.5, 0.6, 0.7, 0.8):
+        res = run_training_pipeline(
+            spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1",
+            sample_fraction=frac,
+        )
+        assert "sampled" in res.stages_run
+    assert res.rows["sampled"] == res.tables["sampled"].read(spark).count()
+    for name in ("sampled", "packed", "_metrics"):
+        assert len(SnapshotTable(out, name).versions()) <= 3, name
