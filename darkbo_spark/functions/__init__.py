@@ -1,8 +1,6 @@
 from darkbo_spark.functions.textnorm import (  # noqa: F401
     clean_text_udf,
-    split_sentences_udf,
     create_chunks_udf,
-    extract_triples_udf,
     html_to_text_udf,
 )
 from darkbo_spark.functions.ids import uuid5_col, sha256_id_col  # noqa: F401

@@ -2,10 +2,11 @@
 
 These are the ONLY places Python touches row data in the hot path, and
 every one is a batched `pandas_udf` (Arrow transfer, no per-row Python
-round trips through Py4J). Byte-identical text extraction per url is the
-north-rule invariant — the same `re`-based functions from
-``darkbo_spark.reference_impl`` run here and in the pytest oracle, so
-parity is exact by construction (reference behavior:
+round trips through Py4J). Sentence segmentation and triple extraction
+cross once per document, in `doc_triples_udf`. Byte-identical text
+extraction per url is the north-rule invariant — the same `re`-based
+functions from ``darkbo_spark.reference_impl`` run here and in the pytest
+oracle, so parity is exact by construction (reference behavior:
 api/document_processor.py:130-197).
 """
 
@@ -52,41 +53,14 @@ def clean_text_udf(s: pd.Series) -> pd.Series:
 
 
 @pandas_udf(ArrayType(StringType()))
-def split_sentences_udf(s: pd.Series) -> pd.Series:
-    return s.map(lambda t: ref.split_sentences(t) if t is not None else [])
-
-
-@pandas_udf(ArrayType(StringType()))
 def create_chunks_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda t: ref.create_chunks(t) if t is not None else [])
 
 
-TRIPLE_STRUCT = ArrayType(
-    StructType(
-        [
-            StructField("subj", StringType()),
-            StructField("pred", StringType()),
-            StructField("obj", StringType()),
-        ]
-    )
-)
-
-
-@pandas_udf(TRIPLE_STRUCT)
-def extract_triples_udf(sentences: pd.Series) -> pd.Series:
-    def _one(sent: str | None):
-        if not sent:
-            return []
-        return [
-            {"subj": s, "pred": p, "obj": o} for s, p, o in ref.extract_triples(sent)
-        ]
-
-    return sentences.map(_one)
-
-
-# Fused S+T: one Arrow crossing per document instead of two (segment UDF +
-# per-sentence extract UDF). Same reference functions → identical output;
-# the hot-path form the pipeline uses.
+# S+T in one Arrow crossing per document: segment, then extract per
+# sentence, numbering sentences exactly as reference_impl.extract_doc_triples
+# does — the only triple-extraction UDF, shared by the pipeline, the
+# incremental and streaming paths and every KG registry twin.
 DOC_TRIPLES_STRUCT = ArrayType(
     StructType(
         [

@@ -27,7 +27,7 @@ _PY_OVERHEAD = 6
 
 
 def _driver_cc_budget_bytes(spark) -> int:
-    """The driver union-find is justified ONLY while the dictionary is
+    """The driver-side plans are justified ONLY while the dictionary is
     broadcast-sized — derive the byte budget from the session's own
     broadcast threshold (default 10 MB) instead of a row count: 2M rows of
     short aliases and 50k rows of fat ones are different animals."""
@@ -43,11 +43,36 @@ def _driver_cc_budget_bytes(spark) -> int:
     return budget if budget > 0 else 10 << 20  # -1 = broadcast disabled
 
 
+def _alias_pairs(entity_dict: DataFrame) -> DataFrame:
+    """The distinct (eid, alias_norm) pairs the union-find collects."""
+    return entity_dict.select(
+        "eid", _norm(F.col("alias")).alias("alias_norm")
+    ).distinct()
+
+
+def dictionary_fits_driver(entity_dict: DataFrame) -> bool:
+    """The KG build's one dictionary-size decision: True while the
+    estimated collected bytes of the distinct normalized alias pairs
+    ((eid + alias_norm chars) × _PY_OVERHEAD, one aggregate job) fit the
+    session's broadcast budget.
+
+    True picks the driver side of every choice that collects the
+    dictionary to the driver: union-find CC, build_entity_table_driver
+    and single-file fusion tables. False picks distributed CC,
+    build_entity_table and bucketed fusion tables. Both sides publish the
+    same rows (asserted in tests). The link is not on this list: a JVM
+    broadcast carries no Python-object overhead, so the pipeline always
+    links broadcast."""
+    chars = _alias_pairs(entity_dict).agg(
+        F.coalesce(
+            F.sum(F.length("eid") + F.length("alias_norm")), F.lit(0)
+        ).alias("c")
+    ).collect()[0].c
+    return chars * _PY_OVERHEAD <= _driver_cc_budget_bytes(entity_dict.sparkSession)
+
+
 def canonicalize_entities(
-    entity_dict: DataFrame,
-    max_iter: int = 25,
-    mode: str = "auto",
-    max_driver_bytes: int | None = None,
+    entity_dict: DataFrame, max_iter: int = 25, mode: str = "auto"
 ) -> DataFrame:
     """→ (eid, canon_eid): mapping from dictionary eid to merged component
     representative eid (min eid in the alias-connected cluster).
@@ -59,29 +84,13 @@ def canonicalize_entities(
       canonical dictionary is by definition broadcast-bounded (it is the
       broadcast side of the link join), so when it fits, a driver-side
       union-find is strictly better than ~6 shuffle rounds over tiny data.
-    * "auto"        — driver iff the ESTIMATED COLLECTED BYTES (string
-      chars × python-object overhead, measured by one tiny aggregate over
-      the pairs) fit `max_driver_bytes`, defaulting to the session's
-      autoBroadcastJoinThreshold — a byte bound, not a row count, so a
-      fat-alias dictionary can't cliff the driver heap.
+    * "auto"        — "driver" iff dictionary_fits_driver(entity_dict).
 
     Both paths produce the identical mapping (asserted in tests).
     """
-    pairs = entity_dict.select(
-        "eid", _norm(F.col("alias")).alias("alias_norm")
-    ).distinct()
     if mode == "auto":
-        budget = (
-            max_driver_bytes
-            if max_driver_bytes is not None
-            else _driver_cc_budget_bytes(entity_dict.sparkSession)
-        )
-        stats = pairs.agg(
-            F.coalesce(
-                F.sum(F.length("eid") + F.length("alias_norm")), F.lit(0)
-            ).alias("chars")
-        ).collect()[0]
-        mode = "driver" if stats.chars * _PY_OVERHEAD <= budget else "distributed"
+        mode = "driver" if dictionary_fits_driver(entity_dict) else "distributed"
+    pairs = _alias_pairs(entity_dict)
     if mode == "driver":
         return _driver_cc(pairs)
     edges = pairs.select(

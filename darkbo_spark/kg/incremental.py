@@ -1,8 +1,8 @@
 """Incremental KG maintenance — the delta path that makes the pipeline
 viable at crawl cadence: when a batch of pages is refetched, only those
-pages re-run extract→segment→extract_raw→link, and the materialized
-triple table is upserted by url (delete-and-insert), instead of
-recomputing the corpus.
+pages re-run the pipeline's extract → S+T → link chain, and the
+materialized triple table is upserted by url (delete-and-insert), instead
+of recomputing the corpus.
 
 This is the KG sibling of the sparse index's build_tf_index/merge_tf_delta
 (operators/tfidf.py): cost scales with the DELTA, not the corpus. Triples
@@ -27,17 +27,15 @@ from pyspark.sql import functions as F
 def extract_and_link(
     pages: DataFrame, dictionary: DataFrame, strategy: str = "broadcast"
 ) -> DataFrame:
-    """The standard E→S→T→L chain over a pages frame, projected to the
+    """The pipeline's E→(S+T)→L chain over a pages frame, projected to the
     canonical linked-triple columns (url, sent_idx, subj, pred, obj,
     subj_eid, obj_eid)."""
     from darkbo_spark.kg.extract import extract_docs
     from darkbo_spark.kg.link import link_entities
-    from darkbo_spark.kg.triples import extract_raw_triples, segment_sentences
+    from darkbo_spark.kg.triples import extract_doc_triples_df
 
     linked = link_entities(
-        extract_raw_triples(segment_sentences(extract_docs(pages))),
-        dictionary,
-        strategy=strategy,
+        extract_doc_triples_df(extract_docs(pages)), dictionary, strategy=strategy
     )
     return linked.select(
         "url",

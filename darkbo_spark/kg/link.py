@@ -3,7 +3,7 @@
 raw_triples(url, sent_idx, subj, pred, obj, triple_id)
   → linked(…, subj_eid, obj_eid)
 
-Two strategies, selected by `strategy`:
+Two strategies, selected by `strategy` (run_pipeline links broadcast):
 
 * "broadcast" (default): the dictionary is bounded (canonical entity list),
   so both lookups are BROADCAST hash joins — zero shuffle of the (huge)
@@ -15,6 +15,8 @@ Two strategies, selected by `strategy`:
   gets a deterministic salt `pmod(xxhash64(triple_id), S)`; the dictionary
   side is exploded ×S; the join key becomes (alias_norm, salt) — spreading
   each head key over S reducers. AQE skew-join remains on as a backstop.
+  Measured against a plain shuffle join: BENCH/BASELINE.md, "Salted link
+  vs plain shuffle join".
 
 Surface normalization for matching: lowercase, trim, strip a leading
 "the " (the dictionary side is normalized identically at build time).
@@ -54,12 +56,6 @@ def _link_side(
     key = _norm(F.col(surface_col))
     if strategy == "broadcast":
         d = F.broadcast(dict_norm.withColumnRenamed("eid", out_col))
-        return triples.join(d, key == d["alias_norm"], "left").drop("alias_norm")
-    if strategy == "shuffle":
-        # plain (unsalted) shuffle join — the baseline the salted strategy is
-        # benchmarked against (scripts/bench_link_skew.py); a Zipf head alias
-        # lands on ONE reducer here
-        d = dict_norm.withColumnRenamed("eid", out_col)
         return triples.join(d, key == d["alias_norm"], "left").drop("alias_norm")
     if strategy == "salted":
         salted_big = triples.withColumn(

@@ -7,9 +7,11 @@ page text is constructed by ONE dialect-neutral SQL expression (CASE
 picks + `||` + chr — parses identically under Spark `F.expr` and DuckDB)
 over the registered `documents.doc_id` column, so
 
-* the Spark side feeds that text through the REAL pipeline — the Arrow
-  clean_text UDF, the sentence segmenter, the rule-pattern extractor and
-  the broadcast link join (`kg.extract` / `kg.triples` / `kg.link`), and
+* the Spark side feeds that text through the chain `run_pipeline` runs —
+  the Arrow clean_text UDF, the one S+T UDF (segmenter + rule-pattern
+  extractor per document) and the link join (`kg.extract` /
+  `kg.triples.extract_doc_triples_df` / `kg.link`, composed by
+  `kg.incremental.extract_and_link`), and
 * the DuckDB oracle independently replays clean → segment → extract →
   link in pure SQL (regexp_replace chain, marker split, named-group
   regexp_extract, normalized-alias left joins),
@@ -251,8 +253,8 @@ def _sha_expr() -> str:
 
 
 def est_oracle_sql(id_limit: int = 240) -> str:
-    """DuckDB replay of extract_docs → segment_sentences →
-    extract_raw_triples over the twin corpus."""
+    """DuckDB replay of extract_docs → extract_doc_triples_df over the twin
+    corpus (segment, then extract per sentence)."""
     return f"""{_sents_cte(id_limit)}
 SELECT url, sent_idx, subj, pred, obj, {_sha_expr()} AS triple_sha
 FROM triples

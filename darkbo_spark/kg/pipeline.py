@@ -1,7 +1,7 @@
 """End-to-end KG construction pipeline with per-stage checkpoint-resume.
 
-    pages ─E→ docs ─S→ sentences ─T→ raw_triples ─L→ linked ─C/M→ kg_triples
-                                                            └───→ kg_entities
+    pages ─E→ docs ─S+T→ raw_triples ─L→ linked ─C/M→ kg_triples
+                                                └───→ kg_entities
 
 Every stage runs through storage/stages.stage_run: its output is a
 SnapshotTable version whose fingerprint is
@@ -15,23 +15,33 @@ retention to every table the run touched.
 
 Stage boundaries are REAL materialization points on purpose: at 100 TB you
 do not want a single 6-stage lineage — a lost executor would recompute the
-world, and the UDF stages (E/S/T) should run exactly once. The narrow
-stages E→S→T are fused into ONE pass (no intermediate write) because they
-are per-row maps with no shuffle between them; only their fused output
-(raw_triples) is persisted. L/C/M read persisted triples.
+world, and the UDF stages (E/S/T) should run exactly once. S and T are one
+UDF pass over the persisted docs (kg/triples.extract_doc_triples_df, the
+same chain kg/incremental.extract_and_link runs); there is no sentences
+table. L/C/M read persisted triples.
+
+One dictionary-size decision per run (kg/canonicalize
+.dictionary_fits_driver, made lazily by the first stage that builds)
+picks every plan that collects the dictionary to the driver: union-find
+vs distributed CC, driver vs distributed entity table, single-file vs
+bucketed fusion tables. Rows and fingerprints do not depend on it. The
+link always broadcasts the dictionary.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from darkbo_spark.kg.canonicalize import (
+    build_entity_table,
     build_entity_table_driver,
     canonicalize_entities,
+    dictionary_fits_driver,
 )
 from darkbo_spark.kg.extract import extract_docs
 from darkbo_spark.kg.link import link_entities
@@ -56,14 +66,11 @@ def run_pipeline(
     pages: DataFrame | None = None,
     n_pages: int = 1000,
     seed: int = 42,
-    link_strategy: str = "broadcast",
     n_buckets: int = 32,
     write_salt: int = 8,
     input_fingerprint: str | None = None,
-    cc_mode: str = "auto",
     fuzzy_fallback: str | None = None,
     facts_asof: str | None = None,
-    fusion_mode: str = "auto",
     mine_nil: bool = False,
     nil_min_mentions: int = 2,
     dictionary: DataFrame | None = None,
@@ -137,34 +144,45 @@ def run_pipeline(
         # republishes eid_map/kg_entities/kg_triples while an unchanged one
         # skips
         dict_parent = fingerprint(input_fingerprint, "dict", dictionary_fingerprint)
+        # the run's one dictionary-size decision: driver-side plans while
+        # the dictionary's estimated collected bytes fit the broadcast
+        # budget, distributed ones beyond it. Made at most once, by the
+        # first stage that builds (the lock keeps concurrent fusion builders
+        # from racing it), so a rerun where every stage skips runs no
+        # estimate job. Both sides publish the same rows, so the params
+        # strings (content identity) leave the choice out.
+        _fits: list[bool] = []
+        _fits_lock = threading.Lock()
+
+        def fits_driver() -> bool:
+            with _fits_lock:
+                if not _fits:
+                    _fits.append(dictionary_fits_driver(entity_dict))
+                return _fits[0]
+
         _dict_result: dict = {}
 
         def _dict_stages():
             try:
-                # mode="auto": driver union-find while the dictionary's
-                # estimated collected bytes fit the broadcast threshold
-                # (identical output to the distributed star-contraction CC
-                # — asserted in tests), iterative DataFrame CC beyond it;
-                # tests force cc_mode="distributed" through the full
-                # pipeline as well
                 eidmap_tbl, fp_m = stage(
-                    "eid_map", dict_parent, f"cc_v2_{cc_mode}",
+                    "eid_map", dict_parent, "cc_v2_auto",
                     lambda: canonicalize_entities(
-                        entity_dict, mode=cc_mode
+                        entity_dict,
+                        mode="driver" if fits_driver() else "distributed",
                     ).coalesce(1),
                 )
                 stage(
                     "kg_entities", fp_m, "entities_v1",
-                    lambda: build_entity_table_driver(
-                        entity_dict, eidmap_tbl.read(spark)
-                    ).coalesce(1),
+                    lambda: (
+                        build_entity_table_driver
+                        if fits_driver()
+                        else build_entity_table
+                    )(entity_dict, eidmap_tbl.read(spark)).coalesce(1),
                 )
                 _dict_result["eidmap_tbl"] = eidmap_tbl
                 _dict_result["fp_m"] = fp_m
             except BaseException as e:  # surfaced at join()
                 _dict_result["error"] = e
-
-        import threading
 
         dict_thread = threading.Thread(target=_dict_stages, name="dict-stages")
         dict_thread.start()
@@ -203,9 +221,7 @@ def run_pipeline(
             resolved_dict = entity_dict.join(eid_map, "eid").select(
                 "alias", F.col("canon_eid").alias("eid")
             )
-            linked = link_entities(
-                triples_tbl.read(spark), resolved_dict, strategy=link_strategy
-            )
+            linked = link_entities(triples_tbl.read(spark), resolved_dict)
             if fuzzy_fallback:
                 from darkbo_spark.kg.link import apply_fuzzy_fallback
 
@@ -217,7 +233,7 @@ def run_pipeline(
         kg_tbl, fp_k = stage(
             "kg_triples",
             fp_t + fp_m,
-            f"linkc_{link_strategy}_buckets_{n_buckets}_salt_{write_salt}"
+            f"linkc_broadcast_buckets_{n_buckets}_salt_{write_salt}"
             f"_fb_{fuzzy_fallback or 'none'}",
             build_kg,
         )
@@ -243,15 +259,14 @@ def run_pipeline(
         # product). Write shape: the fusion tables are entity-bounded, but
         # the entity universe GROWS (nil_candidates exists to grow the
         # dictionary; a real KG's is 10^8–10^9), so `coalesce(1)` is only
-        # safe while the dictionary is provably small. `fusion_mode` mirrors
-        # cc_mode's auto switch: "driver" (single file) while the
-        # dictionary's estimated collected bytes fit the broadcast
-        # threshold, else "distributed" — the kg_triples convention,
-        # bucketed on pmod(xxhash64(entity key), N) so no single task
-        # funnels the fact state and per-entity reads prune to one bucket.
-        # Every row carries `fact_bucket` in BOTH shapes (schema and content
-        # are mode-invariant; only physical layout changes, so the
-        # fingerprint — content identity — excludes the mode).
+        # safe while the dictionary is provably small: single file while
+        # the run's dictionary decision says driver-sized, else the
+        # kg_triples convention, bucketed on pmod(xxhash64(entity key), N)
+        # so no single task funnels the fact state and per-entity reads
+        # prune to one bucket. Every row carries `fact_bucket` in BOTH
+        # shapes (schema and content are shape-invariant; only physical
+        # layout changes, so the fingerprint — content identity — excludes
+        # the shape).
         if facts_asof:
             from darkbo_spark.kg.temporal import (
                 detect_conflicts,
@@ -261,31 +276,12 @@ def run_pipeline(
                 resolve_facts,
             )
 
-            shape = fusion_mode
-            if shape == "auto":
-                from darkbo_spark.kg.canonicalize import (
-                    _PY_OVERHEAD,
-                    _driver_cc_budget_bytes,
-                )
-
-                chars = entity_dict.agg(
-                    F.coalesce(
-                        F.sum(F.length("eid") + F.length("alias")), F.lit(0)
-                    ).alias("c")
-                ).collect()[0].c
-                shape = (
-                    "driver"
-                    if chars * _PY_OVERHEAD <= _driver_cc_budget_bytes(spark)
-                    else "distributed"
-                )
-            assert shape in ("driver", "distributed"), f"bad fusion_mode {shape}"
-
             def _fusion_shape(df: DataFrame, key_col: str) -> DataFrame:
                 out = df.withColumn(
                     "fact_bucket",
                     F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int"),
                 )
-                if shape == "driver":
+                if fits_driver():
                     return out.coalesce(1)
                 return out.repartition(n_buckets, F.col("fact_bucket"))
 

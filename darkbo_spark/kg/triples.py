@@ -1,15 +1,18 @@
 """Stages S + T — sentence segmentation and rule-based triple extraction.
 
 docs(url, warc_ts, lang, text)
-  → sentences(url, sent_idx, sentence)                 [stage S]
-  → raw_triples(url, sent_idx, subj, pred, obj,
-                triple_id)                             [stage T]
+  → raw_triples(url, sent_idx, subj, pred, obj, triple_id)
 
-Both stages are narrow maps (UDF → posexplode); no shuffle. The triple id
-is the deterministic uuid5 of (url, sent_idx, subj, pred, obj), computed
-NATIVELY on the JVM (functions/ids.py) so the id path never enters Python.
+English documents only. One vectorized UDF per document segments and
+extracts in a single Arrow batch (functions/textnorm.doc_triples_udf),
+then one explode; no shuffle. `sent_idx` is the sentence's position in
+the document. The triple id is the deterministic uuid5 of (url, sent_idx,
+subj, pred, obj), computed NATIVELY on the JVM (functions/ids.py) so the
+id path never enters Python.
 
-The extractor UDF shares `reference_impl.extract_triples` with the pytest
+This is the only S+T chain: run_pipeline, the incremental and streaming
+paths and every KG registry twin run it. The UDF shares
+`reference_impl.split_sentences` / `extract_triples` with the pytest
 oracle, making the P/R-vs-golden comparison exact by construction
 (BASELINE.json: P/R ≥ 0.95; engineered to 1.0).
 """
@@ -20,34 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from darkbo_spark.functions.ids import uuid5_col
-from darkbo_spark.functions.textnorm import (
-    doc_triples_udf,
-    extract_triples_udf,
-    split_sentences_udf,
-)
+from darkbo_spark.functions.textnorm import doc_triples_udf
 
 
-def _with_triple_id(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "triple_id",
-        uuid5_col(
-            "triple",
-            "url",
-            F.col("sent_idx").cast("string"),
-            "subj",
-            "pred",
-            "obj",
-        ),
-    )
-
-
-def extract_doc_triples_df(docs: DataFrame, english_only: bool = True) -> DataFrame:
-    """Fused S+T hot path: ONE vectorized UDF per document (segment +
-    extract in a single Arrow batch), then a single explode. Output is
-    identical to segment_sentences → extract_raw_triples (same reference
-    functions); this form halves the Python boundary crossings."""
-    src = docs.filter(F.col("lang") == "en") if english_only else docs
-    exploded = src.select(
+def extract_doc_triples_df(docs: DataFrame) -> DataFrame:
+    """docs → raw_triples over the English documents."""
+    exploded = docs.filter(F.col("lang") == "en").select(
         "url", F.explode(doc_triples_udf(F.col("text"))).alias("t")
     ).select(
         "url",
@@ -56,33 +37,9 @@ def extract_doc_triples_df(docs: DataFrame, english_only: bool = True) -> DataFr
         F.col("t.pred").alias("pred"),
         F.col("t.obj").alias("obj"),
     )
-    return _with_triple_id(exploded)
-
-
-def segment_sentences(docs: DataFrame, english_only: bool = True) -> DataFrame:
-    """Stage S: one row per sentence with its position. posexplode keeps the
-    deterministic in-document ordering as an explicit column."""
-    src = docs.filter(F.col("lang") == "en") if english_only else docs
-    return src.select(
-        "url",
-        F.posexplode(split_sentences_udf(F.col("text"))).alias("sent_idx", "sentence"),
-    )
-
-
-def extract_raw_triples(sentences: DataFrame) -> DataFrame:
-    """Stage T: rule-pattern OpenIE over each sentence; zero-or-more triples
-    per sentence via explode of the UDF's array<struct> result."""
-    exploded = sentences.select(
-        "url",
-        "sent_idx",
-        F.explode(extract_triples_udf(F.col("sentence"))).alias("t"),
-    )
-    return _with_triple_id(
-        exploded.select(
-            "url",
-            "sent_idx",
-            F.col("t.subj").alias("subj"),
-            F.col("t.pred").alias("pred"),
-            F.col("t.obj").alias("obj"),
-        )
+    return exploded.withColumn(
+        "triple_id",
+        uuid5_col(
+            "triple", "url", F.col("sent_idx").cast("string"), "subj", "pred", "obj"
+        ),
     )

@@ -68,25 +68,34 @@ def _table_bytes(path: str) -> int:
 # driver, and a bench/oracle session references the same dozen tables a
 # few hundred times across the corpus — pure driver-side fixed cost the
 # executors never see. The memo stores the lazy DataFrame HANDLE (a plan,
-# no data): results are never cached, every materialization still reads
-# the parquet, and the memo dies with the process. Keyed weakly on the
-# SparkSession so test suites that stop/recreate sessions can't resurrect
-# a plan bound to a dead JVM.
-import weakref
-
-_PLAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
+# no data) and dies with the process. It lives ON the session object: its
+# values are DataFrames that reference their session, so a memo keyed on
+# the session (even weakly) would keep every session alive; an attribute
+# is collected with the session, and a stopped-and-recreated session
+# starts empty. A few entries (the KG twin chains, the near-dup clusters
+# frame) are persisted; clear_session_memo releases them.
+_MEMO_ATTR = "_darkbo_plan_memo"
 
 
 def session_plan_memo(spark: SparkSession) -> dict:
     """Per-session dict for memoizing deterministic lazy plans (shared by
     _t and the kg twin dictionary builders)."""
-    memo = _PLAN_MEMO.get(spark)
+    memo = getattr(spark, _MEMO_ATTR, None)
     if memo is None:
         memo = {}
-        _PLAN_MEMO[spark] = memo
+        setattr(spark, _MEMO_ATTR, memo)
     return memo
+
+
+def clear_session_memo(spark: SparkSession) -> None:
+    """Empty the session's plan memo and unpersist the persisted entries
+    (the memoized KG twin chains), so a long-lived session gives their
+    cached blocks back."""
+    memo = session_plan_memo(spark)
+    for df in memo.values():
+        if df.is_cached:
+            df.unpersist()
+    memo.clear()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = True) -> DataFrame:

@@ -133,10 +133,10 @@ def fuzzy_link_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg_raw_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from darkbo_spark.kg.extract import extract_docs
     from darkbo_spark.kg.pages import synth_pages
-    from darkbo_spark.kg.triples import extract_raw_triples, segment_sentences
+    from darkbo_spark.kg.triples import extract_doc_triples_df
 
     pages = synth_pages(spark, 200, seed=42)
-    return extract_raw_triples(segment_sentences(extract_docs(pages)))
+    return extract_doc_triples_df(extract_docs(pages))
 
 
 @_q("kg_linked_entities")
@@ -144,10 +144,10 @@ def kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from darkbo_spark.kg.extract import extract_docs
     from darkbo_spark.kg.link import link_entities
     from darkbo_spark.kg.pages import entity_dictionary_df, synth_pages
-    from darkbo_spark.kg.triples import extract_raw_triples, segment_sentences
+    from darkbo_spark.kg.triples import extract_doc_triples_df
 
     pages = synth_pages(spark, 200, seed=42)
-    raw = extract_raw_triples(segment_sentences(extract_docs(pages)))
+    raw = extract_doc_triples_df(extract_docs(pages))
     return link_entities(raw, entity_dictionary_df(spark)).select(
         "triple_id", "subj", "pred", "obj", "subj_eid", "obj_eid"
     )
@@ -156,9 +156,9 @@ def kg_linked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Driver-oracled KG twins (kg/oracle_twin.py): the page text is built by a
 # dialect-neutral SQL expression over documents.doc_id, the SPARK side runs
-# the REAL pipeline (Arrow clean_text UDF → segmenter → rule extractor →
-# broadcast link), and the DuckDB oracle independently replays clean →
-# segment → extract → link in pure SQL. The hash gate proves the pipeline's
+# the chain run_pipeline runs (Arrow clean_text UDF → the one S+T UDF →
+# link), and the DuckDB oracle independently replays clean → segment →
+# extract → link in pure SQL. The hash gate proves the pipeline's
 # SEMANTICS end to end — not just row counts.
 # ---------------------------------------------------------------------------
 
@@ -172,15 +172,14 @@ from darkbo_spark.kg.oracle_twin import (  # noqa: E402
 def _twin_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from darkbo_spark.kg.extract import extract_docs
     from darkbo_spark.kg.oracle_twin import twin_pages
-    from darkbo_spark.kg.triples import extract_raw_triples, segment_sentences
+    from darkbo_spark.kg.triples import extract_doc_triples_df
 
+    # NOT persisted: kg_triples_x is its only consumer; the linked twin
+    # chain below runs the same plan inside extract_and_link and persists
+    # its own output. Persisting here too was measured to merely move ~1 s
+    # of cache-fill cost onto kg_triples_x for no family-net gain.
     pages = twin_pages(_t(spark, sf_dir, "documents"))
-    # NOT persisted: the raw E→S→T chain has exactly two consumers —
-    # kg_triples_x (one reference) and the _kg_linked_twin chain, which
-    # persists ITS output and so runs this once during its own fill.
-    # Persisting here too was measured to merely move ~1 s of cache-fill
-    # cost onto kg_triples_x (the first toucher) for no family-net gain.
-    return extract_raw_triples(segment_sentences(extract_docs(pages)))
+    return extract_doc_triples_df(extract_docs(pages))
 
 
 @_q("kg_triples_x", est_oracle_sql(240))
@@ -220,11 +219,11 @@ def kg_canonicalize_driver_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kg_linked_twin(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
-    from darkbo_spark.kg.link import link_entities
-    from darkbo_spark.kg.oracle_twin import twin_entity_dict
-    from darkbo_spark.queries.common import session_plan_memo
-
     from pyspark import StorageLevel
+
+    from darkbo_spark.kg.incremental import extract_and_link
+    from darkbo_spark.kg.oracle_twin import twin_entity_dict, twin_pages
+    from darkbo_spark.queries.common import session_plan_memo
 
     # plan-handle memo: ~10 queries build this identical chain; the
     # CacheManager already dedups the DATA by canonical plan, but each
@@ -233,24 +232,16 @@ def _kg_linked_twin(spark: SparkSession, sf_dir: str, strategy: str) -> DataFram
     memo = session_plan_memo(spark)
     key = ("kg_linked_twin", sf_dir, strategy)
     cached = memo.get(key)
-    if cached is not None:
-        return cached
-    linked = link_entities(
-        _twin_raw(spark, sf_dir), twin_entity_dict(spark), strategy=strategy
-    )
-    # persisted like _twin_raw: consumers (cooccurrence, degrees,
-    # pagerank, two-hop, incremental) reference this from 2+ branches
-    out = linked.select(
-        "url",
-        F.col("sent_idx").cast("bigint").alias("sent_idx"),
-        "subj",
-        "pred",
-        "obj",
-        "subj_eid",
-        "obj_eid",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    memo[key] = out
-    return out
+    if cached is None:
+        # persisted: consumers (cooccurrence, degrees, pagerank, two-hop)
+        # reference this from 2+ branches
+        cached = extract_and_link(
+            twin_pages(_t(spark, sf_dir, "documents")),
+            twin_entity_dict(spark),
+            strategy=strategy,
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        memo[key] = cached
+    return cached
 
 
 @_q("kg_linked_x", linked_oracle_sql(240))

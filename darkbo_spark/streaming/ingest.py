@@ -149,14 +149,13 @@ def stream_pages_to_linked_triples(
     output_path: str,
     checkpoint_path: str,
     entity_dict: DataFrame,
-    link_strategy: str = "broadcast",
     max_files_per_trigger: int = 4,
 ):
     """Streaming twin of the FULL KG pipeline's per-page path: each
-    micro-batch of landed pages runs extract → segment → triples → entity
-    LINK (same batch transforms, same broadcast/salted strategies) and
-    writes linked triples. The dictionary is batch-side (slowly-changing
-    dimension joined per micro-batch — the standard stream-static join);
+    micro-batch of landed pages runs extract → S+T → broadcast entity LINK
+    (the batch transforms) and writes linked triples. The dictionary is
+    batch-side (slowly-changing dimension joined per micro-batch — the
+    standard stream-static join);
     canonicalization stays a batch concern because alias clusters are
     corpus-global. foreachBatch is at-least-once, so the sink is made
     idempotent per batch (dynamic partition overwrite keyed by batch_id):
@@ -176,9 +175,7 @@ def stream_pages_to_linked_triples(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         linked = link_entities(
-            extract_doc_triples_df(extract_docs(batch_df)),
-            entity_dict,
-            strategy=link_strategy,
+            extract_doc_triples_df(extract_docs(batch_df)), entity_dict
         )
         (
             linked.withColumn("batch_id", F.lit(batch_id))
@@ -363,7 +360,14 @@ def _session_fn(gap_seconds: int):
 def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Custom stateful streaming operator: gap-based sessions per user via
     applyInPandasWithState (per-user state = open session; a session closes
-    when a later event exceeds the gap, or on processing-time timeout)."""
+    when a later event exceeds the gap, or on processing-time timeout).
+
+    Bounded runs (`trigger(availableNow=True)`) must start the query with
+    `spark.sql.streaming.noDataMicroBatches.enabled=false`: while any state
+    carries a processing-time timeout, Spark keeps scheduling no-data
+    micro-batches to fire it, so the query never reaches the end of its
+    input. With the conf off it stops after the data batches; open
+    sessions stay in state, unemitted."""
     return events.groupBy("user_id").applyInPandasWithState(
         _session_fn(gap_minutes * 60),
         outputStructType=_SESSION_OUT,
@@ -487,7 +491,6 @@ def stream_pages_to_kg_upsert(
     kg_path: str,
     checkpoint_path: str,
     entity_dict: DataFrame,
-    link_strategy: str = "broadcast",
     n_buckets: int = 32,
     max_files_per_trigger: int = 4,
 ):
@@ -524,7 +527,7 @@ def stream_pages_to_kg_upsert(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os
 
-        fresh = extract_and_link(batch_df, entity_dict, strategy=link_strategy)
+        fresh = extract_and_link(batch_df, entity_dict)
         fresh = fresh.withColumn("url_bucket", _bucket(F.col("url")))
         delta_urls = batch_df.select("url").distinct()
         # bounded driver materialization: at most n_buckets ints

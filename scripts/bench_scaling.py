@@ -159,7 +159,7 @@ def main() -> int:
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     # preserve marker-delimited extra benchmark sections (e.g. the salted
-    # link skew table from bench_link_skew.py) across the rewrite
+    # link skew table) across the rewrite
     baseline_path = os.path.join(REPO, "BENCH", "BASELINE.md")
     extra = ""
     if os.path.exists(baseline_path):

@@ -1,7 +1,7 @@
 """spark-submit entrypoint for the KG construction pipeline.
 
     spark-submit --py-files darkbo_spark.zip scripts/run_kg.py \
-        --pages 5000 --out /tmp/kg_out --cores 32 [--link salted]
+        --pages 5000 --out /tmp/kg_out --cores 32
 
 Prints one JSON line with stage rows, skip/run sets, wall time and
 docs/sec (the bench/scaling harness consumes this).
@@ -21,13 +21,9 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--out", default="/tmp/kg_out")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--link", default="broadcast", choices=["broadcast", "salted"])
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--facts-asof", default=None,
                     help="YYYY-MM-DD: add the temporal fusion stages")
-    ap.add_argument("--fusion-mode", default="auto",
-                    choices=["auto", "driver", "distributed"],
-                    help="fusion-table write shape (see kg/pipeline.py)")
     ap.add_argument("--mine-nil", action="store_true",
                     help="publish the kg_nil_candidates dictionary-growth stage")
     args = ap.parse_args()
@@ -57,10 +53,8 @@ def main() -> int:
         args.out,
         n_pages=args.pages,
         seed=args.seed,
-        link_strategy=args.link,
         n_buckets=args.buckets,
         facts_asof=args.facts_asof,
-        fusion_mode=args.fusion_mode,
         mine_nil=args.mine_nil,
     )
     wall = time.time() - t0
@@ -74,7 +68,6 @@ def main() -> int:
                 "stages_skipped": res.stages_skipped,
                 "rows": res.rows,
                 "timings": res.timings,
-                "link_strategy": args.link,
             }
         )
     )

@@ -1,6 +1,7 @@
 """End-to-end KG pipeline: golden triple parity (P/R vs the plain-Python
 oracle — BASELINE target ≥0.95, engineered to 1.0), byte-identical docs,
-fingerprint-gated resume, and broadcast≡salted link equivalence."""
+fingerprint-gated resume, broadcast≡salted link equivalence, and the one
+dictionary-size decision (driver vs distributed plans, same rows)."""
 
 import json
 import os
@@ -13,7 +14,7 @@ from darkbo_spark.kg.pages import entity_dictionary_df, synth_pages
 from darkbo_spark.kg.pipeline import run_pipeline
 from darkbo_spark.kg.link import link_entities
 from darkbo_spark.kg.extract import extract_docs
-from darkbo_spark.kg.triples import extract_raw_triples, segment_sentences
+from darkbo_spark.kg.triples import extract_doc_triples_df
 
 N_PAGES = 120
 SEED = 11
@@ -61,13 +62,38 @@ def test_docs_byte_identical(spark, result):
         assert docs[r.url] == ref.clean_text(r.text)
 
 
+def test_extract_and_link_equals_published_kg_triples(spark, result):
+    """The delta path (kg/incremental.extract_and_link, which the registry
+    twins and crawl cycles run) over the pipeline's own pages and its
+    resolved dictionary reproduces the published kg_triples row for row."""
+    from collections import Counter
+
+    import pyspark.sql.functions as F
+
+    from darkbo_spark.kg.incremental import extract_and_link
+
+    pages = synth_pages(
+        spark, N_PAGES, seed=SEED,
+        columns=["page_id", "url", "warc_ts", "text", "lang"],
+    )
+    resolved = entity_dictionary_df(spark).join(
+        result.tables["eid_map"].read(spark), "eid"
+    ).select("alias", F.col("canon_eid").alias("eid"))
+    got = Counter(tuple(r) for r in extract_and_link(pages, resolved).collect())
+    cols = ["url", "sent_idx", "subj", "pred", "obj", "subj_eid", "obj_eid"]
+    published = result.tables["kg_triples"].read(spark).select(
+        *cols
+    ).withColumn("sent_idx", F.col("sent_idx").cast("bigint"))
+    want = Counter(tuple(r) for r in published.collect())
+    assert got == want and sum(want.values()) > 0
+
+
 def test_linking_against_generator_ground_truth(spark):
     """Every fact sentence's subject surface must link to the canonical
     entity the generator used (exact alias match; gt carries canonical)."""
     pages = synth_pages(spark, 60, seed=3, with_ground_truth=True)
     pdf = pages.select("url", "gt_triples").toPandas()
-    docs = extract_docs(pages)
-    raw = extract_raw_triples(segment_sentences(docs))
+    raw = extract_doc_triples_df(extract_docs(pages))
     linked = link_entities(raw, entity_dictionary_df(spark))
     got = {(r.url, r.subj, r.pred): r.subj_eid for r in linked.collect()}
     checked = 0
@@ -111,7 +137,7 @@ def test_canonicalize_driver_equals_distributed(spark):
 
 def test_salted_equals_broadcast(spark):
     pages = synth_pages(spark, 40, seed=5)
-    raw = extract_raw_triples(segment_sentences(extract_docs(pages)))
+    raw = extract_doc_triples_df(extract_docs(pages))
     d = entity_dictionary_df(spark)
     cols = ["triple_id", "subj_eid", "obj_eid"]
     b = {tuple(r) for r in link_entities(raw, d, "broadcast").select(cols).collect()}
@@ -171,34 +197,62 @@ def test_metrics_and_retention(spark, out_dir, result):
 
 
 def test_pipeline_distributed_cc(spark):
-    """The open-vocabulary configuration: full pipeline with the iterative
-    DataFrame CC (cc_mode='distributed') — same triples and same entity
-    merge as a driver-union-find run over the same input (self-contained
-    dirs: the shared out_dir is mutated by other tests)."""
+    """The open-vocabulary configuration: with a 1-byte broadcast budget
+    one run takes the distributed side of all three dictionary-size
+    choices (iterative DataFrame CC, build_entity_table, bucketed fusion
+    tables), still links broadcast, and publishes the same rows as a
+    default, driver-side run over the same input (self-contained dirs:
+    the shared out_dir is mutated by other tests). A rerun where every
+    stage skips makes no size decision at all."""
     import tempfile
+    from collections import Counter
+    from unittest.mock import patch
 
+    import darkbo_spark.kg.canonicalize as c
+    import darkbo_spark.kg.pipeline as kp
+
+    def run(out):
+        return run_pipeline(
+            spark, out, n_pages=40, seed=7, facts_asof="2024-01-02", mine_nil=True
+        )
+
+    def rows(res, name):
+        return Counter(repr(tuple(r)) for r in res.tables[name].read(spark).collect())
+
+    conf = "spark.sql.autoBroadcastJoinThreshold"
     with tempfile.TemporaryDirectory() as d1, tempfile.TemporaryDirectory() as d2:
-        res_drv = run_pipeline(spark, d1, n_pages=40, seed=7, cc_mode="driver")
-        res_dst = run_pipeline(spark, d2, n_pages=40, seed=7, cc_mode="distributed")
-        assert "eid_map" in res_dst.stages_run
-        a = {
-            (r.eid, r.canon_eid)
-            for r in res_dst.tables["eid_map"].read(spark).collect()
-        }
-        b = {
-            (r.eid, r.canon_eid)
-            for r in res_drv.tables["eid_map"].read(spark).collect()
-        }
-        assert a == b and len(a) > 0
-        ta = {
-            (r.triple_id, r.subj_eid, r.obj_eid)
-            for r in res_dst.tables["kg_triples"].read(spark).collect()
-        }
-        tb = {
-            (r.triple_id, r.subj_eid, r.obj_eid)
-            for r in res_drv.tables["kg_triples"].read(spark).collect()
-        }
-        assert ta == tb and len(ta) > 0
+        with patch.object(kp, "link_entities", wraps=link_entities) as link:
+            res_drv = run(d1)
+        assert link.call_args.kwargs.get("strategy", "broadcast") == "broadcast"
+        assert len(res_drv.tables["kg_fact_history"].data_files()) == 1
+        with patch.object(kp, "dictionary_fits_driver",
+                          side_effect=AssertionError) as decide:
+            assert run(d1).stages_run == []
+        assert decide.call_count == 0
+
+        orig = spark.conf.get(conf)
+        spark.conf.set(conf, "1")
+        try:
+            with patch.object(c, "_driver_cc", side_effect=AssertionError) as cc, \
+                 patch.object(kp, "build_entity_table_driver",
+                              side_effect=AssertionError) as ent, \
+                 patch.object(kp, "build_entity_table",
+                              wraps=c.build_entity_table) as ent_dst, \
+                 patch.object(kp, "link_entities", wraps=link_entities) as link:
+                res_dst = run(d2)
+        finally:
+            spark.conf.set(conf, orig)
+        assert cc.call_count == 0 and ent.call_count == 0
+        assert ent_dst.call_count == 1
+        assert link.call_args.kwargs.get("strategy", "broadcast") == "broadcast"
+        assert len(res_dst.tables["kg_fact_history"].data_files()) > 1
+
+        assert set(res_dst.stages_run) == set(res_drv.stages_run)
+        assert set(res_dst.tables) == set(res_drv.tables)
+        for name in res_drv.tables:
+            want = rows(res_drv, name)
+            assert rows(res_dst, name) == want, name
+            assert name == "kg_nil_candidates" or want, name
 
 
 def test_pipeline_build_lock_blocks_concurrent_run(spark, out_dir, result):
@@ -251,10 +305,11 @@ def test_pipeline_fuzzy_fallback_flag(spark):
 
 
 def test_cc_auto_gate_is_byte_bounded(spark):
-    """mode='auto' routes on estimated collected BYTES, not row count: the
-    same tiny dictionary goes driver-side under a roomy budget and
-    distributed when the budget is just under its estimated footprint —
-    with identical output either way."""
+    """dictionary_fits_driver routes on estimated collected BYTES, not row
+    count: (eid + alias_norm chars over the distinct normalized pairs) ×
+    _PY_OVERHEAD against the broadcast budget, inclusive. canonicalize_entities with no mode decides through
+    it — driver union-find one byte above and at the estimate,
+    distributed one byte below — with identical output either way."""
     from unittest.mock import patch
 
     import pyspark.sql.functions as F
@@ -263,21 +318,26 @@ def test_cc_auto_gate_is_byte_bounded(spark):
     from darkbo_spark.kg.pages import entity_dictionary_df
 
     d = entity_dictionary_df(spark)
-    pairs = d.select("eid", c._norm(F.col("alias")).alias("alias_norm")).distinct()
-    chars = pairs.agg(
+    chars = c._alias_pairs(d).agg(
         F.sum(F.length("eid") + F.length("alias_norm")).alias("n")
     ).collect()[0].n
     est = chars * c._PY_OVERHEAD
 
-    with patch.object(c, "_driver_cc", wraps=c._driver_cc) as drv:
-        small = c.canonicalize_entities(d, mode="auto", max_driver_bytes=est + 1)
-        small_rows = {(r.eid, r.canon_eid) for r in small.collect()}
-        assert drv.call_count == 1  # fits → driver union-find
-
-        big = c.canonicalize_entities(d, mode="auto", max_driver_bytes=est - 1)
-        big_rows = {(r.eid, r.canon_eid) for r in big.collect()}
-        assert drv.call_count == 1  # over budget → distributed path
-    assert small_rows == big_rows and len(small_rows) > 0
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    orig = spark.conf.get(conf)
+    out = {}
+    try:
+        for budget, fits in ((est + 1, True), (est, True), (est - 1, False)):
+            spark.conf.set(conf, str(budget))
+            assert c.dictionary_fits_driver(d) is fits, budget
+            with patch.object(c, "_driver_cc", wraps=c._driver_cc) as drv:
+                out[budget] = {
+                    (r.eid, r.canon_eid) for r in c.canonicalize_entities(d).collect()
+                }
+            assert drv.call_count == int(fits), budget
+    finally:
+        spark.conf.set(conf, orig)
+    assert out[est + 1] == out[est] == out[est - 1] and out[est]
 
 
 def test_cc_budget_parses_broadcast_threshold(spark):

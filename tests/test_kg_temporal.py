@@ -302,12 +302,21 @@ def test_fusion_write_shapes_identical_content(spark, tmp_path):
     the dictionary outgrows the driver assumption."""
     from darkbo_spark.kg.pipeline import run_pipeline
 
-    res = {}
-    for mode in ("driver", "distributed"):
-        res[mode] = run_pipeline(
-            spark, str(tmp_path / mode), n_pages=200, seed=7,
-            facts_asof="2024-01-02", fusion_mode=mode,
+    def run(name):
+        return run_pipeline(
+            spark, str(tmp_path / name), n_pages=200, seed=7,
+            facts_asof="2024-01-02",
         )
+
+    # a 1-byte broadcast budget makes the dictionary too big for the driver
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    res = {"driver": run("driver")}
+    orig = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        res["distributed"] = run("distributed")
+    finally:
+        spark.conf.set(conf, orig)
     for name in ("kg_facts", "kg_conflicts", "kg_entity_types",
                  "kg_fact_history", "kg_entity_profiles"):
         a = {tuple(r) for r in res["driver"].tables[name].read(spark).collect()}

@@ -174,3 +174,24 @@ def test_enc_cte_degenerate_inputs_match_encoder(duck):
     assert len(rows) == len(cases)
     for (_, v), s in zip(rows, cases):
         assert [round(x, 6) for x in v] == enc.encode([s])[0]
+
+
+def test_clear_session_memo_unpersists_twin_chain(spark, sf_dir):
+    """The memoized, persisted KG twin chain stays cached across registry
+    queries until clear_session_memo, which unpersists it and empties the
+    session's memo."""
+    from pyspark import StorageLevel
+
+    from darkbo_spark.queries.common import (
+        QUERIES,
+        clear_session_memo,
+        session_plan_memo,
+    )
+    from darkbo_spark.queries.kg_queries import _kg_linked_twin
+
+    assert QUERIES["kg_entity_degrees_x"](spark, sf_dir).count() > 0
+    chain = _kg_linked_twin(spark, sf_dir, "broadcast")
+    assert chain.storageLevel != StorageLevel.NONE
+    clear_session_memo(spark)
+    assert chain.storageLevel == StorageLevel.NONE
+    assert session_plan_memo(spark) == {}

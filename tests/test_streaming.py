@@ -72,15 +72,26 @@ def test_sessionize_stream_matches_batch_sessions(spark, tmp_path):
         spark.readStream.schema("user_id long, event_id long, ts timestamp")
         .parquet(src)
     )
-    q = (
-        sessionize_stream(stream, gap_minutes=30)
-        .writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    # the query's session copies the conf at start(): without it the
+    # timeout state keeps scheduling no-data batches (see sessionize_stream)
+    conf = "spark.sql.streaming.noDataMicroBatches.enabled"
+    orig = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        q = (
+            sessionize_stream(stream, gap_minutes=30)
+            .writeStream.format("memory")
+            .queryName("sessions_out")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(conf, orig)
+    try:
+        assert q.awaitTermination(120) is True
+    finally:
+        q.stop()
     done = spark.sql("select * from sessions_out").collect()
     # the first (closed) session per user is emitted; the open one stays in
     # state awaiting timeout
