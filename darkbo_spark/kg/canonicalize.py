@@ -71,15 +71,14 @@ def dictionary_fits_driver(entity_dict: DataFrame) -> bool:
     return chars * _PY_OVERHEAD <= _driver_cc_budget_bytes(entity_dict.sparkSession)
 
 
-def canonicalize_entities(
-    entity_dict: DataFrame, max_iter: int = 25, mode: str = "auto"
-) -> DataFrame:
+def canonicalize_entities(entity_dict: DataFrame, mode: str = "auto") -> DataFrame:
     """→ (eid, canon_eid): mapping from dictionary eid to merged component
     representative eid (min eid in the alias-connected cluster).
 
     mode:
     * "distributed" — connected components via iterative DataFrame joins
-      (operators/components.py). The plan for open-vocabulary dictionaries.
+      (operators/components.py, its default round cap). The plan for
+      open-vocabulary dictionaries.
     * "driver"      — union-find on the collected (eid, alias) pairs. The
       canonical dictionary is by definition broadcast-bounded (it is the
       broadcast side of the link join), so when it fits, a driver-side
@@ -97,7 +96,7 @@ def canonicalize_entities(
         F.concat(F.lit("e:"), "eid").alias("src"),
         F.concat(F.lit("a:"), "alias_norm").alias("dst"),
     )
-    comps = connected_components(edges, max_iter=max_iter)
+    comps = connected_components(edges)
     e_nodes = comps.filter(F.col("node").startswith("e:")).select(
         F.expr("substring(node, 3)").alias("eid"), "comp"
     )

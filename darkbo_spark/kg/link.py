@@ -14,7 +14,8 @@ Two strategies, selected by `strategy` (run_pipeline links broadcast):
   a plain shuffle join would put one head key in one reducer. The big side
   gets a deterministic salt `pmod(xxhash64(triple_id), S)`; the dictionary
   side is exploded ×S; the join key becomes (alias_norm, salt) — spreading
-  each head key over S reducers. AQE skew-join remains on as a backstop.
+  each head key over S = SALT_BUCKETS (16) reducers, the factor the skew
+  measurement below used. AQE skew-join remains on as a backstop.
   Measured against a plain shuffle join: BENCH/BASELINE.md, "Salted link
   vs plain shuffle join".
 
@@ -28,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALT_BUCKETS = 16
+SALT_BUCKETS = 16
 
 
 def _norm(col: F.Column) -> F.Column:
@@ -51,7 +52,6 @@ def _link_side(
     surface_col: str,
     out_col: str,
     strategy: str,
-    salt_buckets: int,
 ) -> DataFrame:
     key = _norm(F.col(surface_col))
     if strategy == "broadcast":
@@ -59,11 +59,11 @@ def _link_side(
         return triples.join(d, key == d["alias_norm"], "left").drop("alias_norm")
     if strategy == "salted":
         salted_big = triples.withColumn(
-            "_salt", F.pmod(F.xxhash64("triple_id", F.lit(surface_col)), F.lit(salt_buckets))
+            "_salt", F.pmod(F.xxhash64("triple_id", F.lit(surface_col)), F.lit(SALT_BUCKETS))
         )
         salted_dict = (
             dict_norm.withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
+                "_salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1)))
             )
             .withColumn("_salt", F.col("_salt").cast("bigint"))
             .withColumnRenamed("eid", out_col)
@@ -78,17 +78,13 @@ def _link_side(
 
 
 def link_entities(
-    raw_triples: DataFrame,
-    entity_dict: DataFrame,
-    strategy: str = "broadcast",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
+    raw_triples: DataFrame, entity_dict: DataFrame, strategy: str = "broadcast"
 ) -> DataFrame:
     """Attach subj_eid / obj_eid by exact normalized-alias match. Unmatched
     surfaces keep null eids (literals: years, free-text objects)."""
     dict_norm = _prep_dict(entity_dict)
-    out = _link_side(raw_triples, dict_norm, "subj", "subj_eid", strategy, salt_buckets)
-    out = _link_side(out, dict_norm, "obj", "obj_eid", strategy, salt_buckets)
-    return out
+    out = _link_side(raw_triples, dict_norm, "subj", "subj_eid", strategy)
+    return _link_side(out, dict_norm, "obj", "obj_eid", strategy)
 
 
 def fuzzy_candidates(

@@ -276,7 +276,6 @@ def synth_pages(
     n_pages: int,
     seed: int = 42,
     with_ground_truth: bool = False,
-    num_partitions: int | None = None,
     columns: list[str] | None = None,
 ) -> DataFrame:
     """Distributed deterministic pages table. Content of row i depends only
@@ -299,11 +298,10 @@ def synth_pages(
             ]
             yield pd.DataFrame(rows, columns=cols)
 
-    if num_partitions is None:
-        # 2-4 partitions per core: enough granularity to load-balance the
-        # python generator without drowning small runs in task overhead
-        cores = spark.sparkContext.defaultParallelism
-        num_partitions = max(2 * cores, min(n_pages // 2500, 4 * cores), 8)
+    # 2-4 partitions per core: enough granularity to load-balance the
+    # python generator without drowning small runs in task overhead
+    cores = spark.sparkContext.defaultParallelism
+    num_partitions = max(2 * cores, min(n_pages // 2500, 4 * cores), 8)
     base = spark.range(0, n_pages, numPartitions=num_partitions)
     return base.mapInPandas(gen, schema=schema)
 

@@ -26,6 +26,12 @@ picks every plan that collects the dictionary to the driver: union-find
 vs distributed CC, driver vs distributed entity table, single-file vs
 bucketed fusion tables. Rows and fingerprints do not depend on it. The
 link always broadcasts the dictionary.
+
+Concurrency is one ThreadPoolExecutor: the dictionary stages (C) run as
+one future beside the page stages, the fusion stages as one future each,
+and `.result()` re-raises a stage's failure in the calling thread. The
+kg_triples write salt is kg/materialize.WRITE_SALT and NIL mining keeps
+surfaces seen at least twice; both are in the stage params.
 """
 
 from __future__ import annotations
@@ -33,6 +39,7 @@ from __future__ import annotations
 import os
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,7 +52,7 @@ from darkbo_spark.kg.canonicalize import (
 )
 from darkbo_spark.kg.extract import extract_docs
 from darkbo_spark.kg.link import link_entities
-from darkbo_spark.kg.materialize import bucketize_triples
+from darkbo_spark.kg.materialize import WRITE_SALT, bucketize_triples
 from darkbo_spark.kg.pages import entity_dictionary_df, synth_pages
 from darkbo_spark.kg.triples import extract_doc_triples_df
 from darkbo_spark.storage import make_table
@@ -67,12 +74,10 @@ def run_pipeline(
     n_pages: int = 1000,
     seed: int = 42,
     n_buckets: int = 32,
-    write_salt: int = 8,
     input_fingerprint: str | None = None,
     fuzzy_fallback: str | None = None,
     facts_asof: str | None = None,
     mine_nil: bool = False,
-    nil_min_mentions: int = 2,
     dictionary: DataFrame | None = None,
     dictionary_fingerprint: str = "builtin_v1",
 ) -> StageResult:
@@ -127,15 +132,20 @@ def run_pipeline(
         )
     assert input_fingerprint, "provide input_fingerprint for external pages input"
 
-    with stage_run(spark, out_dir, "pipeline", CODE_VERSION) as run:
+    # one pool for every concurrent stage: the dictionary future, then the
+    # five fusion stages all in flight (the dictionary future has finished
+    # before they start). On an exception the pool waits for its running
+    # stages before stage_run releases the lock.
+    with stage_run(spark, out_dir, "pipeline", CODE_VERSION) as run, \
+            ThreadPoolExecutor(max_workers=5) as pool:
         stage = run.stage
         # ---- C: canonicalize — depends ONLY on the dictionary, so it runs
-        # in a CONCURRENT job thread overlapping the page stages (Spark
+        # as a CONCURRENT future overlapping the page stages (Spark
         # schedules jobs from separate threads onto free task slots; the
         # dictionary jobs are single-task and fill the gaps between the big
         # stages' tasks). The two threads touch disjoint tables and
-        # `run.stage()` is thread-safe; any exception is re-raised at
-        # join() before anything depends on eid_map. ---------------------
+        # `run.stage()` is thread-safe; `.result()` re-raises a failure
+        # before anything depends on eid_map. ------------------------------
         entity_dict = (
             dictionary if dictionary is not None else entity_dictionary_df(spark)
         )
@@ -160,48 +170,35 @@ def run_pipeline(
                     _fits.append(dictionary_fits_driver(entity_dict))
                 return _fits[0]
 
-        _dict_result: dict = {}
-
         def _dict_stages():
-            try:
-                eidmap_tbl, fp_m = stage(
-                    "eid_map", dict_parent, "cc_v2_auto",
-                    lambda: canonicalize_entities(
-                        entity_dict,
-                        mode="driver" if fits_driver() else "distributed",
-                    ).coalesce(1),
-                )
-                stage(
-                    "kg_entities", fp_m, "entities_v1",
-                    lambda: (
-                        build_entity_table_driver
-                        if fits_driver()
-                        else build_entity_table
-                    )(entity_dict, eidmap_tbl.read(spark)).coalesce(1),
-                )
-                _dict_result["eidmap_tbl"] = eidmap_tbl
-                _dict_result["fp_m"] = fp_m
-            except BaseException as e:  # surfaced at join()
-                _dict_result["error"] = e
-
-        dict_thread = threading.Thread(target=_dict_stages, name="dict-stages")
-        dict_thread.start()
-
-        try:
-            # ---- E: extract (the expensive byte-exact UDF runs exactly ONCE)
-            docs_tbl, fp_d = stage(
-                "docs", input_fingerprint, "clean_v1", lambda: extract_docs(pages)
+            eidmap_tbl, fp_m = stage(
+                "eid_map", dict_parent, "cc_v2_auto",
+                lambda: canonicalize_entities(
+                    entity_dict,
+                    mode="driver" if fits_driver() else "distributed",
+                ).coalesce(1),
             )
-            # ---- fused S→T over persisted docs (ONE UDF pass, one explode)
-            triples_tbl, fp_t = stage(
-                "raw_triples", fp_d, "en_only",
-                lambda: extract_doc_triples_df(docs_tbl.read(spark)),
+            stage(
+                "kg_entities", fp_m, "entities_v1",
+                lambda: (
+                    build_entity_table_driver
+                    if fits_driver()
+                    else build_entity_table
+                )(entity_dict, eidmap_tbl.read(spark)).coalesce(1),
             )
-        finally:
-            dict_thread.join()
-        if "error" in _dict_result:
-            raise _dict_result["error"]
-        eidmap_tbl, fp_m = _dict_result["eidmap_tbl"], _dict_result["fp_m"]
+            return eidmap_tbl, fp_m
+
+        dict_future = pool.submit(_dict_stages)
+        # ---- E: extract (the expensive byte-exact UDF runs exactly ONCE)
+        docs_tbl, fp_d = stage(
+            "docs", input_fingerprint, "clean_v1", lambda: extract_docs(pages)
+        )
+        # ---- fused S→T over persisted docs (ONE UDF pass, one explode)
+        triples_tbl, fp_t = stage(
+            "raw_triples", fp_d, "en_only",
+            lambda: extract_doc_triples_df(docs_tbl.read(spark)),
+        )
+        eidmap_tbl, fp_m = dict_future.result()
 
         # ---- fused L+M: link → bucketize in ONE pass ----------------------
         # The link dictionary is pre-resolved to CANONICAL ids (dict ⋈
@@ -228,12 +225,12 @@ def run_pipeline(
                 linked = apply_fuzzy_fallback(
                     linked, resolved_dict, method=fuzzy_fallback
                 )
-            return bucketize_triples(linked, n_buckets=n_buckets, write_salt=write_salt)
+            return bucketize_triples(linked, n_buckets=n_buckets)
 
         kg_tbl, fp_k = stage(
             "kg_triples",
             fp_t + fp_m,
-            f"linkc_broadcast_buckets_{n_buckets}_salt_{write_salt}"
+            f"linkc_broadcast_buckets_{n_buckets}_salt_{WRITE_SALT}"
             f"_fb_{fuzzy_fallback or 'none'}",
             build_kg,
         )
@@ -247,10 +244,8 @@ def run_pipeline(
             from darkbo_spark.kg.temporal import nil_candidates
 
             stage(
-                "kg_nil_candidates", fp_k, f"nil_min{nil_min_mentions}_v1",
-                lambda: nil_candidates(
-                    kg_tbl.read(spark), min_mentions=nil_min_mentions
-                ).coalesce(1),
+                "kg_nil_candidates", fp_k, "nil_min2_v1",
+                lambda: nil_candidates(kg_tbl.read(spark), min_mentions=2).coalesce(1),
             )
 
         # ---- optional temporal fusion: facts as-of + conflict inventory ---
@@ -304,8 +299,6 @@ def run_pipeline(
             # already bounds duplicated fill work, so the extra serialized
             # pass buys nothing and is not taken.
             try:
-                from concurrent.futures import ThreadPoolExecutor
-
                 # cutoff-independent tables don't carry facts_asof in their
                 # fingerprints, so moving the cutoff recomputes kg_facts alone
                 fusion_jobs = [
@@ -333,13 +326,13 @@ def run_pipeline(
                 # s, 3→3.12 s, 5→2.36 s at 100k pages — OPTIMIZATION_r08.md
                 # §9). A job-count, not a core-count: under FIFO scheduling
                 # excess in-flight jobs just queue on a saturated cluster.
-                with ThreadPoolExecutor(max_workers=len(fusion_jobs)) as pool:
-                    futures = [
-                        pool.submit(stage, name, fp_k + fp_d, params, build)
-                        for name, params, build in fusion_jobs
-                    ]
-                    for f in futures:
-                        f.result()  # surface the first failure
+                futures = [
+                    pool.submit(stage, name, fp_k + fp_d, params, build)
+                    for name, params, build in fusion_jobs
+                ]
+                wait(futures)  # every stage settles before the unpersist
+                for f in futures:
+                    f.result()  # surface the first failure
             finally:
                 linked_ts.unpersist()
     return run.result

@@ -10,6 +10,12 @@ dict insertion order); this generalizes that to crawl-timestamped triple
 streams, the standard "fact fusion by recency" step (cf. Dong et al.,
 Knowledge Vault) re-expressed as one window/aggregate.
 
+Each fusion rule has one implementation: the envelope aggregate
+(fact_envelopes — resolve_facts and fact_history build on it) and
+latest-wins (_latest_wins — resolve_from_envelopes and fact_changes pick
+their winners with it). The crawl timestamp column is always `warc_ts`
+and the functional slots are always FUNCTIONAL_PREDS.
+
 Scale shape (100 TB): both operators shuffle the triple stream ONCE on
 the (subj_eid, pred) fact key — a fine-grained key (entities × predicates),
 so no reducer sees more than one entity-slot's mentions; there is no
@@ -20,7 +26,7 @@ envelope as the link stage's salted join upstream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -30,15 +36,25 @@ from pyspark.sql.window import Window
 FUNCTIONAL_PREDS = ("founded_in", "founded_by", "based_in", "is_a")
 
 
-def resolve_facts(
-    linked: DataFrame,
-    as_of: str,
-    ts_col: str = "warc_ts",
-    functional_preds: tuple[str, ...] = FUNCTIONAL_PREDS,
-) -> DataFrame:
+def _latest_wins(ts: Column) -> Column:
+    """Latest-wins over a COLLAPSED fact table (one row per (subj_eid,
+    pred, obj)): true on every row of a multi-valued slot and, in a
+    functional slot, on the row holding max (ts, obj) — ties at the
+    winning timestamp break to the max obj. An UNORDERED window aggregate
+    instead of a row_number over a fully ordered window: the exec sorts
+    only on the partition keys, never on (ts, obj). struct max compares
+    (ts, obj) lexicographically with null ts lowest; obj is the group
+    key, so the max is unique and exactly one row matches."""
+    key = F.struct(ts, F.col("obj"))
+    return (~F.col("pred").isin(*FUNCTIONAL_PREDS)) | (
+        key == F.max(key).over(Window.partitionBy("subj_eid", "pred"))
+    )
+
+
+def resolve_facts(linked: DataFrame, as_of: str) -> DataFrame:
     """Functional-slot-aware fact resolution as of a cutoff date.
 
-    * FUNCTIONAL slots (`pred` in `functional_preds`) collapse to ONE
+    * FUNCTIONAL slots (`pred` in FUNCTIONAL_PREDS) collapse to ONE
       value — the obj asserted by the most recent page with ts on or
       before `as_of`, ties at the winning timestamp breaking to the max
       obj (deterministic, layout-invariant).
@@ -64,15 +80,11 @@ def resolve_facts(
     (one row per distinct value), never the mentions — same envelope as
     fact_support. Returns (subj_eid, pred, obj, fact_date, first_seen,
     n_mentions)."""
-    scoped = linked.filter(
-        F.to_date(F.col(ts_col)) <= F.lit(as_of).cast("date")
-    )
-    return resolve_from_envelopes(
-        fact_envelopes(scoped, ts_col), functional_preds
-    )
+    scoped = linked.filter(F.to_date("warc_ts") <= F.lit(as_of).cast("date"))
+    return resolve_from_envelopes(fact_envelopes(scoped))
 
 
-def fact_envelopes(linked: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
+def fact_envelopes(linked: DataFrame) -> DataFrame:
     """MERGEABLE sufficient statistics of the fact state: one row per
     (subj_eid, pred, obj) with (first_ts, last_ts, n_mentions). This is
     the table an INCREMENTAL fact state persists — max/min/count are
@@ -86,8 +98,8 @@ def fact_envelopes(linked: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
         linked.filter(F.col("subj_eid").isNotNull())
         .groupBy("subj_eid", "pred", "obj")
         .agg(
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
+            F.min("warc_ts").alias("first_ts"),
+            F.max("warc_ts").alias("last_ts"),
             F.count("*").cast("bigint").alias("n_mentions"),
         )
     )
@@ -113,42 +125,24 @@ def merge_fact_envelopes(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def resolve_from_envelopes(
-    env: DataFrame,
-    functional_preds: tuple[str, ...] = FUNCTIONAL_PREDS,
-) -> DataFrame:
+def resolve_from_envelopes(env: DataFrame) -> DataFrame:
     """Winner selection over an envelope state (fact_envelopes /
     merge_fact_envelopes output): functional slots latest-wins on
     (last_ts, obj), multi-valued slots pass through — the second phase
     of resolve_facts, shared verbatim so the incremental path can never
     drift from the oracled as-of semantics. The window moves only the
     COLLAPSED state, never mentions."""
-    out = env
-    if functional_preds:
-        # winner = the row holding max (last_ts, obj) in its slot — an
-        # UNORDERED window aggregate instead of a row_number over a fully
-        # ordered window: the exec sorts only on the partition keys, never
-        # on (last_ts, obj), so the big multi-valued partitions skip the
-        # value sort they were paying for a rank they never used. struct
-        # max compares (last_ts, obj) lexicographically — exactly the old
-        # (desc, desc) rk==1 row; obj is the group key, so the max is
-        # unique and exactly one row matches.
-        w = Window.partitionBy("subj_eid", "pred")
-        key = F.struct(F.col("last_ts"), F.col("obj"))
-        out = (
-            env.withColumn("_mx", F.max(key).over(w))
-            .filter(
-                (~F.col("pred").isin(*functional_preds)) | (key == F.col("_mx"))
-            )
-            .drop("_mx")
+    return (
+        env.withColumn("_win", _latest_wins(F.col("last_ts")))
+        .filter("_win")
+        .select(
+            "subj_eid",
+            "pred",
+            "obj",
+            F.date_format("last_ts", "yyyy-MM-dd").alias("fact_date"),
+            F.date_format("first_ts", "yyyy-MM-dd").alias("first_seen"),
+            "n_mentions",
         )
-    return out.select(
-        "subj_eid",
-        "pred",
-        "obj",
-        F.date_format("last_ts", "yyyy-MM-dd").alias("fact_date"),
-        F.date_format("first_ts", "yyyy-MM-dd").alias("first_seen"),
-        "n_mentions",
     )
 
 
@@ -201,21 +195,20 @@ def fact_support(linked: DataFrame) -> DataFrame:
     )
 
 
-def fact_history(linked: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
+def fact_history(linked: DataFrame) -> DataFrame:
     """Temporal scoping: the validity envelope of every asserted (slot,
     value) — first/last crawl date it was seen and its mention count.
     The fact-history table a temporal KG serves intervals from (and the
-    input recency-fusion reads its cutoffs against). One map-side-
-    combinable aggregate on the (subj_eid, pred, obj) fact key.
+    input recency-fusion reads its cutoffs against): fact_envelopes with
+    its timestamps formatted as dates.
     Returns (subj_eid, pred, obj, first_seen, last_seen, n_mentions)."""
-    return (
-        linked.filter(F.col("subj_eid").isNotNull())
-        .groupBy("subj_eid", "pred", "obj")
-        .agg(
-            F.date_format(F.min(ts_col), "yyyy-MM-dd").alias("first_seen"),
-            F.date_format(F.max(ts_col), "yyyy-MM-dd").alias("last_seen"),
-            F.count("*").cast("bigint").alias("n_mentions"),
-        )
+    return fact_envelopes(linked).select(
+        "subj_eid",
+        "pred",
+        "obj",
+        F.date_format("first_ts", "yyyy-MM-dd").alias("first_seen"),
+        F.date_format("last_ts", "yyyy-MM-dd").alias("last_seen"),
+        "n_mentions",
     )
 
 
@@ -237,7 +230,6 @@ def nil_candidates(
     linked: DataFrame,
     min_mentions: int = 2,
     side: str = "subj",
-    obj_preds: tuple[str, ...] = ENTITY_OBJ_PREDS,
 ) -> DataFrame:
     """Dictionary growth (NIL mining): surfaces the link stage could NOT
     resolve, grouped by the SAME normalization the linker matches with
@@ -246,7 +238,7 @@ def nil_candidates(
     dictionary is missing; the output feeds the next dictionary build.
 
     `side`: "subj" (default — every subject is an entity mention), "obj"
-    (objects of `obj_preds` only: object slots of literal-valued
+    (objects of ENTITY_OBJ_PREDS only: object slots of literal-valued
     predicates like founded_in/is_a are years and type strings, which
     must never pollute the growth worklist), or "both" (union of the two
     streams before the rollup, so a surface recurring once per position
@@ -260,7 +252,7 @@ def nil_candidates(
     def _side(surface_col: str, eid_col: str) -> DataFrame:
         out = linked.filter(F.col(eid_col).isNull())
         if surface_col == "obj":
-            out = out.filter(F.col("pred").isin(*obj_preds))
+            out = out.filter(F.col("pred").isin(*ENTITY_OBJ_PREDS))
         return out.select(
             _norm(F.col(surface_col)).alias("surface_norm"),
             F.col(surface_col).alias("surface"),
@@ -330,9 +322,7 @@ def entity_profiles(linked: DataFrame) -> DataFrame:
     )
 
 
-def detect_conflicts(
-    linked: DataFrame, functional_preds: tuple[str, ...] = FUNCTIONAL_PREDS
-) -> DataFrame:
+def detect_conflicts(linked: DataFrame) -> DataFrame:
     """Functional-dependency violations: (subj_eid, pred) slots asserting
     >1 distinct value anywhere in the corpus — the curation worklist that
     precedes resolution. One map-side-combinable aggregate; value extremes
@@ -340,7 +330,7 @@ def detect_conflicts(
     Returns (subj_eid, pred, n_values, n_mentions, first_obj, last_obj)."""
     return (
         linked.filter(F.col("subj_eid").isNotNull())
-        .filter(F.col("pred").isin(*functional_preds))
+        .filter(F.col("pred").isin(*FUNCTIONAL_PREDS))
         .groupBy("subj_eid", "pred")
         .agg(
             F.countDistinct("obj").cast("bigint").alias("n_values"),
@@ -352,13 +342,7 @@ def detect_conflicts(
     )
 
 
-def fact_changes(
-    linked: DataFrame,
-    as_of_old: str,
-    as_of_new: str,
-    ts_col: str = "warc_ts",
-    functional_preds: tuple[str, ...] = FUNCTIONAL_PREDS,
-) -> DataFrame:
+def fact_changes(linked: DataFrame, as_of_old: str, as_of_new: str) -> DataFrame:
     """What changed between two as-of fact states — the crawl-cadence
     diff ("what did this week's crawl change?"): rows (subj_eid, pred,
     obj, change) where change='added' (published at `as_of_new` but not
@@ -368,42 +352,31 @@ def fact_changes(
     ONE pass over the mention stream instead of two resolve_facts
     invocations: a single envelope aggregate on the fact key computes
     each value's max assertion timestamp at BOTH cutoffs (the old one as
-    a conditional max), then two windows over the COLLAPSED fact table
-    rank the functional winners per state. Output is pytest-pinned equal
-    to the compositional diff of two resolve_facts states, and the
-    driver oracle replays the compositional form — two independent
-    formulations under one hash. Day-inclusive cutoffs like
+    a conditional max), then _latest_wins — the rule resolve_facts uses —
+    picks the functional winners of each state over the COLLAPSED fact
+    table (two unordered window maxes over one partitioning). Output is
+    pytest-pinned equal to the compositional diff of two resolve_facts
+    states, and the driver oracle replays the compositional form — two
+    independent formulations under one hash. Day-inclusive cutoffs like
     resolve_facts."""
-    d = F.to_date(F.col(ts_col))
+    d = F.to_date("warc_ts")
     env = (
         linked.filter(F.col("subj_eid").isNotNull())
         .filter(d <= F.lit(as_of_new).cast("date"))
         .groupBy("subj_eid", "pred", "obj")
         .agg(
-            F.max(ts_col).alias("_ts_new"),
+            F.max("warc_ts").alias("_ts_new"),
             F.max(
-                F.when(d <= F.lit(as_of_old).cast("date"), F.col(ts_col))
+                F.when(d <= F.lit(as_of_old).cast("date"), F.col("warc_ts"))
             ).alias("_ts_old"),
         )
+        .withColumn("_in_new", _latest_wins(F.col("_ts_new")))
+        .withColumn(
+            "_in_old",
+            F.col("_ts_old").isNotNull() & _latest_wins(F.col("_ts_old")),
+        )
     )
-    if functional_preds:
-        w_new = Window.partitionBy("subj_eid", "pred").orderBy(
-            F.col("_ts_new").desc(), F.col("obj").desc()
-        )
-        w_old = Window.partitionBy("subj_eid", "pred").orderBy(
-            F.col("_ts_old").desc_nulls_last(), F.col("obj").desc()
-        )
-        env = env.withColumn("_rk_new", F.row_number().over(w_new)).withColumn(
-            "_rk_old", F.row_number().over(w_old)
-        )
-        is_func = F.col("pred").isin(*functional_preds)
-        in_new = (~is_func) | (F.col("_rk_new") == 1)
-        in_old = F.col("_ts_old").isNotNull() & (
-            (~is_func) | (F.col("_rk_old") == 1)
-        )
-    else:
-        in_new = F.lit(True)
-        in_old = F.col("_ts_old").isNotNull()
+    in_new, in_old = F.col("_in_new"), F.col("_in_old")
     return (
         env.withColumn(
             "change",

@@ -20,6 +20,14 @@ Hashing comes in two modes (`hash_mode` on every near-dup entry point):
   only the hash primitive differs. 60 bits (not 64) keeps every value
   non-negative in BOTH engines, sidestepping signed-shift divergence.
 
+Both modes stay, for a measured reason (BENCH/BASELINE.md, "Dedup hash
+modes at 10× corpus": 50k docs, local[4], 5 alternating pairs): md5-60
+is a string hash where xxhash64 is one native call, so portable costs
+most where hashing dominates — rolling_fingerprint 2.7× slower,
+duplicate_spans +10 % (slower in every pair), minhash_lsh_pairs +5 %.
+simhash_neardup_pairs ran 11 % faster portable, the one exception. Fast
+stays the production path; portable is the only form DuckDB replays.
+
 MinHash permutations are (aᵢ·h + bᵢ) mod p with constants from a seeded
 generator — deterministic across runs and parallelism.
 

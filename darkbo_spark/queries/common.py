@@ -39,14 +39,8 @@ def _q(name: str, oracle: str | None = None):
 # whose exchange provides the parallelism anyway, and an extra
 # round-robin ahead of a BroadcastExchange is pure overhead (measured:
 # q3/q5 +0.5 s each with an unconditional spread).
-_SMALL_TABLE_BYTES = int(
-    __import__("os").environ.get("DARKBO_SMALL_TABLE_BYTES", str(256 << 20))
-)
-_SPREAD_TABLES = frozenset(
-    __import__("os")
-    .environ.get("DARKBO_SPREAD_TABLES", "documents,embeddings")
-    .split(",")
-)
+_SMALL_TABLE_BYTES = 256 << 20
+_SPREAD_TABLES = frozenset({"documents", "embeddings"})
 
 
 def _table_bytes(path: str) -> int:
@@ -99,8 +93,12 @@ def clear_session_memo(spark: SparkSession) -> None:
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = True) -> DataFrame:
+    """The lazy scan of `{sf_dir}/{name}.parquet`, memoized per session.
+    The key carries the table's corpus fingerprint (file names, sizes and
+    mtimes), so a table rewritten mid-session gets a fresh listing instead
+    of a plan over files that are gone."""
     memo = session_plan_memo(spark)
-    key = ("_t", sf_dir, name, bool(spread))
+    key = ("_t", sf_dir, name, bool(spread), _corpus_fp(sf_dir, name))
     cached = memo.get(key)
     if cached is not None:
         return cached

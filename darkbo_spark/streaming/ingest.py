@@ -38,28 +38,19 @@ from darkbo_spark.kg.pages import PAGES_SCHEMA
 from darkbo_spark.kg.triples import extract_doc_triples_df
 
 
-def stream_pages_to_triples(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-):
-    """File-source streaming ingest: each new parquet file of pages becomes
-    a micro-batch run through the SAME batch transforms. Returns the
-    StreamingQuery (caller awaits / stops).
+def _batch_id_sink(output_path: str, checkpoint_path: str):
+    """The idempotent foreachBatch sink both page streams write through:
+    dynamic partition overwrite keyed by batch_id, so a replayed batch
+    (foreachBatch is at-least-once: a crash between the sink write and
+    the offset commit replays it) rewrites its own partition instead of
+    appending duplicates — the standard exactly-once-effect pattern.
 
-    foreachBatch is at-least-once (a crash between the sink write and the
-    offset commit replays the batch), so the write is made IDEMPOTENT:
-    dynamic partition overwrite keyed by batch_id — a replayed batch
-    rewrites its own partition instead of appending duplicates, which is
-    the standard exactly-once-effect pattern for foreachBatch sinks.
-
-    checkpoint_path and output_path share ONE lifetime: idempotence keys
-    on batch_id, so resetting the checkpoint while keeping the output
-    would restart batch_id at 0 and leave stale higher-numbered batch
-    partitions mixed into downstream reads. A populated output with no
-    checkpoint is therefore refused up front instead of silently
-    corrupting."""
+    checkpoint_path and output_path therefore share ONE lifetime:
+    resetting the checkpoint while keeping the output would restart
+    batch_id at 0 and leave stale higher-numbered batch partitions mixed
+    into downstream reads. A populated output with no checkpoint is
+    refused up front (ValueError) instead of silently corrupting.
+    Returns the `write(df, batch_id)` callback."""
     import os
 
     if not os.path.exists(checkpoint_path) and any(
@@ -73,6 +64,30 @@ def stream_pages_to_triples(
             "batch_id numbering would restart at 0 and strand stale "
             "partitions; clear the output or restore its checkpoint"
         )
+
+    def write(df: DataFrame, batch_id: int) -> None:
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(output_path)
+        )
+
+    return write
+
+
+def stream_pages_to_triples(
+    spark: SparkSession,
+    input_path: str,
+    output_path: str,
+    checkpoint_path: str,
+):
+    """File-source streaming ingest: each new parquet file of pages becomes
+    a micro-batch run through the SAME batch transforms, written through
+    the idempotent batch_id sink (_batch_id_sink). Returns the
+    StreamingQuery (caller awaits / stops)."""
+    write = _batch_id_sink(output_path, checkpoint_path)
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
         .option("maxFilesPerTrigger", 4)
@@ -80,14 +95,7 @@ def stream_pages_to_triples(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        triples = extract_doc_triples_df(extract_docs(batch_df))
-        (
-            triples.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
+        write(extract_doc_triples_df(extract_docs(batch_df)), batch_id)
 
     return (
         pages.writeStream.foreachBatch(process_batch)
@@ -157,12 +165,13 @@ def stream_pages_to_linked_triples(
     batch-side (slowly-changing dimension joined per micro-batch — the
     standard stream-static join);
     canonicalization stays a batch concern because alias clusters are
-    corpus-global. foreachBatch is at-least-once, so the sink is made
-    idempotent per batch (dynamic partition overwrite keyed by batch_id):
-    a crash-replayed batch rewrites its own partition — exactly-once
-    EFFECT, no duplicates, no drops."""
+    corpus-global. Written through the idempotent batch_id sink
+    (_batch_id_sink): a crash-replayed batch rewrites its own partition —
+    exactly-once EFFECT, no duplicates, no drops — and a populated output
+    without its checkpoint is refused."""
     from darkbo_spark.kg.link import link_entities
 
+    write = _batch_id_sink(output_path, checkpoint_path)
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
         # micro-batch size = the latency/throughput knob: small batches
@@ -174,15 +183,9 @@ def stream_pages_to_linked_triples(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        linked = link_entities(
-            extract_doc_triples_df(extract_docs(batch_df)), entity_dict
-        )
-        (
-            linked.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
+        write(
+            link_entities(extract_doc_triples_df(extract_docs(batch_df)), entity_dict),
+            batch_id,
         )
 
     return (

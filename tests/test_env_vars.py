@@ -1,0 +1,105 @@
+"""The environment variables the package reads are a fixed, reviewed set.
+
+Walks every module under darkbo_spark/ with `ast` and collects each
+`os.environ.get(NAME)`, `os.environ[NAME]` and `os.getenv(NAME)` read,
+resolving NAME through the module's string constants. A new env knob
+fails this test until it is added to ALLOWED on purpose; a read whose
+name cannot be resolved statically fails it too.
+"""
+
+import ast
+import pathlib
+
+import darkbo_spark
+
+ALLOWED = {
+    # deployment settings (session.py)
+    "SPARK_GRAFT_CPUS",
+    "SPARK_MASTER",
+    "SPARK_DRIVER_MEM",
+    # storage backend (storage/__init__.py)
+    "DARKBO_STORAGE_BACKEND",
+    # public-suffix-list file (operators/domains.py)
+    "DARKBO_PSL_FILE",
+    # model seams: real backends behind the deterministic defaults
+    "DARKBO_REAL_TOKENIZER",
+    "DARKBO_TOKENIZER_NAME",
+    "DARKBO_REAL_EMBED",
+    "DARKBO_EMBED_MODEL",
+    "DARKBO_REAL_QUALITY",
+    "DARKBO_QUALITY_MODEL",
+}
+
+
+def _env_reads(tree: ast.Module) -> set[str]:
+    consts = {
+        t.id: node.value.value
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and isinstance(node.value, ast.Constant)
+        and isinstance(node.value.value, str)
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+
+    def name_of(arg: ast.expr) -> str:
+        if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+            return arg.value
+        if isinstance(arg, ast.Name) and arg.id in consts:
+            return consts[arg.id]
+        return f"<unresolved: {ast.unparse(arg)}>"
+
+    parents = {
+        child: node for node in ast.walk(tree) for child in ast.iter_child_nodes(node)
+    }
+
+    def call_arg(func: ast.expr) -> str:
+        call = parents.get(func)
+        if isinstance(call, ast.Call) and call.func is func and call.args:
+            return name_of(call.args[0])
+        return f"<unresolved: {ast.unparse(func)}>"
+
+    found = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        if node.attr == "getenv":
+            found.add(call_arg(node))
+        elif node.attr == "environ":
+            up = parents.get(node)
+            if isinstance(up, ast.Subscript):
+                found.add(name_of(up.slice))
+            elif isinstance(up, ast.Attribute):
+                found.add(call_arg(up))
+            else:
+                found.add(f"<unresolved: {ast.unparse(node)}>")
+    return found
+
+
+def test_env_reads_match_allow_list():
+    root = pathlib.Path(darkbo_spark.__file__).parent
+    reads = {}
+    for path in sorted(root.rglob("*.py")):
+        for name in _env_reads(ast.parse(path.read_text(), str(path))):
+            reads.setdefault(name, []).append(str(path.relative_to(root)))
+    assert set(reads) == ALLOWED, {
+        "unlisted": {n: reads[n] for n in set(reads) - ALLOWED},
+        "listed but never read": sorted(ALLOWED - set(reads)),
+    }
+
+
+def test_env_scan_catches_a_new_knob():
+    src = (
+        "import os\n"
+        "KNOB = 'DARKBO_NEW_KNOB'\n"
+        "a = os.environ.get(KNOB, '1')\n"
+        "b = os.environ['DARKBO_OTHER']\n"
+        "c = __import__('os').getenv('DARKBO_THIRD')\n"
+        "d = os.environ.get(name_from_somewhere)\n"
+    )
+    assert _env_reads(ast.parse(src)) == {
+        "DARKBO_NEW_KNOB",
+        "DARKBO_OTHER",
+        "DARKBO_THIRD",
+        "<unresolved: name_from_somewhere>",
+    }

@@ -195,3 +195,24 @@ def test_clear_session_memo_unpersists_twin_chain(spark, sf_dir):
     clear_session_memo(spark)
     assert chain.storageLevel == StorageLevel.NONE
     assert session_plan_memo(spark) == {}
+
+
+def test_t_memo_serves_rewritten_table(spark, tmp_path):
+    """_t memoizes the scan per session, keyed by the table's corpus
+    fingerprint: a documents.parquet rewritten mid-session is listed
+    afresh, so the next _t returns the new rows, not a plan over the
+    files the rewrite removed."""
+    from darkbo_spark.queries.common import _t
+
+    sf = str(tmp_path)
+    path = f"{sf}/documents.parquet"
+    spark.range(5).withColumnRenamed("id", "doc_id").write.parquet(path)
+    assert sorted(r.doc_id for r in _t(spark, sf, "documents").collect()) == list(
+        range(5)
+    )
+    spark.range(100, 107).withColumnRenamed("id", "doc_id").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert sorted(r.doc_id for r in _t(spark, sf, "documents").collect()) == list(
+        range(100, 107)
+    )

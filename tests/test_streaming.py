@@ -520,3 +520,27 @@ def test_streaming_fetch_dedup_on_canonical_url_key(spark, tmp_path):
     }
     assert got == {"https://host.com/a?a=1&b=2", "https://other.com/b"}
     assert spark.sql("select * from fetch_dedup_out").count() == 2
+
+
+def test_linked_stream_refuses_output_without_checkpoint(spark, tmp_path):
+    """The linked stream writes through the same batch_id-keyed sink as the
+    triples stream, so it refuses the same way: a fresh checkpoint over an
+    output that already holds batch_id partitions would restart batch_id
+    at 0 and strand the stale partitions."""
+    import pytest
+
+    from darkbo_spark.kg.pages import entity_dictionary_df
+    from darkbo_spark.streaming.ingest import stream_pages_to_linked_triples
+
+    inp = str(tmp_path / "pages_in")
+    outp = str(tmp_path / "linked_out")
+    synth_pages(spark, 10, seed=5).write.parquet(inp)
+    spark.range(3).withColumn("batch_id", F.lit(0)).write.partitionBy(
+        "batch_id"
+    ).parquet(outp)
+    d = entity_dictionary_df(spark).select("alias", "eid")
+    with pytest.raises(ValueError, match="checkpoint"):
+        stream_pages_to_linked_triples(
+            spark, inp, outp, str(tmp_path / "ckpt_fresh"), d
+        )
+    assert not spark.streams.active
