@@ -187,21 +187,3 @@ def build_entity_table(entity_dict: DataFrame, eid_map: DataFrame) -> DataFrame:
         F.array_sort(F.collect_set("alias")).alias("aliases")
     )
     return canon_names.join(aliases, "eid")
-
-
-def remap_triples(linked: DataFrame, eid_map: DataFrame) -> DataFrame:
-    """Rewrite subj_eid/obj_eid to merged canonical ids (broadcast joins —
-    the map is dictionary-sized)."""
-    m_subj = F.broadcast(
-        eid_map.select(F.col("eid").alias("subj_eid"), F.col("canon_eid").alias("_s"))
-    )
-    m_obj = F.broadcast(
-        eid_map.select(F.col("eid").alias("obj_eid"), F.col("canon_eid").alias("_o"))
-    )
-    return (
-        linked.join(m_subj, "subj_eid", "left")
-        .join(m_obj, "obj_eid", "left")
-        .withColumn("subj_eid", F.coalesce("_s", "subj_eid"))
-        .withColumn("obj_eid", F.coalesce("_o", "obj_eid"))
-        .drop("_s", "_o")
-    )

@@ -95,12 +95,16 @@ def raw_text_sql(id_col: str = "doc_id") -> str:
 
 def twin_pages(docs: DataFrame, id_limit: int = 240) -> DataFrame:
     """(url, warc_ts, lang, text) pages whose text is the SQL-constructed
-    raw corpus — the input the real E→S→T pipeline runs on."""
+    raw corpus — the input the real E→S→T pipeline runs on. warc_ts is the
+    page's crawl date, 2024-01-01 + doc_id % 7 days, the date every dated
+    oracle replays (_TS_SQL)."""
     return docs.filter(F.col("doc_id") < id_limit).select(
         F.concat(F.lit("https://twin.test/p/"), F.col("doc_id").cast("string")).alias(
             "url"
         ),
-        F.to_timestamp(F.lit("2024-01-01 00:00:00")).alias("warc_ts"),
+        F.date_add(
+            F.to_date(F.lit("2024-01-01")), (F.col("doc_id") % 7).cast("int")
+        ).alias("warc_ts"),
         F.lit("en").alias("lang"),
         F.expr(raw_text_sql("doc_id")).alias("text"),
     )
@@ -123,16 +127,16 @@ def twin_entity_dict(spark: SparkSession) -> DataFrame:
     'The … Company' — the last exercises the leading-'the ' strip in
     link._norm), 20 persons, 5 cities.
 
-    The plan is memoized per session (queries.common.session_plan_memo):
-    it is a pure function of module constants, every kg twin query calls
-    it, and building the literal-array expression tree costs ~0.3 s of
-    py4j round-trips each time. A lazy plan is cached, never data."""
-    from darkbo_spark.queries.common import session_plan_memo
+    The plan is memoized per session (queries.common.session_plan): it is
+    a pure function of module constants, every kg twin query calls it, and
+    building the literal-array expression tree costs ~0.3 s of py4j
+    round-trips each time. A lazy plan is cached, never data."""
+    from darkbo_spark.queries.common import session_plan
 
-    memo = session_plan_memo(spark)
-    cached = memo.get("twin_entity_dict")
-    if cached is not None:
-        return cached
+    return session_plan(spark, ("twin_entity_dict",), lambda: _entity_dict(spark))
+
+
+def _entity_dict(spark: SparkSession) -> DataFrame:
     adj = F.array(*[F.lit(x) for x in ADJ])
     noun = F.array(*[F.lit(x) for x in NOUN])
     first = F.array(*[F.lit(x) for x in FIRST])
@@ -168,13 +172,11 @@ def twin_entity_dict(spark: SparkSession) -> DataFrame:
         F.element_at(city, (F.col("id") + 1).cast("int")).alias("canonical")
     )
     cit = cit.select("canonical", F.col("canonical").alias("alias"))
-    out = (
+    return (
         comp.unionByName(pers)
         .unionByName(cit)
         .select(sha256_id_col("entity", "canonical").alias("eid"), "alias")
     )
-    memo["twin_entity_dict"] = out
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -10,10 +10,12 @@ anything not covered. The shipped file
 (darkbo_spark/data/public_suffix_subset.dat) is a documented ~250-entry
 subset of the well-known ccTLD registries — this sandbox has no network
 egress — and `DARKBO_PSL_FILE` drops in the complete upstream
-public_suffix_list.dat unchanged (same text format, same parser). Rule
-sets compile into `isin` literals (Spark InSet — O(1) hash probe inside
-codegen, no join, no UDF), so the full 9k-rule list stays a scan-local
-expression at 100 TB.
+public_suffix_list.dat unchanged (same text format, same parser).
+`registered_domain` compiles the rule sets into `isin` literals (Spark
+InSet inside codegen, no join, no UDF); `with_registered_domain`, which
+the domain queries use, probes one broadcast (suffix → rule flags) table
+per label depth instead, so its per-row cost does not grow with the rule
+count.
 
 The cap itself is exact top-k per domain. A single `row_number() over
 (partition by domain)` is the textbook form but sorts EVERY document of a
@@ -230,52 +232,25 @@ def cap_per_domain(
     )
 
 
-def _rule_count(rules: SuffixRules) -> int:
-    return sum(
-        len(v)
-        for d in (rules.exact, rules.wildcard, rules.exception)
-        for v in d.values()
-    )
-
-
 def with_registered_domain(
     df: DataFrame,
     host: Column,
     out_col: str = "domain",
     rules: SuffixRules | None = None,
-    impl: str = "auto",
-    expr_rule_budget: int = 64,
 ) -> DataFrame:
     """Attach the registered domain of `host` as `out_col` under full PSL
-    semantics, choosing between two physically different, bit-identical
-    implementations (pytest-pinned equal on wildcard/exception grids):
-
-    * "expr" — registered_domain's inline column chain: every rule is a
-      plan literal (isin/CASE inside whole-stage codegen). Fastest at
-      seam-sized rule sets, but per-row cost GROWS with the rule count
-      (measured 2.5–2.9× wall from 16 → ~430 rules under equal load,
-      BENCH/BASELINE.md "Round 7: domains-family A/B"), and the full ~9k-rule upstream PSL would
-      compile a megabyte-scale expression.
-    * "join" — ONE broadcast hash join per suffix label-depth k: the
-      host's last-k labels probe the (suffix → rule flags) table, so
-      per-row cost is K≈3–4 hash probes REGARDLESS of rule count — zero
-      shuffle, zero explode, no row multiplication (suffixes are unique
-      per depth). The form that survives the full PSL.
-
-    "auto" picks expr while the total rule count fits
-    `expr_rule_budget`, else join — so seam-sized deployments keep the
-    literal form and PSL-sized ones get the flat probes without callers
-    changing."""
+    semantics, bit-identical to registered_domain (pytest-pinned equal on
+    wildcard/exception grids), as ONE broadcast hash join per suffix
+    label-depth k: the host's last-k labels probe the (suffix → rule
+    flags) table, so per-row cost is K≈3–4 hash probes REGARDLESS of rule
+    count — zero shuffle, zero explode, no row multiplication (suffixes
+    are unique per depth). registered_domain's inline literals cost more
+    per row as rules grow: at ~430 rules the join measured 0.552 s vs
+    0.609 s median (BENCH/BASELINE.md "Round 7: domains-family A/B"), and
+    the vendored list has 404 rules, the full upstream PSL ~9k."""
     import pandas as pd
 
     rules = rules or load_rules()
-    if impl == "auto":
-        impl = "expr" if _rule_count(rules) <= expr_rule_budget else "join"
-    if impl == "expr":
-        return df.withColumn(out_col, registered_domain(host, rules))
-    if impl != "join":
-        raise ValueError(f"impl must be expr/join/auto, got {impl!r}")
-
     spark = df.sparkSession
     df = df.withColumn("_rd_host", host)
     labels = F.split(F.col("_rd_host"), "\\.")

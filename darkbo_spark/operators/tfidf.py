@@ -13,7 +13,7 @@ term set → broadcast. Map-side partial aggregation applies to both groupBys.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -70,12 +70,42 @@ def build_postings(
     return tf.join(idf, "token").withColumn("tf_idf", F.col("tf") * F.col("idf"))
 
 
+# Whoosh's BM25F defaults (the oracles in queries/retrieval.py and
+# retrieval/oracle_twin.py inline the same literals)
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def _bm25_stats(docs: DataFrame, dl: DataFrame) -> DataFrame:
+    """Broadcast single-row (n_docs, avgdl): N from the input docs frame
+    (_corpus_n), avgdl = Σdl / N."""
+    return F.broadcast(
+        dl.crossJoin(F.broadcast(_corpus_n(docs))).agg(
+            F.first("n_docs").alias("n_docs"),
+            (F.sum("dl").cast("double") / F.first("n_docs").cast("double")).alias("avgdl"),
+        )
+    )
+
+
+def _bm25_w() -> Column:
+    """w = round(idf · tf_norm, 6) over the columns tf, dl, df, n_docs and
+    avgdl — the one BM25 weight expression, so every postings form rounds
+    the same IEEE doubles."""
+    idf = F.log(
+        F.lit(1.0)
+        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    )
+    tf_norm = (F.col("tf") * (BM25_K1 + 1.0)) / (
+        F.col("tf")
+        + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
+    )
+    return F.round(idf * tf_norm, 6).alias("w")
+
+
 def build_bm25_postings(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
     persist: bool = True,
     tf: DataFrame | None = None,
 ) -> DataFrame:
@@ -101,24 +131,11 @@ def build_bm25_postings(
         tf = _term_freq(docs, text_col, id_col, persist=persist)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     df_t = tf.groupBy("token").agg(F.count("*").alias("df"))
-    stats = F.broadcast(
-        dl.crossJoin(F.broadcast(_corpus_n(docs))).agg(
-            F.first("n_docs").alias("n_docs"),
-            (F.sum("dl").cast("double") / F.first("n_docs").cast("double")).alias("avgdl"),
-        )
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_norm = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     return (
         tf.join(dl, "doc_id")
         .join(df_t, "token")
-        .crossJoin(stats)
-        .select("token", "doc_id", F.round(idf * tf_norm, 6).alias("w"))
+        .crossJoin(_bm25_stats(docs, dl))
+        .select("token", "doc_id", _bm25_w())
     )
 
 
@@ -154,8 +171,6 @@ def bm25_postings_for_query(
     tokens,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
     persist: bool = True,
     tf: DataFrame | None = None,
 ) -> DataFrame:
@@ -180,24 +195,11 @@ def bm25_postings_for_query(
     # literal isin, not a tiny-frame join (scan pushdown, no broadcast)
     sub = tf.filter(F.col("token").isin(sorted(set(tokens))))
     df_t = sub.groupBy("token").agg(F.count("*").alias("df"))
-    stats = F.broadcast(
-        dl.crossJoin(F.broadcast(_corpus_n(docs))).agg(
-            F.first("n_docs").alias("n_docs"),
-            (F.sum("dl").cast("double") / F.first("n_docs").cast("double")).alias("avgdl"),
-        )
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_norm = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     return (
         sub.join(dl, "doc_id")
         .join(F.broadcast(df_t), "token")
-        .crossJoin(stats)
-        .select("token", "doc_id", F.round(idf * tf_norm, 6).alias("w"))
+        .crossJoin(_bm25_stats(docs, dl))
+        .select("token", "doc_id", _bm25_w())
     )
 
 
@@ -329,8 +331,6 @@ def bm25_weights_for_terms(
     tf_index: DataFrame,
     stats: DataFrame,
     terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """(token, doc_id, w) BM25 weights derived at QUERY TIME from the raw
     tf/dl statistics, for exactly the given terms — identical arithmetic
@@ -346,14 +346,8 @@ def bm25_weights_for_terms(
             ),
         )
     )
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    tf_norm = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-    )
     return (
         sub.join(F.broadcast(df_t), "token")
         .crossJoin(st)
-        .select("token", "doc_id", F.round(idf * tf_norm, 6).alias("w"))
+        .select("token", "doc_id", _bm25_w())
     )

@@ -67,18 +67,32 @@ def _table_bytes(path: str) -> int:
 # the session (even weakly) would keep every session alive; an attribute
 # is collected with the session, and a stopped-and-recreated session
 # starts empty. A few entries (the KG twin chains, the near-dup clusters
-# frame) are persisted; clear_session_memo releases them.
+# frame) are persisted; clear_session_memo releases them. Every entry goes
+# through session_plan.
 _MEMO_ATTR = "_darkbo_plan_memo"
 
 
 def session_plan_memo(spark: SparkSession) -> dict:
-    """Per-session dict for memoizing deterministic lazy plans (shared by
-    _t and the kg twin dictionary builders)."""
+    """The session's plan memo (created on first use); read it through
+    session_plan."""
     memo = getattr(spark, _MEMO_ATTR, None)
     if memo is None:
         memo = {}
         setattr(spark, _MEMO_ATTR, memo)
     return memo
+
+
+def session_plan(
+    spark: SparkSession, key: tuple, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """The session memo's entry for `key`: `build()` on first use, the same
+    handle after. A key names everything its plan reads — an entry over
+    parquet carries that table's _corpus_fp, so a rewritten table gets a
+    fresh entry instead of the old plan (or its persisted rows)."""
+    memo = session_plan_memo(spark)
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 def clear_session_memo(spark: SparkSession) -> None:
@@ -97,28 +111,37 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = True) -> Data
     The key carries the table's corpus fingerprint (file names, sizes and
     mtimes), so a table rewritten mid-session gets a fresh listing instead
     of a plan over files that are gone."""
-    memo = session_plan_memo(spark)
-    key = ("_t", sf_dir, name, bool(spread), _corpus_fp(sf_dir, name))
-    cached = memo.get(key)
-    if cached is not None:
-        return cached
+    fp = _corpus_fp(sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    try:
-        small = (
-            spread
-            and name in _SPREAD_TABLES
-            and _table_bytes(path) < _SMALL_TABLE_BYTES
-        )
-    except OSError:
-        small = False
-    if small:
-        # deterministic round-robin (sort-before-repartition is on by
-        # default, so retries reproduce the same layout); every query in
-        # the corpus is partition-layout-invariant (driver-hash gated)
-        df = df.repartition(spark.sparkContext.defaultParallelism)
-    memo[key] = df
-    return df
+
+    def build() -> DataFrame:
+        if any(
+            k[:3] == ("_t", sf_dir, name) and k[4] != fp
+            for k in session_plan_memo(spark)
+        ):
+            # rewritten since this session last read it, by a writer other
+            # than this session (whose own writes refresh the cache): a
+            # file index compares by root path, so cached plans over the
+            # old files — the persisted twin chains — would go on serving
+            # the old rows, to the new plan too
+            spark.catalog.refreshByPath(path)
+        df = spark.read.parquet(path)
+        try:
+            small = (
+                spread
+                and name in _SPREAD_TABLES
+                and _table_bytes(path) < _SMALL_TABLE_BYTES
+            )
+        except OSError:
+            small = False
+        if small:
+            # deterministic round-robin (sort-before-repartition is on by
+            # default, so retries reproduce the same layout); every query in
+            # the corpus is partition-layout-invariant (driver-hash gated)
+            df = df.repartition(spark.sparkContext.defaultParallelism)
+        return df
+
+    return session_plan(spark, ("_t", sf_dir, name, bool(spread), fp), build)
 
 
 def _terms_df(spark: SparkSession, terms: list[str]) -> DataFrame:

@@ -325,20 +325,23 @@ def _neardup_clusters_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_clusters_x and dedup_keep_best_x — the CC loop (an eager
     iterative computation, so the CacheManager cannot dedup it by plan)
     runs once per session instead of once per query. In-session reuse
-    only: a fresh process recomputes everything from parquet."""
+    only: a fresh process recomputes everything from parquet, and a
+    rewritten documents table (new corpus fingerprint) gets a new entry."""
     from darkbo_spark.operators.dedup import neardup_clusters
-    from darkbo_spark.queries.common import session_plan_memo
+    from darkbo_spark.queries.common import _corpus_fp, session_plan
 
-    memo = session_plan_memo(spark)
-    key = ("neardup_clusters", sf_dir)
-    cached = memo.get(key)
-    if cached is None:
-        docs = _neardup_corpus(spark, sf_dir)
-        cached = neardup_clusters(
-            docs, "text", "doc_id", k=16, bands=4, hash_mode="portable"
-        )
-        memo[key] = cached
-    return cached
+    return session_plan(
+        spark,
+        ("neardup_clusters", sf_dir, _corpus_fp(sf_dir, "documents")),
+        lambda: neardup_clusters(
+            _neardup_corpus(spark, sf_dir),
+            "text",
+            "doc_id",
+            k=16,
+            bands=4,
+            hash_mode="portable",
+        ),
+    )
 
 
 @_q("neardup_clusters_x", _CLUSTERS_ORACLE)

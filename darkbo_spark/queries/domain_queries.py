@@ -51,9 +51,9 @@ def domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (last-2 vs multi-part-suffix last-3) is hash-verified on both
     branches."""
     d = _t(spark, sf_dir, "documents")
-    # impl="auto": broadcast-probe join form at PSL-sized rule sets
-    # (~430 rules → K flat hash probes; measured vs the inline-literal
-    # expr form: BENCH/BASELINE.md, "Round 7: domains-family A/B")
+    # broadcast-probe join form: K flat hash probes at PSL-sized rule sets
+    # (measured vs the inline-literal expr form: BENCH/BASELINE.md,
+    # "Round 7: domains-family A/B")
     docs = with_registered_domain(d, host_of(F.expr(_DOC_URL_SQL)), "domain")
     return docs.groupBy("domain").agg(
         F.count("*").alias("n_docs"),

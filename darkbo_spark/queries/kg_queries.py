@@ -218,35 +218,55 @@ def kg_canonicalize_driver_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canonicalize_entities(twin_alias_dict(spark), mode="driver")
 
 
-def _kg_linked_twin(spark: SparkSession, sf_dir: str, strategy: str) -> DataFrame:
+def _kg_linked_twin(
+    spark: SparkSession,
+    sf_dir: str,
+    strategy: str = "broadcast",
+    dictionary: DataFrame | None = None,
+) -> DataFrame:
+    """The one linked twin chain: twin pages (crawl-dated) through the
+    pipeline's E→S+T→L with `strategy`, each page's warc_ts joined back on
+    url (at scale a co-partitioned join against the (url, warc_ts) side of
+    the same scan, here a broadcast). `dictionary` defaults to the twin
+    entity dictionary.
+
+    PERSISTED and memoized per (documents fingerprint, strategy,
+    dictionary plan): a dozen kg_* queries run this chain (UDF extraction
+    over the twin pages), several reference it from 2-3 plan branches
+    (profiles: degrees+types+facts; dict-growth: mine+before; nil-both:
+    subj∪obj), and each rebuild of the handle costs ~0.5 s of py4j
+    expression construction. The key names the dictionary by its
+    semanticHash, so every caller that builds the same dictionary plan
+    (the three NIL-mining queries' holey one) shares one chain."""
     from pyspark import StorageLevel
 
     from darkbo_spark.kg.incremental import extract_and_link
     from darkbo_spark.kg.oracle_twin import twin_entity_dict, twin_pages
-    from darkbo_spark.queries.common import session_plan_memo
+    from darkbo_spark.queries.common import _corpus_fp, session_plan
 
-    # plan-handle memo: ~10 queries build this identical chain; the
-    # CacheManager already dedups the DATA by canonical plan, but each
-    # rebuild still pays ~0.5 s of py4j expression construction — return
-    # the same lazy handle instead (per session, per strategy)
-    memo = session_plan_memo(spark)
-    key = ("kg_linked_twin", sf_dir, strategy)
-    cached = memo.get(key)
-    if cached is None:
-        # persisted: consumers (cooccurrence, degrees, pagerank, two-hop)
-        # reference this from 2+ branches
-        cached = extract_and_link(
-            twin_pages(_t(spark, sf_dir, "documents")),
-            twin_entity_dict(spark),
-            strategy=strategy,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        memo[key] = cached
-    return cached
+    if dictionary is None:
+        dictionary = twin_entity_dict(spark)
+
+    def build() -> DataFrame:
+        pages = twin_pages(_t(spark, sf_dir, "documents"))
+        linked = extract_and_link(pages, dictionary, strategy=strategy)
+        return linked.join(F.broadcast(pages.select("url", "warc_ts")), "url").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
+
+    key = (
+        "kg_linked_twin",
+        sf_dir,
+        _corpus_fp(sf_dir, "documents"),
+        strategy,
+        dictionary.semanticHash(),
+    )
+    return session_plan(spark, key, build)
 
 
 @_q("kg_linked_x", linked_oracle_sql(240))
 def kg_linked_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _kg_linked_twin(spark, sf_dir, "broadcast")
+    return _kg_linked_twin(spark, sf_dir).drop("warc_ts")
 
 
 @_q("kg_linked_salted_x", linked_oracle_sql(240))
@@ -254,7 +274,7 @@ def kg_linked_salted_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SALTED skew-defeating link strategy against the SAME oracle —
     broadcast ≡ salted ≡ DuckDB replay is now a driver hash fact, not
     just the pytest equality assertion."""
-    return _kg_linked_twin(spark, sf_dir, "salted")
+    return _kg_linked_twin(spark, sf_dir, "salted").drop("warc_ts")
 
 
 # ---------------------------------------------------------------------------
@@ -272,7 +292,7 @@ from darkbo_spark.kg.oracle_twin import (  # noqa: E402
 
 
 def _twin_entity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    linked = _kg_linked_twin(spark, sf_dir, "broadcast")
+    linked = _kg_linked_twin(spark, sf_dir)
     return (
         linked.filter(F.col("subj_eid").isNotNull() & F.col("obj_eid").isNotNull())
         .select(F.col("subj_eid").alias("src"), F.col("obj_eid").alias("dst"))
@@ -388,7 +408,7 @@ def kg_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into one codegen projection."""
     from darkbo_spark.operators.graph import entity_cooccurrence
 
-    linked = _kg_linked_twin(spark, sf_dir, "broadcast")
+    linked = _kg_linked_twin(spark, sf_dir)
     mentions = (
         linked.filter(F.col("subj_eid").isNotNull())
         .select("url", F.col("subj_eid").alias("eid"))
@@ -414,65 +434,6 @@ from darkbo_spark.kg.oracle_twin import (  # noqa: E402
 )
 
 
-def _dated_linked_twin(
-    spark: SparkSession,
-    sf_dir: str,
-    dictionary: DataFrame | None = None,
-    dict_key: str | None = None,
-) -> DataFrame:
-    """Linked triples carrying each page's crawl date: twin pages with
-    warc_ts = 2024-01-01 + (doc_id % 7) days through E→S→T→L, the ts
-    joined back on the page key (url) — at scale a co-partitioned join
-    against the (url, ts) side of the same scan, here a broadcast."""
-    from darkbo_spark.kg.incremental import extract_and_link
-    from darkbo_spark.kg.oracle_twin import raw_text_sql, twin_entity_dict
-    from darkbo_spark.queries.common import session_plan_memo
-
-    # plan-handle memo for the default dictionary and for any custom
-    # dictionary whose caller declares a stable identity via `dict_key`
-    # (the three NIL-mining queries share one 'holey' chain; the grown
-    # dictionary is unique to dict_growth and passes no key): same
-    # rationale as _kg_linked_twin
-    memo = session_plan_memo(spark)
-    memoizable = dictionary is None or dict_key is not None
-    key = ("dated_linked_twin", sf_dir, dict_key)
-    if memoizable:
-        cached = memo.get(key)
-        if cached is not None:
-            return cached
-
-    docs = _t(spark, sf_dir, "documents")
-    pages = docs.filter(F.col("doc_id") < 240).select(
-        F.concat(F.lit("https://twin.test/p/"), F.col("doc_id").cast("string")).alias(
-            "url"
-        ),
-        F.date_add(
-            F.to_date(F.lit("2024-01-01")), (F.col("doc_id") % 7).cast("int")
-        ).alias("warc_ts"),
-        F.lit("en").alias("lang"),
-        F.expr(raw_text_sql("doc_id")).alias("text"),
-    )
-    linked = extract_and_link(
-        pages, dictionary if dictionary is not None else twin_entity_dict(spark)
-    )
-    # PERSISTED by canonical plan: a dozen kg_* queries run this same
-    # E→S→T→L chain (UDF extraction over the twin pages), and several
-    # reference it from 2-3 plan branches (profiles: degrees+types+facts;
-    # dict-growth: mine+before; nil-both: subj∪obj) — without the cache
-    # each branch re-runs the extraction UDFs. The UDFs are module-level
-    # singletons, so the canonical plan — and therefore the cache entry —
-    # is shared across queries in a session; distinct dictionaries get
-    # their own (dictionary-sized) entries, LRU-evicted under pressure.
-    from pyspark import StorageLevel
-
-    out = linked.join(
-        F.broadcast(pages.select("url", "warc_ts")), "url"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if memoizable:
-        memo[key] = out
-    return out
-
-
 @_q("kg_facts_asof_x", facts_oracle_sql(240, as_of="2024-01-05"))
 def kg_facts_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Functional-slot-aware fact state as of 2024-01-05 (pages dated
@@ -483,7 +444,7 @@ def kg_facts_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, deterministic tie order."""
     from darkbo_spark.kg.temporal import resolve_facts
 
-    return resolve_facts(_dated_linked_twin(spark, sf_dir), as_of="2024-01-05")
+    return resolve_facts(_kg_linked_twin(spark, sf_dir), as_of="2024-01-05")
 
 
 @_q("kg_fact_conflicts_x", conflicts_oracle_sql(240))
@@ -493,7 +454,7 @@ def kg_fact_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable aggregate on the same fact key."""
     from darkbo_spark.kg.temporal import detect_conflicts
 
-    return detect_conflicts(_dated_linked_twin(spark, sf_dir))
+    return detect_conflicts(_kg_linked_twin(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -514,7 +475,7 @@ def kg_entity_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment every downstream consumer filters on."""
     from darkbo_spark.kg.temporal import entity_types
 
-    return entity_types(_dated_linked_twin(spark, sf_dir))
+    return entity_types(_kg_linked_twin(spark, sf_dir))
 
 
 @_q("kg_fact_support_x", fact_support_oracle_sql(240))
@@ -523,7 +484,7 @@ def kg_fact_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     the provenance strength the conflict worklist ranks by."""
     from darkbo_spark.kg.temporal import fact_support
 
-    return fact_support(_dated_linked_twin(spark, sf_dir))
+    return fact_support(_kg_linked_twin(spark, sf_dir))
 
 
 from darkbo_spark.kg.oracle_twin import entity_profile_oracle_sql  # noqa: E402
@@ -537,7 +498,7 @@ def kg_entity_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash."""
     from darkbo_spark.kg.temporal import entity_profiles
 
-    return entity_profiles(_dated_linked_twin(spark, sf_dir))
+    return entity_profiles(_kg_linked_twin(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -557,7 +518,7 @@ def kg_fact_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First/last-seen envelope + mention count per (slot, value)."""
     from darkbo_spark.kg.temporal import fact_history
 
-    return fact_history(_dated_linked_twin(spark, sf_dir))
+    return fact_history(_kg_linked_twin(spark, sf_dir))
 
 
 def _holey_dict(spark: SparkSession) -> DataFrame:
@@ -567,15 +528,6 @@ def _holey_dict(spark: SparkSession) -> DataFrame:
     from darkbo_spark.kg.oracle_twin import twin_entity_dict
 
     return twin_entity_dict(spark).filter(~_norm(F.col("alias")).startswith("r"))
-
-
-def _holey_dated_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dated linked chain against the holey dictionary, one handle per
-    session (dict_key='holey_v1') — kg_nil_candidates_x, kg_dict_growth_x
-    and kg_nil_candidates_both_x all link the identical chain."""
-    return _dated_linked_twin(
-        spark, sf_dir, dictionary=_holey_dict(spark), dict_key="holey_v1"
-    )
 
 
 @_q("kg_nil_candidates_x", nil_candidates_oracle_sql(240, min_mentions=2))
@@ -588,7 +540,8 @@ def kg_nil_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses — the exact situation NIL mining exists for."""
     from darkbo_spark.kg.temporal import nil_candidates
 
-    return nil_candidates(_holey_dated_twin(spark, sf_dir), min_mentions=2)
+    linked = _kg_linked_twin(spark, sf_dir, dictionary=_holey_dict(spark))
+    return nil_candidates(linked, min_mentions=2)
 
 
 # ---------------------------------------------------------------------------
@@ -613,9 +566,9 @@ def kg_dict_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from darkbo_spark.kg.temporal import nil_candidates
 
     holey = _holey_dict(spark)
-    linked1 = _holey_dated_twin(spark, sf_dir)
+    linked1 = _kg_linked_twin(spark, sf_dir, dictionary=holey)
     grown = augment_dictionary(holey, nil_candidates(linked1, min_mentions=2))
-    linked2 = _dated_linked_twin(spark, sf_dir, dictionary=grown)
+    linked2 = _kg_linked_twin(spark, sf_dir, dictionary=grown)
     before = (
         linked1.filter(F.col("subj_eid").isNull())
         .groupBy(_norm(F.col("subj")).alias("surface_norm"))
@@ -644,9 +597,8 @@ def kg_nil_candidates_both(spark: SparkSession, sf_dir: str) -> DataFrame:
     worklist), against the same holey dictionary as kg_nil_candidates_x."""
     from darkbo_spark.kg.temporal import nil_candidates
 
-    return nil_candidates(
-        _holey_dated_twin(spark, sf_dir), min_mentions=2, side="both"
-    )
+    linked = _kg_linked_twin(spark, sf_dir, dictionary=_holey_dict(spark))
+    return nil_candidates(linked, min_mentions=2, side="both")
 
 
 from darkbo_spark.kg.oracle_twin import fact_changes_oracle_sql  # noqa: E402
@@ -663,7 +615,7 @@ def kg_fact_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from darkbo_spark.kg.temporal import fact_changes
 
     return fact_changes(
-        _dated_linked_twin(spark, sf_dir), "2024-01-03", "2024-01-06"
+        _kg_linked_twin(spark, sf_dir), "2024-01-03", "2024-01-06"
     )
 
 
@@ -726,7 +678,7 @@ def kg_facts_stored_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "kg_facts_state",
         "documents",
         lambda: resolve_facts(
-            _dated_linked_twin(spark, sf_dir), as_of="2024-01-05"
+            _kg_linked_twin(spark, sf_dir), as_of="2024-01-05"
         )
         .withColumn(
             "fact_bucket",
@@ -767,7 +719,7 @@ def kg_facts_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         resolve_from_envelopes,
     )
 
-    linked = _dated_linked_twin(spark, sf_dir)
+    linked = _kg_linked_twin(spark, sf_dir)
     cut = F.to_date(F.col("warc_ts")) <= F.lit("2024-01-03").cast("date")
     state = fact_envelopes(linked.filter(cut))
     delta = fact_envelopes(linked.filter(~cut))

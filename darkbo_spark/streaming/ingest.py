@@ -9,9 +9,9 @@ one code path for batch and stream.
 * `stream_pages_to_triples` — file-source stream of pages parquet →
   extract+segment+extract-triples per micro-batch, appended to a triples
   sink; checkpointLocation gives exactly-once per-batch resume.
-* `windowed_triple_counts` — tumbling-window counts with a watermark for
-  late data (the per-window metrics rows of the north rule in streaming
-  form).
+* `windowed_event_counts` — tumbling-window counts per event type with a
+  watermark for late data (the per-window metrics rows of the north rule
+  in streaming form).
 * `sessionize_stream` — custom stateful operator via
   applyInPandasWithState: the streaming twin of operators/events.sessionize
   (gap-based sessions with per-user state and processing-time timeout).
@@ -176,8 +176,8 @@ def stream_pages_to_linked_triples(
         spark.readStream.schema(PAGES_SCHEMA)
         # micro-batch size = the latency/throughput knob: small batches
         # cut landed-to-linked latency, big batches amortize per-batch
-        # fixed costs toward batch-job throughput (measured sweep in
-        # BENCH/BASELINE.md via scripts/bench_streaming.py)
+        # fixed costs toward batch-job throughput (measured sweep:
+        # BENCH/BASELINE.md "Streaming ingest vs batch")
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )

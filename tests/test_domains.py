@@ -147,7 +147,7 @@ def test_join_impl_equals_expr_impl(spark):
     """with_registered_domain's broadcast-probe join form is bit-identical
     to the inline-literal expr form across exact/wildcard/exception/
     default branches (the two physical plans must never diverge on
-    values — the auto switch flips on rule count alone)."""
+    values)."""
     import pandas as pd
 
     from darkbo_spark.operators.domains import (
@@ -174,19 +174,10 @@ def test_join_impl_equals_expr_impl(spark):
     b = {
         r.host: r.domain
         for r in with_registered_domain(
-            df, F.col("host"), "domain", rules=rules, impl="join"
+            df, F.col("host"), "domain", rules=rules
         ).collect()
     }
     assert a == b
-    # auto picks join at the vendored subset size (>64 rules) and the
-    # same values come back
-    c = {
-        r.host: r.domain
-        for r in with_registered_domain(
-            df, F.col("host"), "domain", rules=rules, impl="auto"
-        ).collect()
-    }
-    assert c == a
 
 
 def test_registered_domain_py_equals_column_expr(spark):

@@ -216,3 +216,77 @@ def test_t_memo_serves_rewritten_table(spark, tmp_path):
     assert sorted(r.doc_id for r in _t(spark, sf, "documents").collect()) == list(
         range(100, 107)
     )
+
+
+def _write_documents(src_sf_dir: str, sf: str, n_docs: int) -> None:
+    """documents.parquet with doc_id < n_docs, written by pyarrow as another
+    process would: a Spark write would itself refresh the session's cached
+    plans over the path."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{src_sf_dir}/documents.parquet")
+    pq.write_table(
+        docs.filter(pc.less(docs["doc_id"], n_docs)), f"{sf}/documents.parquet"
+    )
+
+
+def test_linked_twin_chain_serves_rewritten_documents(spark, sf_dir, tmp_path):
+    """The persisted linked twin chain is memoized under the documents'
+    corpus fingerprint: after documents.parquet is rewritten outside the
+    session with pages 0-59 only, kg_linked_x links those pages, not the
+    persisted rows of the 240-page corpus."""
+    from darkbo_spark.queries.kg_queries import kg_linked_twin
+
+    def page_ids():
+        rows = kg_linked_twin(spark, sf).select("url").distinct().collect()
+        return {int(r.url.rsplit("/", 1)[1]) for r in rows}
+
+    sf = str(tmp_path)
+    _write_documents(sf_dir, sf, 240)
+    assert max(page_ids()) >= 60
+    _write_documents(sf_dir, sf, 60)
+    ids = page_ids()
+    assert ids and max(ids) < 60
+
+
+def test_neardup_clusters_serve_rewritten_documents(spark, sf_dir, tmp_path):
+    """The memoized near-dup clusters frame follows a rewritten
+    documents.parquet too: with documents 0-59 only, every clustered id
+    is one of those docs or its planted duplicate (id + 100000)."""
+    from darkbo_spark.queries.dedup_queries import neardup_clusters_portable
+
+    def doc_ids():
+        rows = neardup_clusters_portable(spark, sf).collect()
+        return {i % 100000 for r in rows for i in (r.doc_id, r.rep_id)}
+
+    sf = str(tmp_path)
+    _write_documents(sf_dir, sf, 240)
+    assert max(doc_ids()) >= 60
+    _write_documents(sf_dir, sf, 60)
+    ids = doc_ids()
+    assert ids and max(ids) < 60
+
+
+def test_one_persisted_chain_per_dictionary(spark, sf_dir):
+    """kg_linked_x and the crawl-dated fact queries read ONE persisted
+    chain for the default dictionary, and the NIL-mining queries, which
+    each build the holey dictionary afresh, share one more."""
+    from darkbo_spark.queries.common import clear_session_memo, session_plan_memo
+    from darkbo_spark.queries.kg_queries import (
+        kg_facts_asof,
+        kg_linked_twin,
+        kg_nil_candidates,
+        kg_nil_candidates_both,
+    )
+
+    def persisted():
+        return sum(df.is_cached for df in session_plan_memo(spark).values())
+
+    clear_session_memo(spark)
+    kg_linked_twin(spark, sf_dir).count()
+    kg_facts_asof(spark, sf_dir).count()
+    assert persisted() == 1
+    kg_nil_candidates(spark, sf_dir).count()
+    kg_nil_candidates_both(spark, sf_dir).count()
+    assert persisted() == 2
