@@ -102,8 +102,8 @@ def _py_features(text: str) -> list[float]:
     return [f_stop, f_punct, f_dup, f_mean, f_len]
 
 
-def _train_logistic(iters: int = 400, lr: float = 1.0) -> list[float]:
-    """Full-batch gradient descent, fixed iteration count, fixed example
+def _train_logistic() -> list[float]:
+    """Full-batch gradient descent (400 steps of size 1), fixed example
     order, float64 throughout — the weights are a pure function of the
     embedded corpus. Returns [bias, w_stop, w_punct, w_dup, w_mean, w_len]."""
     rows = [(t, 1.0) for t in _good_docs()] + [(t, 0.0) for t in _bad_docs()]
@@ -112,7 +112,7 @@ def _train_logistic(iters: int = 400, lr: float = 1.0) -> list[float]:
     nw = len(feats[0]) + 1
     w = [0.0] * nw
     n = float(len(rows))
-    for _ in range(iters):
+    for _ in range(400):
         g = [0.0] * nw
         for x, y in zip(feats, labels):
             z = w[0]
@@ -124,7 +124,7 @@ def _train_logistic(iters: int = 400, lr: float = 1.0) -> list[float]:
             for j, xj in enumerate(x):
                 g[j + 1] += d * xj
         for j in range(nw):
-            w[j] -= lr * g[j] / n
+            w[j] -= g[j] / n
     return w
 
 

@@ -28,8 +28,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 SALT_BUCKETS = 16
+# the sign-LSH bucketing of embed_candidates; the oracle twin replays it
+# as embed_candidates_oracle_sql(min_cosine, EMBED_PLANES, EMBED_SEED)
+EMBED_PLANES = 6
+EMBED_SEED = 42
 
 
 def _norm(col: F.Column) -> F.Column:
@@ -87,10 +92,22 @@ def link_entities(
     return _link_side(out, dict_norm, "obj", "obj_eid", strategy)
 
 
+def _best_per_surface(scored: DataFrame, score_col: str) -> DataFrame:
+    """(s_norm, eid, alias_norm, score_col): the one best candidate per
+    surface — highest score, then smallest eid, then smallest alias."""
+    w = Window.partitionBy("s_norm").orderBy(
+        F.desc(score_col), F.asc("eid"), F.asc("alias_norm")
+    )
+    return (
+        scored.withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") == 1)
+        .select("s_norm", "eid", "alias_norm", score_col)
+    )
+
+
 def fuzzy_candidates(
     unmatched: DataFrame,
     entity_dict: DataFrame,
-    surface_col: str = "surface",
     min_jaccard: float = 0.5,
 ) -> DataFrame:
     """Token-Jaccard candidate generation for surfaces that miss the exact
@@ -99,10 +116,10 @@ def fuzzy_candidates(
 
     Both sides explode to (token, key) postings; a shuffle join on token
     produces candidate pairs; Jaccard = |∩| / (|A|+|B|-|∩|); keep argmax per
-    surface above threshold. All native ops — no UDF.
+    `surface` above threshold. All native ops — no UDF.
     """
     surf = (
-        unmatched.select(_norm(F.col(surface_col)).alias("s_norm"))
+        unmatched.select(_norm(F.col("surface")).alias("s_norm"))
         .distinct()
         .withColumn("s_tokens", F.split(F.col("s_norm"), " "))
         .withColumn("s_size", F.size("s_tokens"))
@@ -124,25 +141,13 @@ def fuzzy_candidates(
         "jaccard",
         F.col("overlap") / (F.col("s_size") + F.col("d_size") - F.col("overlap")),
     ).filter(F.col("jaccard") >= min_jaccard)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("s_norm").orderBy(
-        F.desc("jaccard"), F.asc("eid"), F.asc("alias_norm")
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("s_norm", "eid", "alias_norm", "jaccard")
-    )
+    return _best_per_surface(scored, "jaccard")
 
 
 def embed_candidates(
     unmatched: DataFrame,
     entity_dict: DataFrame,
-    surface_col: str = "surface",
     min_cosine: float = 0.7,
-    n_planes: int = 6,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding-based candidate generation (SURVEY §7.2 M3's second leg):
     normalized surfaces and dictionary aliases are embedded with the A7
@@ -164,12 +169,12 @@ def embed_candidates(
         random_planes,
     )
 
-    planes = random_planes(EMBED_DIM, n_planes, seed)
+    planes = random_planes(EMBED_DIM, EMBED_PLANES, EMBED_SEED)
     # the encoder emits unit vectors — except for empty/sign-cancelling
     # surfaces, which come back all-zero and would divide-by-zero in the
     # cosine under ANSI; a zero vector matches nothing, so drop it early
     surf = (
-        unmatched.select(_norm(F.col(surface_col)).alias("s_norm"))
+        unmatched.select(_norm(F.col("surface")).alias("s_norm"))
         .distinct()
         .withColumn(
             "s_vec", F.transform(embed_udf(F.col("s_norm")), lambda x: x.cast("double"))
@@ -192,16 +197,7 @@ def embed_candidates(
         .withColumn("cosine", F.round(cosine(F.col("s_vec"), F.col("d_vec")), 6))
         .filter(F.col("cosine") >= min_cosine)
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("s_norm").orderBy(
-        F.desc("cosine"), F.asc("eid"), F.asc("alias_norm")
-    )
-    return (
-        scored.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
-        .select("s_norm", "eid", "alias_norm", "cosine")
-    )
+    return _best_per_surface(scored, "cosine")
 
 
 def apply_fuzzy_fallback(
@@ -226,7 +222,7 @@ def apply_fuzzy_fallback(
             linked.filter(F.col("obj_eid").isNull()).select(F.col("obj").alias("surface"))
         )
     )
-    cmap = gen(unmatched, entity_dict, "surface", **kwargs).select(
+    cmap = gen(unmatched, entity_dict, **kwargs).select(
         "s_norm", F.col("eid").alias("_fb_eid")
     )
     for surface_col, eid_col in (("subj", "subj_eid"), ("obj", "obj_eid")):

@@ -364,7 +364,7 @@ def make_fake_payload(kind: str, media_id: int) -> bytes:
     return _MAGIC + kind.encode()[:1].upper() + header + body
 
 
-def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
+def synth_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic media table (distributed generation, per-row seeded):
     image rows carry REAL BMPs/PNGs (alternating), audio rows REAL WAVs,
     video rows the FAKE container (the one kind with no dependency-free
@@ -376,7 +376,7 @@ def synth_media(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
             rows = []
             for i in b["id"]:
                 i = int(i)
-                kind = kinds[(i + seed) % 3]
+                kind = kinds[i % 3]
                 if kind == "image":
                     # alternate REAL codecs: even ids BMP, odd ids PNG
                     payload = make_bmp_payload(i) if i % 2 == 0 else make_png_payload(i)
@@ -667,7 +667,6 @@ def image_neardup_pairs(
     hash_col: str = "ahash",
     max_hamming: int = 3,
     max_bucket: int = 500,
-    persist: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, hamming): image pairs within `max_hamming` bits on the
     chosen perceptual hash. aHash is the default: dHash (adjacent-pixel
@@ -702,7 +701,9 @@ def image_neardup_pairs(
     ).select(
         "doc_id", F.col(hash_col), F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits")
     )
-    cand = _capped_bucket_pairs(banded, ["band", "bits"], [hash_col], max_bucket, persist)
+    cand = _capped_bucket_pairs(
+        banded, ["band", "bits"], [hash_col], max_bucket, persist=False
+    )
 
     def _chunk(col: str, i: int) -> F.Column:
         return F.conv(F.substring(F.col(col), i * 4 + 1, 4), 16, 10).cast("bigint")

@@ -41,24 +41,18 @@ _HREF_RE = 'href="([^"]+)"'
 _TEXT_RE = ">([^<]*)</a>"
 
 
-def extract_anchor_texts(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    html_is_binary: bool = True,
-) -> DataFrame:
-    """(src_host, dst_host, anchor_text) — one row per absolute http(s)
-    anchor occurrence with non-empty (trimmed) link text. Multiplicity is
-    kept: repeated anchors are repeated votes. Relative links, other
+def extract_anchor_texts(pages: DataFrame) -> DataFrame:
+    """(src_host, dst_host, anchor_text) over pages (url, html as UTF-8
+    bytes) — one row per absolute http(s) anchor occurrence with
+    non-empty (trimmed) link text. Multiplicity is kept: repeated
+    anchors are repeated votes. Relative links, other
     schemes (mailto:, javascript:) and empty/whitespace anchor texts
     carry no cross-site entity evidence and are dropped."""
-    html_str = (
-        F.decode(F.col(html_col), "UTF-8") if html_is_binary else F.col(html_col)
-    )
+    html_str = F.decode(F.col("html"), "UTF-8")
     frags = F.regexp_extract_all(html_str, F.lit(_A_FRAGMENT_RE), F.lit(0))
     return (
         pages.select(
-            host_of(F.col(url_col)).alias("src_host"),
+            host_of(F.col("url")).alias("src_host"),
             F.explode(frags).alias("frag"),
         )
         .select(

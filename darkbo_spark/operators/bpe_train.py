@@ -54,15 +54,15 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def train_merges_distributed(
     docs: DataFrame,
     n_merges: int,
-    text_col: str = "text",
     max_vocab: int = 1_000_000,
     allow_truncation: bool = False,
 ) -> tuple[list[tuple[str, str]], dict]:
-    """Train a merge table on a DataFrame corpus. Returns (merges, stats);
+    """Train a merge table on a DataFrame corpus's `text` column. Returns
+    (merges, stats);
     stats records the vocab size and any explicitly-allowed truncation.
     Identical output to functions/bpe.train_merges over the concatenated
     corpus (same word multiset → same loop)."""
-    wf = word_freqs(docs, text_col)
+    wf = word_freqs(docs)
     # deterministic keep-order for the (exceptional) truncated case
     top = wf.orderBy(F.col("freq").desc(), F.col("word")).limit(max_vocab + 1).collect()
     stats = {"vocab_size": len(top), "truncated": False, "dropped_words": 0,

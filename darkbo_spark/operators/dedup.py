@@ -253,7 +253,6 @@ def simhash_neardup_pairs(
     max_hamming: int = 3,
     max_bucket: int = 500,
     hash_mode: str = "fast",
-    persist: bool = True,
 ) -> DataFrame:
     """SimHash near-duplicate pairs: hamming(simhash_a, simhash_b) ≤ k.
 
@@ -284,7 +283,7 @@ def simhash_neardup_pairs(
     banded = sig.select("doc_id", "simhash", F.explode(bands).alias("bb")).select(
         "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits")
     )
-    cand = _capped_bucket_pairs(banded, ["band", "bits"], ["simhash"], max_bucket, persist)
+    cand = _capped_bucket_pairs(banded, ["band", "bits"], ["simhash"], max_bucket)
     return (
         cand.select(
             "id_a",
@@ -327,8 +326,7 @@ def cosine_neardup_pairs(
 
 
 def token_jaccard_pairs(
-    df: DataFrame, text_col: str, id_col: str, min_jaccard: float = 0.5,
-    persist: bool = True,
+    df: DataFrame, text_col: str, id_col: str, min_jaccard: float = 0.5
 ) -> DataFrame:
     """Exact token-set Jaccard for all pairs sharing ≥1 token. Oracle-sized
     inputs only — the LSH path is the scale plan."""
@@ -343,8 +341,7 @@ def token_jaccard_pairs(
     # persisted: toks feeds the sizes aggregate and both self-join sides
     # (and sizes itself is referenced twice), so the tokenize+explode
     # otherwise reruns per branch
-    if persist:
-        toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
+    toks = toks.persist(StorageLevel.MEMORY_AND_DISK)
     sizes = toks.groupBy("doc_id").agg(F.count("*").alias("sz"))
     t = toks
     inter = (
@@ -439,16 +436,14 @@ def dedup_keep_best(
 def contamination_matches(
     docs: DataFrame,
     bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
     bench_id_col: str = "bench_id",
     n: int = 8,
 ) -> DataFrame:
     """Test-set DECONTAMINATION (the GPT-3-style n-gram filter): every
     (training doc, benchmark item) pair sharing at least one n-token
     shingle, with the count of distinct shared shingles —
-    (doc_id, bench_id, n_shared). Training docs matched here get dropped
+    (doc_id, bench_id, n_shared), over docs (doc_id, text) and bench
+    (bench_id_col, text). Training docs matched here get dropped
     (or audited) before the corpus ships.
 
     The join keys on the RAW shingle string, not a hash: a removal
@@ -457,8 +452,8 @@ def contamination_matches(
     side is one narrow shingle explode — no shuffle of the corpus, no
     all-pairs anything. For a huge benchmark, swap the broadcast for a
     shuffle join on shingle; the operator is otherwise unchanged."""
-    d = shingles(docs, text_col, id_col, n).select("doc_id", "shingle")
-    b = shingles(bench, bench_text_col, bench_id_col, n).select(
+    d = shingles(docs, "text", "doc_id", n).select("doc_id", "shingle")
+    b = shingles(bench, "text", bench_id_col, n).select(
         F.col("doc_id").alias("bench_id"), "shingle"
     )
     return (

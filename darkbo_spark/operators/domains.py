@@ -91,11 +91,11 @@ def parse_psl(text: str) -> SuffixRules:
 _RULES_CACHE: dict[str, SuffixRules] = {}
 
 
-def load_rules(path: str | None = None) -> SuffixRules:
-    """Rules from `path`, $DARKBO_PSL_FILE, or the vendored subset —
-    cached per path (the rule sets compile into plan literals, so one
-    parse per session is plenty)."""
-    p = path or os.environ.get("DARKBO_PSL_FILE") or _PSL_DEFAULT
+def load_rules() -> SuffixRules:
+    """Rules from $DARKBO_PSL_FILE or the vendored subset — cached per
+    path (the rule sets compile into plan literals, so one parse per
+    session is plenty)."""
+    p = os.environ.get("DARKBO_PSL_FILE") or _PSL_DEFAULT
     if p not in _RULES_CACHE:
         with open(p, encoding="utf-8") as f:
             _RULES_CACHE[p] = parse_psl(f.read())
@@ -206,26 +206,24 @@ def sql_registered_domain(host: str, rules: SuffixRules | None = None) -> str:
 def cap_per_domain(
     docs: DataFrame,
     k: int,
-    domain_col: str = "domain",
     order_by: list[Column] | None = None,
-    id_col: str = "doc_id",
     salt: int = 16,
 ) -> DataFrame:
-    """Keep the top-k documents per domain under a TOTAL deterministic
-    order (order_by then id_col as the unique tiebreak), with the
+    """Keep the top-k documents per `domain` under a TOTAL deterministic
+    order (order_by then doc_id as the unique tiebreak), with the
     skew-safe two-phase ranking described in the module doc. Output rows
     carry `rk` (1-based final rank within the domain)."""
-    order = list(order_by or []) + [F.col(id_col).asc()]
+    order = list(order_by or []) + [F.col("doc_id").asc()]
     salted = docs.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).cast("int")
+        "_salt", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(salt)).cast("int")
     )
-    w1 = Window.partitionBy(domain_col, "_salt").orderBy(*order)
+    w1 = Window.partitionBy("domain", "_salt").orderBy(*order)
     phase1 = (
         salted.withColumn("_rk1", F.row_number().over(w1))
         .filter(F.col("_rk1") <= k)
         .drop("_rk1", "_salt")
     )
-    w2 = Window.partitionBy(domain_col).orderBy(*order)
+    w2 = Window.partitionBy("domain").orderBy(*order)
     return (
         phase1.withColumn("rk", F.row_number().over(w2))
         .filter(F.col("rk") <= k)

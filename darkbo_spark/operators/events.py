@@ -14,10 +14,10 @@ from pyspark.sql.window import Window
 EVENT_PRIORITY = {"purchase": 0, "signup": 1, "click": 2, "view": 3, "error": 4}
 
 
-def priority_col(event_type: str = "event_type") -> F.Column:
+def priority_col() -> F.Column:
     expr = F.lit(99)
     for k in sorted(EVENT_PRIORITY, key=EVENT_PRIORITY.get, reverse=True):
-        expr = F.when(F.col(event_type) == k, F.lit(EVENT_PRIORITY[k])).otherwise(expr)
+        expr = F.when(F.col("event_type") == k, F.lit(EVENT_PRIORITY[k])).otherwise(expr)
     return expr
 
 
@@ -66,9 +66,10 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def json_prop(events: DataFrame, prop: str = "k") -> DataFrame:
-    """Typed extraction from the JSON props column + per-type aggregate."""
-    v = F.get_json_object(F.col("props"), f"$.{prop}").cast("bigint")
+def json_prop(events: DataFrame) -> DataFrame:
+    """Typed extraction of $.k from the JSON props column + per-type
+    aggregate."""
+    v = F.get_json_object(F.col("props"), "$.k").cast("bigint")
     return (
         events.select("event_type", v.alias("k"))
         .groupBy("event_type")

@@ -34,15 +34,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def degree_centrality(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """(node, out_deg, in_deg) over the distinct edge set — the cheap
+def degree_centrality(edges: DataFrame) -> DataFrame:
+    """(node, out_deg, in_deg) over the distinct (src, dst) edge set — the cheap
     importance signal (and the skew probe: head entities by in-degree are
     the keys the link join salts)."""
-    e = edges.select(src, dst).distinct()
-    out_d = e.groupBy(F.col(src).alias("node")).agg(F.count("*").alias("out_deg"))
-    in_d = e.groupBy(F.col(dst).alias("node")).agg(F.count("*").alias("in_deg"))
+    e = edges.select("src", "dst").distinct()
+    out_d = e.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("out_deg"))
+    in_d = e.groupBy(F.col("dst").alias("node")).agg(F.count("*").alias("in_deg"))
     return (
         out_d.join(in_d, "node", "full_outer")
         .select(

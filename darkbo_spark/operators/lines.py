@@ -33,72 +33,62 @@ def split_lines(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def line_stats(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def line_stats(docs: DataFrame) -> DataFrame:
     """(line, n_docs, n_occ) for every non-empty distinct line: the
     corpus-wide duplication profile. n_docs is an exact COUNT(DISTINCT) —
     at the 100 TB tier swap in approx_count_distinct at identical plan
     shape if ±2% is acceptable."""
-    lines = split_lines(docs, text_col, id_col)
+    lines = split_lines(docs)
     return (
         lines.filter(F.trim(F.col("line")) != "")
         .groupBy("line")
         .agg(
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
             F.count("*").alias("n_occ"),
         )
     )
 
 
-def dedup_lines(
-    docs: DataFrame,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    persist: bool = True,
-) -> DataFrame:
+def dedup_lines(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     """Remove every line that appears in >= min_docs distinct documents;
     rebuild each document's text from its surviving lines in original
-    order. Returns (id, text, n_lines_kept, n_lines_removed) — documents
+    order. Returns (doc_id, text, n_lines_kept, n_lines_removed) — documents
     whose every line was boilerplate survive with empty text (the caller
     decides whether to drop them; silently vanishing rows would corrupt
     downstream counts).
 
     The exploded line frame feeds THREE branches (boilerplate aggregate,
-    the anti-join side, per-doc totals), so it is persisted by default —
+    the anti-join side, per-doc totals), so it is persisted —
     unpersisted, the full-text split+posexplode runs three times (the
     same ReuseExchange-defeat as spans.duplicate_spans). MEMORY_AND_DISK:
     line rows are corpus-sized, spill-safe."""
     from pyspark import StorageLevel
 
-    lines = split_lines(docs, text_col, id_col)
-    if persist:
-        lines = lines.persist(StorageLevel.MEMORY_AND_DISK)
+    lines = split_lines(docs).persist(StorageLevel.MEMORY_AND_DISK)
     boiler = (
         lines.filter(F.trim(F.col("line")) != "")
         .groupBy("line")
-        .agg(F.countDistinct(id_col).alias("n_docs"))
+        .agg(F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)
         .select("line")
     )
     kept = lines.join(boiler, "line", "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
+    rebuilt = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("line_no", "line"))),
                 lambda s: s["line"],
             ),
             "\n",
-        ).alias(text_col),
+        ).alias("text"),
         F.count("*").alias("n_lines_kept"),
     )
-    totals = lines.groupBy(id_col).agg(F.count("*").alias("_n_total"))
+    totals = lines.groupBy("doc_id").agg(F.count("*").alias("_n_total"))
     return (
-        totals.join(rebuilt, id_col, "left")
+        totals.join(rebuilt, "doc_id", "left")
         .select(
-            id_col,
-            F.coalesce(F.col(text_col), F.lit("")).alias(text_col),
+            "doc_id",
+            F.coalesce(F.col("text"), F.lit("")).alias("text"),
             F.coalesce(F.col("n_lines_kept"), F.lit(0)).cast("bigint").alias("n_lines_kept"),
             (F.col("_n_total") - F.coalesce(F.col("n_lines_kept"), F.lit(0)))
             .cast("bigint")

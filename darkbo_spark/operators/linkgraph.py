@@ -27,21 +27,15 @@ from darkbo_spark.operators.domains import host_of
 _HREF_RE = 'href="([^"]+)"'
 
 
-def extract_links(
-    pages: DataFrame,
-    html_col: str = "html",
-    url_col: str = "url",
-    html_is_binary: bool = True,
-) -> DataFrame:
-    """(src_host, dst_host) — one row per absolute http(s) href occurrence
-    (NOT deduplicated: multiplicity is signal for the weighted rollup)."""
-    html_str = (
-        F.decode(F.col(html_col), "UTF-8") if html_is_binary else F.col(html_col)
-    )
+def extract_links(pages: DataFrame) -> DataFrame:
+    """(src_host, dst_host) over pages (url, html as UTF-8 bytes) — one
+    row per absolute http(s) href occurrence (NOT deduplicated:
+    multiplicity is signal for the weighted rollup)."""
+    html_str = F.decode(F.col("html"), "UTF-8")
     hrefs = F.regexp_extract_all(html_str, F.lit(_HREF_RE), F.lit(1))
     return (
         pages.select(
-            host_of(F.col(url_col)).alias("src_host"),
+            host_of(F.col("url")).alias("src_host"),
             F.explode(hrefs).alias("href"),
         )
         .filter(F.col("href").rlike("^(?i)https?://"))

@@ -45,18 +45,16 @@ def _keep_hash(id_col: Column, salt: str) -> Column:
 def deterministic_sample(
     df: DataFrame,
     fraction: float,
-    id_col: str = "doc_id",
     salt: str = "v1",
 ) -> DataFrame:
-    """Keep a deterministic ~`fraction` of rows by id hash."""
-    return df.filter(_keep_hash(F.col(id_col), salt) < _threshold(fraction))
+    """Keep a deterministic ~`fraction` of rows by doc_id hash."""
+    return df.filter(_keep_hash(F.col("doc_id"), salt) < _threshold(fraction))
 
 
 def stratified_sample(
     df: DataFrame,
     stratum_col: str,
     fractions: dict[str, float],
-    id_col: str = "doc_id",
     salt: str = "v1",
     default_fraction: float = 0.0,
 ) -> DataFrame:
@@ -65,4 +63,4 @@ def stratified_sample(
     thr = F.lit(_threshold(default_fraction))
     for k, frac in sorted(fractions.items()):
         thr = F.when(F.col(stratum_col) == k, F.lit(_threshold(frac))).otherwise(thr)
-    return df.filter(_keep_hash(F.col(id_col), salt) < thr)
+    return df.filter(_keep_hash(F.col("doc_id"), salt) < thr)

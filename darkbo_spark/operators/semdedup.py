@@ -70,41 +70,37 @@ def semantic_dedup(
     emb: DataFrame,
     codebook: list[list[float]],
     min_cosine: float,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    persist: bool = True,
 ) -> DataFrame:
-    """(id, cell, kept): kept=false for every vector with a LOWER-id
-    neighbor in the same cell at cosine >= min_cosine (keep-lowest-id —
+    """(vec_id, cell, kept) over emb (vec_id, embedding): kept=false for
+    every vector with a LOWER-id neighbor in the same cell at cosine >=
+    min_cosine (keep-lowest-id —
     deterministic, order-free; the transitive-cluster variant is
     operators/dedup.neardup_clusters over these pairs). Cosine is rounded
     to 6 dp before the threshold, same discipline as the ANN family.
 
-    `cells` is persisted by default: it feeds both self-join sides and
+    `cells` is persisted: it feeds both self-join sides and
     the final keep join, so the per-row codebook dot transform otherwise
     runs 3×."""
     from pyspark import StorageLevel
 
-    cells = assign_cells(emb, codebook, vec_col, id_col)
-    if persist:
-        cells = cells.persist(StorageLevel.MEMORY_AND_DISK)
+    cells = assign_cells(emb, codebook).persist(StorageLevel.MEMORY_AND_DISK)
     a = cells.select(
-        F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"), "cell"
+        F.col("vec_id").alias("_ida"), F.col("embedding").alias("_va"), "cell"
     )
     b = cells.select(
-        F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"), "cell"
+        F.col("vec_id").alias("_idb"), F.col("embedding").alias("_vb"), "cell"
     )
     dropped = (
         a.join(b, "cell")
         .filter(F.col("_ida") < F.col("_idb"))
         .filter(F.round(cosine(F.col("_va"), F.col("_vb")), 6) >= min_cosine)
-        .select(F.col("_idb").alias(id_col))
+        .select(F.col("_idb").alias("vec_id"))
         .distinct()
     )
     return cells.join(
-        dropped.withColumn("_dropped", F.lit(True)), id_col, "left"
+        dropped.withColumn("_dropped", F.lit(True)), "vec_id", "left"
     ).select(
-        id_col,
+        "vec_id",
         "cell",
         F.coalesce(~F.col("_dropped"), F.lit(True)).alias("kept"),
     )
@@ -114,8 +110,6 @@ def learned_codebook(
     emb: DataFrame,
     dim: int,
     n_cells: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     seed: int = 42,
     n_train: int = 2000,
     iters: int = 8,
@@ -136,8 +130,7 @@ def learned_codebook(
     from darkbo_spark.operators.similarity import train_ivf_centroids
 
     return train_ivf_centroids(
-        emb, dim, vec_col, id_col, n_cells=n_cells,
-        n_train=n_train, iters=iters, seed=seed,
+        emb, dim, n_cells=n_cells, n_train=n_train, iters=iters, seed=seed
     )
 
 

@@ -33,20 +33,18 @@ from pyspark.sql.window import Window
 def pack_shards(
     df: DataFrame,
     budget: int,
-    order_col: str = "doc_id",
-    weight_col: str = "n_tokens",
     num_range_partitions: int | None = None,
 ) -> DataFrame:
-    """→ input columns + (cum_tokens, shard_id). `weight_col` must be a
-    non-negative integral column; ordering by `order_col` must be total
-    (unique keys) for the assignment to be deterministic."""
+    """→ input columns + (cum_tokens, shard_id). `n_tokens` must be a
+    non-negative integral column; `doc_id` must be unique (a total
+    order) for the assignment to be deterministic."""
     parts = num_range_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(parts, F.col(order_col)).withColumn(
+    ranged = df.repartitionByRange(parts, F.col("doc_id")).withColumn(
         "_pid", F.spark_partition_id()
     )
     w = (
         Window.partitionBy("_pid")
-        .orderBy(F.col(order_col))
+        .orderBy(F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # MATERIALIZE before anything consumes this twice: repartitionByRange
@@ -57,7 +55,7 @@ def pack_shards(
     # resample identically). localCheckpoint pins ONE partitioning for
     # both the totals collect and the final plan.
     local = ranged.withColumn(
-        "_local_cum", F.sum(F.col(weight_col).cast("bigint")).over(w)
+        "_local_cum", F.sum(F.col("n_tokens").cast("bigint")).over(w)
     ).localCheckpoint(eager=True)
     # one tiny row per partition → driver prefix-sum → broadcast join.
     # (_pid, min order key) also fixes the partition ORDER explicitly
@@ -66,7 +64,7 @@ def pack_shards(
         local.groupBy("_pid")
         .agg(
             F.max("_local_cum").alias("_ptotal"),
-            F.min(order_col).alias("_pmin"),
+            F.min("doc_id").alias("_pmin"),
         )
         .collect()
     )
@@ -93,7 +91,7 @@ def pack_shards(
         local.join(off_df, "_pid")
         .withColumn("cum_tokens", (F.col("_off") + F.col("_local_cum")).cast("bigint"))
         .withColumn(
-            "_start", F.col("cum_tokens") - F.col(weight_col).cast("bigint")
+            "_start", F.col("cum_tokens") - F.col("n_tokens").cast("bigint")
         )
         # exact integer division spelled as (d - d%B)/B: the numerator is an
         # exact multiple of B, so the double division is exact in IEEE —

@@ -41,22 +41,15 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k per query: crossJoin(broadcast(queries)) — zero
-    shuffle of the corpus; TakeOrdered per query via window rank."""
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
+    """Exact cosine top-k per query over corpus (vec_id, embedding) and
+    queries (qid, qvec): crossJoin(broadcast(queries)) — zero shuffle of
+    the corpus; TakeOrdered per query via window rank."""
     joined = corpus.crossJoin(F.broadcast(queries))
     scored = joined.select(
-        F.col(qid_col).alias("qid"),
-        F.col(id_col).alias("doc_id"),
-        F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6).alias("score"),
+        F.col("qid").alias("qid"),
+        F.col("vec_id").alias("doc_id"),
+        F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("score"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -105,25 +98,20 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     k: int = 10,
     n_planes: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate top-k: score only corpus vectors whose sign-projection
     bucket equals the query's. One shuffle on bucket instead of a full
     cross product — the 100 TB plan when queries are many."""
-    planes = random_planes(dim, n_planes, seed)
-    c = corpus.withColumn("_bucket", _sign_bucket(vec_col, planes))
-    q = queries.withColumn("_bucket", _sign_bucket(qvec_col, planes))
+    planes = random_planes(dim, n_planes)
+    c = corpus.withColumn("_bucket", _sign_bucket("embedding", planes))
+    q = queries.withColumn("_bucket", _sign_bucket("qvec", planes))
     joined = c.join(q, "_bucket")
     scored = joined.select(
-        F.col(qid_col).alias("qid"),
-        F.col(id_col).alias("doc_id"),
-        F.round(cosine(F.col(vec_col), F.col(qvec_col)), 6).alias("score"),
+        F.col("qid").alias("qid"),
+        F.col("vec_id").alias("doc_id"),
+        F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("score"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -171,15 +159,10 @@ def ivf_topk(
     corpus,
     queries,
     dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 2,
     centroids: list[list[float]] | None = None,
-    seed: int = 42,
 ) -> DataFrame:
     """IVF approximate top-k: corpus rows are assigned to their nearest
     coarse centroid (one narrow map — the inverted file); each query probes
@@ -189,16 +172,14 @@ def ivf_topk(
     partition/bucket key of the stored index table, so probing prunes
     partitions at the scan."""
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, dim, vec_col, id_col, n_cells=n_cells, seed=seed
-        )
-    c_dots = _cell_dots(vec_col, centroids)
+        centroids = train_ivf_centroids(corpus, dim, n_cells=n_cells)
+    c_dots = _cell_dots("embedding", centroids)
     c = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(vec_col).alias("_cvec"),
+        F.col("vec_id").alias("doc_id"),
+        F.col("embedding").alias("_cvec"),
         (F.array_position(c_dots, F.array_max(c_dots)) - 1).cast("int").alias("cell"),
     )
-    q_dots = _cell_dots(qvec_col, centroids)
+    q_dots = _cell_dots("qvec", centroids)
     # top n_probe cells per query: sort (dot, NEGATED idx) structs and
     # reverse → dot desc, idx ASC on ties — the same lowest-index tie-break
     # as the corpus side's array_position(max); opposite tie directions
@@ -208,8 +189,8 @@ def ivf_topk(
     )
     probe_cells = F.slice(F.reverse(F.array_sort(idx_structs)), 1, n_probe)
     q = queries.select(
-        F.col(qid_col).alias("qid"),
-        F.col(qvec_col).alias("_qvec"),
+        F.col("qid").alias("qid"),
+        F.col("qvec").alias("_qvec"),
         F.explode(probe_cells).alias("pc"),
     ).select("qid", "_qvec", (-F.col("pc.ni")).cast("int").alias("cell"))
     scored = (
@@ -227,11 +208,8 @@ def ivf_topk(
 def build_ivf_index(
     corpus: DataFrame,
     dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_cells: int = 16,
     centroids: list[list[float]] | None = None,
-    seed: int = 42,
 ) -> tuple[DataFrame, list[list[float]]]:
     """The IVF index as a publishable frame: (doc_id, embedding, cell).
     Publish it `partition_by=["cell"]` (SnapshotTable / Iceberg hidden
@@ -241,13 +219,11 @@ def build_ivf_index(
     the centroids travel with the index (meta) since queries must rank
     cells against the SAME quantizer the index was built with."""
     if centroids is None:
-        centroids = train_ivf_centroids(
-            corpus, dim, vec_col, id_col, n_cells=n_cells, seed=seed
-        )
-    c_dots = _cell_dots(vec_col, centroids)
+        centroids = train_ivf_centroids(corpus, dim, n_cells=n_cells)
+    c_dots = _cell_dots("embedding", centroids)
     index = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(vec_col).alias("embedding"),
+        F.col("vec_id").alias("doc_id"),
+        F.col("embedding").alias("embedding"),
         (F.array_position(c_dots, F.array_max(c_dots)) - 1).cast("int").alias("cell"),
     )
     return index, centroids
@@ -257,8 +233,6 @@ def ivf_topk_stored(
     index: DataFrame,
     queries: DataFrame,
     centroids: list[list[float]],
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     k: int = 10,
     n_probe: int = 2,
 ) -> DataFrame:
@@ -269,15 +243,15 @@ def ivf_topk_stored(
     `cell IN (...)` filter so a cell-partitioned store prunes partitions
     before any row is read. Query↔cell matching stays a join, the filter
     is the scan-level prune."""
-    q_dots = _cell_dots(qvec_col, centroids)
+    q_dots = _cell_dots("qvec", centroids)
     idx_structs = F.transform(
         q_dots, lambda d, i: F.struct(d.alias("d"), (-i).alias("ni"))
     )
     probe_cells = F.slice(F.reverse(F.array_sort(idx_structs)), 1, n_probe)
     q = (
         queries.select(
-            F.col(qid_col).alias("qid"),
-            F.col(qvec_col).alias("_qvec"),
+            F.col("qid").alias("qid"),
+            F.col("qvec").alias("_qvec"),
             F.explode(probe_cells).alias("pc"),
         )
         .select("qid", "_qvec", (-F.col("pc.ni")).cast("int").alias("cell"))
@@ -301,15 +275,10 @@ def lsh_topk_multi(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    qid_col: str = "qid",
-    qvec_col: str = "qvec",
     k: int = 10,
     n_planes: int = 8,
     n_tables: int = 4,
     multiprobe: bool = True,
-    seed: int = 42,
 ) -> DataFrame:
     """Multi-table, multi-probe sign-LSH top-k — the recall upgrade over
     single-probe `lsh_topk` (whose recall sags as dim grows).
@@ -323,18 +292,18 @@ def lsh_topk_multi(
     * candidates dedup on (qid, doc_id) before scoring so each pair is
       scored once regardless of how many tables it collided in.
     """
-    tables = [random_planes(dim, n_planes, seed + 7919 * t) for t in range(n_tables)]
+    tables = [random_planes(dim, n_planes, 42 + 7919 * t) for t in range(n_tables)]
     c_entries = F.array(
         *[
             F.struct(
                 F.lit(t).alias("t"),
-                _sign_bucket(vec_col, planes).alias("bucket"),
+                _sign_bucket("embedding", planes).alias("bucket"),
             )
             for t, planes in enumerate(tables)
         ]
     )
     c = corpus.select(
-        F.col(id_col).alias("doc_id"), F.col(vec_col).alias("_cvec"),
+        F.col("vec_id").alias("doc_id"), F.col("embedding").alias("_cvec"),
         F.explode(c_entries).alias("tb"),
     ).select("doc_id", "_cvec", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"))
 
@@ -346,13 +315,13 @@ def lsh_topk_multi(
         *[
             F.struct(
                 F.lit(t).alias("t"),
-                _sign_bucket(qvec_col, planes).alias("bucket"),
+                _sign_bucket("qvec", planes).alias("bucket"),
             )
             for t, planes in enumerate(tables)
         ]
     )
     q_base = queries.select(
-        F.col(qid_col).alias("qid"), F.col(qvec_col).alias("_qvec"),
+        F.col("qid").alias("qid"), F.col("qvec").alias("_qvec"),
         F.explode(q_entries).alias("tb"),
     ).select("qid", "_qvec", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("b0"))
     if multiprobe:

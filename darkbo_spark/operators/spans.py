@@ -112,15 +112,12 @@ def window_fingerprints(
 
 def duplicate_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     min_docs: int = 2,
     max_docs_per_fp: int | None = None,
     keep_first: bool = False,
     hash_mode: str = "fast",
     tokenizer: str = "space",
-    persist: bool = True,
 ) -> DataFrame:
     """(doc_id, span_start, span_end, n_windows): maximal duplicate token
     ranges [span_start, span_end) per document — every merged run of
@@ -132,7 +129,7 @@ def duplicate_spans(
     trim_spans_exact).
 
     The fingerprint frame feeds TWO branches (the per-fp family aggregate
-    and the marked join), so it is persisted by default — unpersisted,
+    and the marked join), so it is persisted — unpersisted,
     tokenize + slide + hash runs twice (the _capped_bucket_pairs
     ReuseExchange-defeat). MEMORY_AND_DISK: (doc_id, pos, fp) rows are
     token-count-sized, spill-safe. The groupBy+join form itself is kept
@@ -141,9 +138,9 @@ def duplicate_spans(
     per row — the aggregate does partial map-side work and never does."""
     from pyspark import StorageLevel
 
-    wf = window_fingerprints(df, text_col, id_col, n, hash_mode, tokenizer)
-    if persist:
-        wf = wf.persist(StorageLevel.MEMORY_AND_DISK)
+    wf = window_fingerprints(
+        df, n=n, hash_mode=hash_mode, tokenizer=tokenizer
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     fam = wf.groupBy("fp").agg(
         F.countDistinct("doc_id").alias("_nd"),
         F.min(F.struct(F.col("doc_id").alias("d"), F.col("pos").alias("p"))).alias(
@@ -179,12 +176,7 @@ def duplicate_spans(
     )
 
 
-def trim_duplicate_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def trim_duplicate_spans(df: DataFrame, spans: DataFrame) -> DataFrame:
     """(doc_id, text): each document's token stream with every span-covered
     token removed, rejoined with single spaces (documents without spans
     pass through space-normalized). With keep_first=True spans, duplicated
@@ -192,7 +184,7 @@ def trim_duplicate_spans(
     sp = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    base = df.select(F.col(id_col).alias("doc_id"), _toks(text_col).alias("_t")).join(
+    base = df.select(F.col("doc_id").alias("doc_id"), _toks("text").alias("_t")).join(
         sp, "doc_id", "left"
     )
     spans_arr = F.coalesce(
@@ -208,12 +200,7 @@ def trim_duplicate_spans(
     return base.select("doc_id", F.array_join(kept, " ").alias("text"))
 
 
-def trim_spans_exact(
-    df: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def trim_spans_exact(df: DataFrame, spans: DataFrame) -> DataFrame:
     """(doc_id, text): BYTE-FAITHFUL span excision. Documents no span
     touches return byte-identical; a span [a, b) is removed as the exact
     byte range [start of tok_a, end of tok_{b-1}) — surrounding
@@ -227,7 +214,7 @@ def trim_spans_exact(
     sp = spans.groupBy("doc_id").agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_txt")).join(
+    base = df.select(F.col("doc_id").alias("doc_id"), F.col("text").alias("_txt")).join(
         sp, "doc_id", "left"
     )
     toks = _ws_toks("_txt")

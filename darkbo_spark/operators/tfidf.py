@@ -55,14 +55,11 @@ def _term_freq(
 
 
 def build_postings(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    persist: bool = True,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(token, doc_id, tf, idf, tf_idf) — ONE job: the corpus count is a
     broadcast single-row aggregate inside the plan, not a separate action."""
-    tf = _term_freq(docs, text_col, id_col, persist=persist)
+    tf = _term_freq(docs, text_col, id_col)
     df_t = tf.groupBy("token").agg(F.count("*").alias("df"))
     idf = df_t.crossJoin(F.broadcast(_corpus_n(docs))).withColumn(
         "idf", F.log((F.col("n_docs").cast("double") + 1.0) / (F.col("df") + 1.0)) + 1.0
@@ -139,13 +136,7 @@ def build_bm25_postings(
     )
 
 
-def tfidf_postings_for_query(
-    docs: DataFrame,
-    tokens,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    persist: bool = True,
-) -> DataFrame:
+def tfidf_postings_for_query(docs: DataFrame, tokens) -> DataFrame:
     """(token, doc_id, tf, idf, tf_idf) restricted to `tokens` — identical
     arithmetic to build_postings (df for a token counts that token's rows,
     which survive the token filter intact), but the full-vocabulary df
@@ -153,7 +144,7 @@ def tfidf_postings_for_query(
     rows. The serve shape: query cost scales with the query's postings,
     not the corpus vocabulary (guide §2.3 — don't compute what you throw
     away)."""
-    tf = _term_freq(docs, text_col, id_col, persist=persist)
+    tf = _term_freq(docs, "text", "doc_id")
     # literal isin, not a tiny-frame join: pushes to the scan when tf is a
     # stored table and costs no broadcast/createDataFrame round-trip
     sub = tf.filter(F.col("token").isin(sorted(set(tokens))))
@@ -167,12 +158,7 @@ def tfidf_postings_for_query(
 
 
 def bm25_postings_for_query(
-    docs: DataFrame,
-    tokens,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    persist: bool = True,
-    tf: DataFrame | None = None,
+    docs: DataFrame, tokens, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(token, doc_id, w) restricted to `tokens` — the query-time twin of
     build_bm25_postings with IDENTICAL arithmetic (same integer sufficient
@@ -182,16 +168,17 @@ def bm25_postings_for_query(
     stats still aggregate the full tf (a doc's length spans all its
     tokens), which is one map-side-combinable pass; everything else
     scales with the query."""
-    if tf is None:
-        tf = _term_freq(docs, text_col, id_col, persist=persist)
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    if persist:
-        # doc-count-sized and shared by every BM25 query over the same
-        # corpus (one cache entry by canonical plan) — each query
-        # otherwise re-aggregates the full tf for the same lengths
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        dl = dl.persist(StorageLevel.MEMORY_AND_DISK)
+    tf = _term_freq(docs, text_col, id_col)
+    # doc-count-sized and shared by every BM25 query over the same corpus
+    # (one cache entry by canonical plan) — each query otherwise
+    # re-aggregates the full tf for the same lengths
+    dl = (
+        tf.groupBy("doc_id")
+        .agg(F.sum("tf").alias("dl"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # literal isin, not a tiny-frame join (scan pushdown, no broadcast)
     sub = tf.filter(F.col("token").isin(sorted(set(tokens))))
     df_t = sub.groupBy("token").agg(F.count("*").alias("df"))
@@ -244,10 +231,7 @@ def score_query(postings: DataFrame, query_terms: list[str], top_k: int = 10) ->
 
 
 def build_tf_index(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    persist: bool = False,
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """The INCREMENTAL form of the sparse index: instead of final BM25
     weights (which depend on global df/avgdl and would all change when one
@@ -272,7 +256,7 @@ def build_tf_index(
     (tf=0, dl=0): the index is then a complete doc roster, so
     merge_tf_delta can account a replacement of an empty doc exactly, and
     query-time term joins never see the sentinel (no term equals NULL)."""
-    tf = _term_freq(docs, text_col, id_col, persist=persist)
+    tf = _term_freq(docs, text_col, id_col, persist=False)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     empty = (
         docs.select(F.col(id_col).alias("doc_id"))
@@ -300,15 +284,13 @@ def merge_tf_delta(
     tf_index: DataFrame,
     stats: DataFrame,
     delta_docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> tuple[DataFrame, DataFrame]:
     """Upsert a document delta into the raw-statistics index: replaced
     doc_ids drop their old rows (anti join), the delta's rows append, and
     stats adjust by exact integer deltas. No global recompute — the cost
     scales with the DELTA, not the corpus."""
-    d_tf, d_stats = build_tf_index(delta_docs, text_col, id_col)
-    delta_ids = delta_docs.select(F.col(id_col).alias("doc_id")).distinct()
+    d_tf, d_stats = build_tf_index(delta_docs)
+    delta_ids = delta_docs.select(F.col("doc_id").alias("doc_id")).distinct()
     removed = tf_index.join(delta_ids, "doc_id", "left_semi")
     removed_stats = removed.groupBy("doc_id").agg(F.first("dl").alias("dl")).agg(
         F.count(F.lit(1)).alias("rm_docs"),

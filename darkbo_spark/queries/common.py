@@ -67,8 +67,9 @@ def _table_bytes(path: str) -> int:
 # the session (even weakly) would keep every session alive; an attribute
 # is collected with the session, and a stopped-and-recreated session
 # starts empty. A few entries (the KG twin chains, the near-dup clusters
-# frame) are persisted; clear_session_memo releases them. Every entry goes
-# through session_plan.
+# frame) are persisted; clear_session_memo releases them, and so does a
+# rewrite of the table whose fingerprint their key carries (_t). Every
+# entry goes through session_plan.
 _MEMO_ATTR = "_darkbo_plan_memo"
 
 
@@ -95,35 +96,41 @@ def session_plan(
     return memo[key]
 
 
-def clear_session_memo(spark: SparkSession) -> None:
-    """Empty the session's plan memo and unpersist the persisted entries
-    (the memoized KG twin chains), so a long-lived session gives their
-    cached blocks back."""
-    memo = session_plan_memo(spark)
-    for df in memo.values():
+def _drop_entries(memo: dict, keys: list) -> None:
+    """Remove `keys` from the memo, unpersisting the persisted entries
+    (the memoized KG twin chains) so their cached blocks are given back."""
+    for k in keys:
+        df = memo.pop(k)
         if df.is_cached:
             df.unpersist()
-    memo.clear()
+
+
+def clear_session_memo(spark: SparkSession) -> None:
+    """Empty the session's plan memo, releasing its persisted entries."""
+    memo = session_plan_memo(spark)
+    _drop_entries(memo, list(memo))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = True) -> DataFrame:
     """The lazy scan of `{sf_dir}/{name}.parquet`, memoized per session.
     The key carries the table's corpus fingerprint (file names, sizes and
     mtimes), so a table rewritten mid-session gets a fresh listing instead
-    of a plan over files that are gone."""
+    of a plan over files that are gone, and every entry keyed by an older
+    fingerprint of the table is dropped (and unpersisted)."""
     fp = _corpus_fp(sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
 
     def build() -> DataFrame:
-        if any(
-            k[:3] == ("_t", sf_dir, name) and k[4] != fp
-            for k in session_plan_memo(spark)
-        ):
-            # rewritten since this session last read it, by a writer other
-            # than this session (whose own writes refresh the cache): a
-            # file index compares by root path, so cached plans over the
-            # old files — the persisted twin chains — would go on serving
-            # the old rows, to the new plan too
+        memo = session_plan_memo(spark)
+        stale = {k[4] for k in memo if k[:3] == ("_t", sf_dir, name) and k[4] != fp}
+        if stale:
+            # rewritten since this session last read it: the entries over
+            # the old files are superseded for good
+            _drop_entries(memo, [k for k in memo if stale.intersection(k)])
+            # and a writer other than this session (whose own writes
+            # refresh the cache) leaves every other cached plan over the
+            # path serving the old rows, to the new plan too: a file index
+            # compares by root path
             spark.catalog.refreshByPath(path)
         df = spark.read.parquet(path)
         try:

@@ -442,8 +442,8 @@ def simhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from darkbo_spark.operators.dedup import simhash_neardup_pairs
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    # persist=True: the banded simhash frame feeds the bucket-size agg and
-    # both self-join sides — unpersisted, the vote/pack pipeline runs 3×
+    # the banded simhash frame is persisted: it feeds the bucket-size agg
+    # and both self-join sides — unpersisted, the vote/pack pipeline runs 3×
     return simhash_neardup_pairs(docs, "text", "doc_id", max_hamming=3, hash_mode="portable")
 
 

@@ -32,10 +32,14 @@ def fuzzy_link(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return fuzzy_candidates(surfaces, entity_dictionary_df(spark), min_jaccard=0.3)
 
+from darkbo_spark.kg.link import EMBED_PLANES, EMBED_SEED  # noqa: E402
 from darkbo_spark.kg.oracle_twin import embed_candidates_oracle_sql  # noqa: E402
 
 
-@_q("embed_link_candidates_x", embed_candidates_oracle_sql(0.3, 6, 42))
+@_q(
+    "embed_link_candidates_x",
+    embed_candidates_oracle_sql(0.3, EMBED_PLANES, EMBED_SEED),
+)
 def embed_link_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embed_candidates driver-oracled end-to-end: real Arrow encoder +
     sign-LSH bucketing (the seeded hyperplanes inline into the oracle as

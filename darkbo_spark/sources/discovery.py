@@ -10,7 +10,7 @@ the directory id).
 Spark restatement: the directory scan is driver-side metadata work (the
 analog of an Iceberg catalog/partition listing — never a cluster job),
 while name inference is a DataFrame plan over the FAQ rows: window-limit
-to the first `sniff_rows` per project, one `contains` chain per known
+to the first SNIFF_ROWS per project, one `contains` chain per known
 marker, first match wins, `coalesce` to the project id. One broadcast-size
 aggregate regardless of corpus size.
 """
@@ -60,12 +60,14 @@ def infer_name_col(content: F.Column, default: F.Column) -> F.Column:
     return expr
 
 
-def discover_projects(
-    spark: SparkSession, data_dir: str, sniff_rows: int = 3
-) -> DataFrame:
+# the reference sniffs the first 3 FAQs of a project, in file order
+SNIFF_ROWS = 3
+
+
+def discover_projects(spark: SparkSession, data_dir: str) -> DataFrame:
     """→ (project_id, name): discovered projects with content-sniffed names.
 
-    Matches the reference loop exactly: only the first `sniff_rows` FAQs per
+    Matches the reference loop exactly: only the first SNIFF_ROWS FAQs per
     project are sniffed (in file order), answer+question concatenated, first
     marker hit wins, else the id. Projects with only a KB file keep their id
     as the name (the reference sniffs FAQ data only)."""
@@ -108,7 +110,7 @@ def discover_projects(
     # marker decides the name (ACLU checked before ASPCA within a FAQ)
     sniff = (
         faqs.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= sniff_rows)
+        .filter(F.col("_rk") <= SNIFF_ROWS)
         .select(
             "project_id",
             "_ord",

@@ -400,16 +400,14 @@ def merge_cdx_delta(
     return index.join(F.broadcast(files), key, "left_anti").unionByName(delta)
 
 
-def dedup_fetches(
-    pages: DataFrame, url_col: str = "url", ts_col: str = "warc_ts"
-) -> DataFrame:
+def dedup_fetches(pages: DataFrame) -> DataFrame:
     """Fetch dedup by CANONICAL url — the standard CC ingestion step
     between the dump parse and the pipeline: the same page is fetched as
     `HTTPS://Host.com:443/a/?b=2&a=1#x` and `https://host.com/a?a=1&b=2`
     across crawl cycles, and downstream must see ONE row per canonical
-    page, the LATEST fetch winning (ties at the winning timestamp break
-    to the max raw url — deterministic, layout-invariant). One window on
-    the canonical key (functions/urlnorm.canonical_url — all codegen
+    page, the LATEST fetch (`warc_ts`) winning (ties at the winning
+    timestamp break to the max raw `url` — deterministic,
+    layout-invariant). One window on the canonical key (functions/urlnorm.canonical_url — all codegen
     column expressions): the canonical key is near-unique, so the
     exchange is as fine-grained as the revisit join's digest key and no
     reducer sees more than one page's fetch history. Returns the input
@@ -418,9 +416,9 @@ def dedup_fetches(
 
     from darkbo_spark.functions.urlnorm import canonical_url
 
-    out = pages.withColumn("canon_url", canonical_url(F.col(url_col)))
+    out = pages.withColumn("canon_url", canonical_url(F.col("url")))
     w = Window.partitionBy("canon_url").orderBy(
-        F.col(ts_col).desc(), F.col(url_col).desc()
+        F.col("warc_ts").desc(), F.col("url").desc()
     )
     return (
         out.withColumn("_fd_rk", F.row_number().over(w))

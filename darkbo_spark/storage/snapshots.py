@@ -155,14 +155,12 @@ class SnapshotTable:
 
     # -- read ---------------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
-        cur = self.current()
-        if not cur:
-            raise FileNotFoundError(f"no current version for table {self.name}")
-        return spark.read.parquet(os.path.join(self.dir, cur["version"], "data"))
+        return spark.read.parquet(self.data_path())
 
     def data_path(self) -> str:
         cur = self.current()
-        assert cur, f"no current version for {self.name}"
+        if not cur:
+            raise FileNotFoundError(f"no current version for table {self.name}")
         return os.path.join(self.dir, cur["version"], "data")
 
     # -- time travel ----------------------------------------------------------
@@ -329,7 +327,7 @@ class BuildLock:
                 pass  # stolen between check and remove — nothing to release
 
 
-def partition_metrics(spark: SparkSession, data_path: str) -> list[dict]:
+def partition_metrics(data_path: str) -> list[dict]:
     """Per-output-file row counts for a published version — the lineage/
     metrics evidence the north rule requires. Reads ONLY parquet footers via
     pyarrow on the driver (no cluster job): milliseconds per stage instead

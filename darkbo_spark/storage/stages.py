@@ -110,7 +110,7 @@ class StageRun:
         t0 = time.time()
         tbl.publish(build(), fp)
         wall = round(time.time() - t0, 3)
-        files = partition_metrics(self.spark, tbl.data_path())
+        files = partition_metrics(tbl.data_path())
         with self._mu:
             res.stages_run.append(name)
             res.timings[name] = wall

@@ -77,6 +77,35 @@ def _batch_id_sink(output_path: str, checkpoint_path: str):
     return write
 
 
+def _micro_batches(
+    spark: SparkSession,
+    schema,
+    input_path: str,
+    checkpoint_path: str,
+    max_files_per_trigger: int,
+    process_batch,
+):
+    """The file-source micro-batch runner every parquet-landing stream
+    shares: new files under `input_path` (read with `schema`) become
+    micro-batches of at most `max_files_per_trigger` files, each handed
+    to `process_batch(batch_df, batch_id)`; the checkpoint records the
+    committed offsets, and `availableNow` stops the query once the landed
+    files are consumed. Micro-batch size is the latency/throughput knob:
+    small batches cut landed-to-output latency, big batches amortize
+    per-batch fixed costs toward batch-job throughput (measured sweep:
+    BENCH/BASELINE.md "Streaming ingest vs batch"). Returns the
+    StreamingQuery (caller awaits / stops)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_path)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_pages_to_triples(
     spark: SparkSession,
     input_path: str,
@@ -88,29 +117,20 @@ def stream_pages_to_triples(
     the idempotent batch_id sink (_batch_id_sink). Returns the
     StreamingQuery (caller awaits / stops)."""
     write = _batch_id_sink(output_path, checkpoint_path)
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_path)
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         write(extract_doc_triples_df(extract_docs(batch_df)), batch_id)
 
-    return (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _micro_batches(
+        spark, PAGES_SCHEMA, input_path, checkpoint_path, 4, process_batch
     )
 
 
-def windowed_event_counts(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling-window counts with late-data watermark (streaming DF in →
-    streaming DF out; also works on a batch DF for testing the plan)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+def windowed_event_counts(events: DataFrame, window: str = "5 minutes") -> DataFrame:
+    """Tumbling-window counts with a 10-minute late-data watermark
+    (streaming DF in → streaming DF out; also works on a batch DF for
+    testing the plan)."""
+    src = events.withWatermark("ts", "10 minutes") if events.isStreaming else events
     return src.groupBy(
         F.window("ts", window).alias("win"), F.col("event_type")
     ).agg(F.count("*").alias("n"))
@@ -120,11 +140,10 @@ def dedup_stream(
     events: DataFrame,
     keys: list[str] | None = None,
     watermark: str = "10 minutes",
-    ts_col: str = "ts",
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """Streaming exact dedup — the streaming twin of A5/exact_dedup:
-    `dropDuplicatesWithinWatermark` keeps per-key state only for the
+    `dropDuplicatesWithinWatermark` on `ts` keeps per-key state only for the
     watermark horizon, so state size is bounded by the duplicate-arrival
     window instead of the full stream history (the correct 100 TB/day
     shape; an unbounded dropDuplicates would OOM the state store).
@@ -136,7 +155,7 @@ def dedup_stream(
     columns are deterministic."""
     keys = keys or ["event_id"]
     if events.isStreaming:
-        return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
             keys
         )
     if tiebreak:
@@ -157,7 +176,6 @@ def stream_pages_to_linked_triples(
     output_path: str,
     checkpoint_path: str,
     entity_dict: DataFrame,
-    max_files_per_trigger: int = 4,
 ):
     """Streaming twin of the FULL KG pipeline's per-page path: each
     micro-batch of landed pages runs extract → S+T → broadcast entity LINK
@@ -172,15 +190,6 @@ def stream_pages_to_linked_triples(
     from darkbo_spark.kg.link import link_entities
 
     write = _batch_id_sink(output_path, checkpoint_path)
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        # micro-batch size = the latency/throughput knob: small batches
-        # cut landed-to-linked latency, big batches amortize per-batch
-        # fixed costs toward batch-job throughput (measured sweep:
-        # BENCH/BASELINE.md "Streaming ingest vs batch")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         write(
@@ -188,11 +197,8 @@ def stream_pages_to_linked_triples(
             batch_id,
         )
 
-    return (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _micro_batches(
+        spark, PAGES_SCHEMA, input_path, checkpoint_path, 4, process_batch
     )
 
 
@@ -203,11 +209,10 @@ def stream_asof_candidates(
     out_path: str,
     checkpoint_path: str,
     horizon: str = "30 days",
-    watermark: str = "1 hour",
 ):
-    """Watermarked STREAM-STREAM interval join — the streaming leg of the
-    as-of twin (batch form: operators/asof.as_of_join, driver-oracled as
-    asof_events_orders).
+    """Watermarked (1 hour) STREAM-STREAM interval join — the streaming
+    leg of the as-of twin (batch form: operators/asof.as_of_join,
+    driver-oracled as asof_events_orders).
 
     Structured Streaming cannot express "latest right row ≤ ts" in one
     operator, but the canonical decomposition is:
@@ -228,7 +233,7 @@ def stream_asof_candidates(
         spark.readStream.schema("event_id long, user_id long, ts timestamp")
         .option("maxFilesPerTrigger", 1)
         .parquet(events_path)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 hour")
         .alias("e")
     )
     od = (
@@ -237,7 +242,7 @@ def stream_asof_candidates(
         )
         .option("maxFilesPerTrigger", 1)
         .parquet(orders_path)
-        .withWatermark("o_orderdate", watermark)
+        .withWatermark("o_orderdate", "1 hour")
         .alias("o")
     )
     cond = F.expr(
@@ -312,10 +317,16 @@ def _session_fn(gap_seconds: int):
                 }
             )
             return
-        ts_list: list[int] = []
-        for pdf in pdfs:
-            ts_list.extend(int(t.value // 1000) for t in pdf["ts"])
-        ts_list.sort()
+        # [start_us, end_us, n]: one point per new event, plus the open
+        # session from state
+        points = [
+            [us, us, 1]
+            for pdf in pdfs
+            for us in (int(t.value // 1000) for t in pdf["ts"])
+        ]
+        if state.exists:
+            points.append(list(state.get))
+        points.sort()
         gap_us = gap_seconds * 1_000_000
         # interval-merge semantics so LATE (out-of-order, cross-batch)
         # events behave like the batch twin: an event within `gap` BEFORE
@@ -324,25 +335,13 @@ def _session_fn(gap_seconds: int):
         # absorbed. Residual divergence vs batch: a session already emitted
         # can't be reopened by even-later arrivals — inherent to streaming
         # without watermark buffering.
-        intervals: list[list[int]] = []  # [start_us, end_us, n]
-        for t in ts_list:
-            if intervals and t - intervals[-1][1] <= gap_us:
-                intervals[-1][1] = max(intervals[-1][1], t)
-                intervals[-1][2] += 1
+        intervals: list[list[int]] = []
+        for iv in points:
+            if intervals and iv[0] - intervals[-1][1] <= gap_us:
+                intervals[-1][1] = max(intervals[-1][1], iv[1])
+                intervals[-1][2] += iv[2]
             else:
-                intervals.append([t, t, 1])
-        if state.exists:
-            s0, l0, n0 = state.get
-            intervals.append([s0, l0, n0])
-            intervals.sort()
-            merged: list[list[int]] = []
-            for iv in intervals:
-                if merged and iv[0] - merged[-1][1] <= gap_us:
-                    merged[-1][1] = max(merged[-1][1], iv[1])
-                    merged[-1][2] += iv[2]
-                else:
-                    merged.append(iv)
-            intervals = merged
+                intervals.append(iv)
         *closed_iv, open_iv = intervals
         closed = [tuple(iv) for iv in closed_iv]
         state.update((open_iv[0], open_iv[1], open_iv[2]))
@@ -399,16 +398,14 @@ def read_tf_index(spark: SparkSession, index_dir: str):
     tbl = SnapshotTable(index_dir, "tf_index")
     cur = tbl.current()
     if cur is None:
-        tf = spark.createDataFrame([], _TF_SCHEMA)
-        stats = spark.createDataFrame(
-            pd.DataFrame({"n_docs": [0], "sum_dl": [0]})
-        ).select(F.col("n_docs").cast("long"), F.col("sum_dl").cast("long"))
-        return tf, stats
-    meta = next(m for m in tbl.versions() if m["version"] == cur["version"])
+        tf, meta = spark.createDataFrame([], _TF_SCHEMA), {"n_docs": 0, "sum_dl": 0}
+    else:
+        tf = tbl.read(spark)
+        meta = next(m for m in tbl.versions() if m["version"] == cur["version"])
     stats = spark.createDataFrame(
         pd.DataFrame({"n_docs": [meta["n_docs"]], "sum_dl": [meta["sum_dl"]]})
     ).select(F.col("n_docs").cast("long"), F.col("sum_dl").cast("long"))
-    return tbl.read(spark), stats
+    return tf, stats
 
 
 def stream_docs_to_tf_index(
@@ -441,12 +438,6 @@ def stream_docs_to_tf_index(
     from darkbo_spark.operators.tfidf import merge_tf_delta
     from darkbo_spark.storage.snapshots import SnapshotTable
 
-    docs = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         tbl = SnapshotTable(index_dir, "tf_index")
         fp = f"batch{batch_id}"
@@ -466,11 +457,9 @@ def stream_docs_to_tf_index(
         )
         tbl.expire(retain_last=3)
 
-    return (
-        docs.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _micro_batches(
+        spark, DOCS_SCHEMA, input_path, checkpoint_path,
+        max_files_per_trigger, process_batch,
     )
 
 
@@ -521,12 +510,6 @@ def stream_pages_to_kg_upsert(
     def _bucket(col):
         return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_path)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os
 
@@ -572,9 +555,7 @@ def stream_pages_to_kg_upsert(
                     os.path.join(kg_path, f"url_bucket={b}"), ignore_errors=True
                 )
 
-    return (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    return _micro_batches(
+        spark, PAGES_SCHEMA, input_path, checkpoint_path,
+        max_files_per_trigger, process_batch,
     )

@@ -30,6 +30,12 @@ from darkbo_spark.functions import text_analysis as ta
 from darkbo_spark.storage.stages import WAIT_S, StageResult, stage_run
 
 CODE_VERSION = "tp1"
+# the stage settings of the composed twin (queries/pipeline_queries.py);
+# they render into the stage params, so changing one invalidates its stage
+QUALITY_MIN = 0.7
+CAP_K = 5
+SAMPLE_SALT = "pipe1"
+SHARD_BUDGET = 2000
 
 
 def run_training_pipeline(
@@ -39,11 +45,7 @@ def run_training_pipeline(
     input_fingerprint: str,
     domain_col,
     domain_desc: str,
-    quality_min: float = 0.7,
-    cap_k: int = 5,
     sample_fraction: float = 0.8,
-    sample_salt: str = "pipe1",
-    shard_budget: int = 2000,
 ) -> StageResult:
     """docs must carry (doc_id, text, lang, n_chars); `domain_col` is a
     Column over those columns yielding the registered domain (a URL
@@ -60,10 +62,10 @@ def run_training_pipeline(
     ) as run:
         stage = run.stage
         gated_tbl, fp1 = stage(
-            "gated", input_fingerprint, f"q{quality_min}",
+            "gated", input_fingerprint, f"q{QUALITY_MIN}",
             lambda: docs.filter(
                 (ta.lang_id_heuristic(F.col("text")) == "en_like")
-                & (ta.quality_score(F.col("text")) >= quality_min)
+                & (ta.quality_score(F.col("text")) >= QUALITY_MIN)
             ).select("doc_id", "text", "lang", "n_chars"),
         )
         dd_tbl, fp2 = stage(
@@ -72,27 +74,27 @@ def run_training_pipeline(
             .select("doc_id", "text", "lang", "n_chars"),
         )
         cap_tbl, fp3 = stage(
-            "capped", fp2, f"k{cap_k}|{domain_desc}",
+            "capped", fp2, f"k{CAP_K}|{domain_desc}",
             lambda: cap_per_domain(
                 dd_tbl.read(spark).withColumn("domain", domain_col),
-                k=cap_k,
+                k=CAP_K,
                 order_by=[F.col("n_chars").desc()],
             ).select("doc_id", "domain", "text", "n_chars"),
         )
         samp_tbl, fp4 = stage(
-            "sampled", fp3, f"f{sample_fraction}:{sample_salt}",
+            "sampled", fp3, f"f{sample_fraction}:{SAMPLE_SALT}",
             lambda: deterministic_sample(
-                cap_tbl.read(spark), sample_fraction, salt=sample_salt
+                cap_tbl.read(spark), sample_fraction, salt=SAMPLE_SALT
             ),
         )
         stage(
-            "packed", fp4, f"b{shard_budget}",
+            "packed", fp4, f"b{SHARD_BUDGET}",
             lambda: pack_shards(
                 samp_tbl.read(spark).select(
                     "doc_id", "domain",
                     ta.token_count(F.col("text")).cast("bigint").alias("n_tokens"),
                 ),
-                budget=shard_budget,
+                budget=SHARD_BUDGET,
             ),
         )
     return run.result

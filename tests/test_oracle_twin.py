@@ -235,8 +235,10 @@ def test_linked_twin_chain_serves_rewritten_documents(spark, sf_dir, tmp_path):
     """The persisted linked twin chain is memoized under the documents'
     corpus fingerprint: after documents.parquet is rewritten outside the
     session with pages 0-59 only, kg_linked_x links those pages, not the
-    persisted rows of the 240-page corpus."""
-    from darkbo_spark.queries.kg_queries import kg_linked_twin
+    persisted rows of the 240-page corpus, and the superseded chain is
+    dropped from the memo and unpersisted."""
+    from darkbo_spark.queries.common import _corpus_fp, session_plan_memo
+    from darkbo_spark.queries.kg_queries import _kg_linked_twin, kg_linked_twin
 
     def page_ids():
         rows = kg_linked_twin(spark, sf).select("url").distinct().collect()
@@ -245,16 +247,25 @@ def test_linked_twin_chain_serves_rewritten_documents(spark, sf_dir, tmp_path):
     sf = str(tmp_path)
     _write_documents(sf_dir, sf, 240)
     assert max(page_ids()) >= 60
+    old_fp, old_chain = _corpus_fp(sf, "documents"), _kg_linked_twin(spark, sf)
+    assert old_chain.is_cached
     _write_documents(sf_dir, sf, 60)
     ids = page_ids()
     assert ids and max(ids) < 60
+    assert not any(old_fp in k for k in session_plan_memo(spark))
+    assert not old_chain.is_cached
 
 
 def test_neardup_clusters_serve_rewritten_documents(spark, sf_dir, tmp_path):
     """The memoized near-dup clusters frame follows a rewritten
     documents.parquet too: with documents 0-59 only, every clustered id
-    is one of those docs or its planted duplicate (id + 100000)."""
-    from darkbo_spark.queries.dedup_queries import neardup_clusters_portable
+    is one of those docs or its planted duplicate (id + 100000), and the
+    superseded frame leaves the memo."""
+    from darkbo_spark.queries.common import _corpus_fp, session_plan_memo
+    from darkbo_spark.queries.dedup_queries import (
+        _neardup_clusters_shared,
+        neardup_clusters_portable,
+    )
 
     def doc_ids():
         rows = neardup_clusters_portable(spark, sf).collect()
@@ -263,9 +274,14 @@ def test_neardup_clusters_serve_rewritten_documents(spark, sf_dir, tmp_path):
     sf = str(tmp_path)
     _write_documents(sf_dir, sf, 240)
     assert max(doc_ids()) >= 60
+    old_fp = _corpus_fp(sf, "documents")
+    old_frame = _neardup_clusters_shared(spark, sf)
     _write_documents(sf_dir, sf, 60)
     ids = doc_ids()
     assert ids and max(ids) < 60
+    assert not any(old_fp in k for k in session_plan_memo(spark))
+    assert not any(v is old_frame for v in session_plan_memo(spark).values())
+    assert not old_frame.is_cached
 
 
 def test_one_persisted_chain_per_dictionary(spark, sf_dir):

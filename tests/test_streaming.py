@@ -205,6 +205,27 @@ def test_session_fn_late_event_cross_batch():
     assert n == 1  # the 2:00 session stays open, uncorrupted
 
 
+def test_session_fn_merges_late_far_and_bridging_events():
+    """One micro-batch carrying a late event inside the gap before the
+    open session, one far back and one that bridges the open session to a
+    later event: the far one closes as its own session, the rest merge
+    into one open session — the batch twin's gap rule over all events."""
+    from darkbo_spark.streaming.ingest import _session_fn
+
+    fn = _session_fn(30 * 60)  # 30-minute gap
+    st = _FakeState()
+    assert _run_batch(fn, st, [120, 130]) == []   # open session 2:00-2:10
+    # 1:40 (late, within gap), 0:00 (far back), 2:35 bridges 2:10 → 3:00
+    out = _run_batch(fn, st, [180, 0, 100, 155])
+    assert len(out) == 1
+    assert out[0].session_start.dt.minute.tolist() == [0]
+    assert out[0].session_end.dt.minute.tolist() == [0]
+    assert out[0].n_events.tolist() == [1]
+    s, e, n = st.get
+    start, end = pd.Timestamp(s, unit="us"), pd.Timestamp(e, unit="us")
+    assert (start.hour, start.minute, end.hour, end.minute, n) == (1, 40, 3, 0, 5)
+
+
 def test_stream_asof_join_restart(spark, tmp_path):
     """Watermarked stream-stream interval join + as-of reduction equals the
     batch as_of_join, across a kill-restart in the middle of the input
