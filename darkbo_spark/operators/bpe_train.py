@@ -30,8 +30,8 @@ from pyspark.sql import functions as F
 from darkbo_spark.functions.bpe import _BPE_RE, train_from_word_freqs
 
 
-def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, freq) over the BPE pre-tokenization of the corpus — the
+def word_freqs(docs: DataFrame) -> DataFrame:
+    """(word, freq) over the BPE pre-tokenization of the corpus `text` — the
     distributed stage of tokenizer training. Partial counting happens
     inside the Arrow batch (python-side Counter), so the exchange carries
     distinct-words-per-batch, then one hash aggregate finishes."""
@@ -40,14 +40,14 @@ def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     def count_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             c: Counter[str] = Counter()
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 if t:
                     c.update(_BPE_RE.findall(t))
             yield pd.DataFrame(
                 {"word": list(c.keys()), "freq": list(c.values())}
             )
 
-    partial = docs.select(text_col).mapInPandas(count_batches, "word string, freq long")
+    partial = docs.select("text").mapInPandas(count_batches, "word string, freq long")
     return partial.groupBy("word").agg(F.sum("freq").cast("bigint").alias("freq"))
 
 

@@ -169,6 +169,22 @@ def _capped_bucket_pairs(
 
 
 def minhash_lsh_pairs(
+    df: DataFrame, text_col: str, id_col: str, **lsh_kwargs
+) -> DataFrame:
+    """Candidate near-duplicate pairs (a < b) via banded LSH over MinHash:
+    k=16 permutations in bands=4 bands over n=3-word shingles (seed=42).
+    Buckets larger than max_bucket=500 are dropped (boilerplate skew
+    guard); persist=True keeps the banded frame cached for the three
+    branches that read it (_capped_bucket_pairs).
+
+    hash_mode="fast" buckets each band through xxhash64 (fixed-width bigint
+    keys — the production shape); "portable" uses the band's raw signature
+    values joined as a string, so DuckDB replays the IDENTICAL pipeline
+    (no xxhash64 there) and the driver can hash-verify the output."""
+    return _minhash_lsh(df, text_col, id_col, **lsh_kwargs)[0]
+
+
+def _minhash_lsh(
     df: DataFrame,
     text_col: str,
     id_col: str,
@@ -179,14 +195,10 @@ def minhash_lsh_pairs(
     max_bucket: int = 500,
     hash_mode: str = "fast",
     persist: bool = True,
-) -> DataFrame:
-    """Candidate near-duplicate pairs (a < b) via banded LSH over MinHash.
-    Buckets larger than `max_bucket` are dropped (boilerplate skew guard).
-
-    hash_mode="fast" buckets each band through xxhash64 (fixed-width bigint
-    keys — the production shape); "portable" uses the band's raw signature
-    values joined as a string, so DuckDB replays the IDENTICAL pipeline
-    (no xxhash64 there) and the driver can hash-verify the output."""
+) -> tuple[DataFrame, DataFrame]:
+    """minhash_lsh_pairs' pairs, and the banded frame they join (persisted
+    when `persist`), for a caller that can release it once it has
+    consumed the pairs."""
     assert k % bands == 0
     rows_per_band = k // bands
     sig = minhash_signatures(df, text_col, id_col, k, n, seed, hash_mode)
@@ -204,7 +216,8 @@ def minhash_lsh_pairs(
     banded = sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
-    return _capped_bucket_pairs(banded, ["band", "bucket"], [], max_bucket, persist)
+    pairs = _capped_bucket_pairs(banded, ["band", "bucket"], [], max_bucket, persist)
+    return pairs, banded
 
 
 def _simhash_nbits(hash_mode: str) -> int:
@@ -387,11 +400,16 @@ def neardup_clusters(
     """
     from darkbo_spark.operators.components import connected_components
 
+    banded = None
     if pairs is None:
-        pairs = minhash_lsh_pairs(df, text_col, id_col, **lsh_kwargs)
+        pairs, banded = _minhash_lsh(df, text_col, id_col, **lsh_kwargs)
     comps = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
+    if banded is not None:
+        # CC checkpointed its edges eagerly: nothing reads the banded
+        # frame again, and no caller holds it to unpersist it later
+        banded.unpersist()
     # component label IS the min node id (components.py contract)
     mapping = comps.select(
         F.col("node").alias(id_col), F.col("comp").alias("rep_id")

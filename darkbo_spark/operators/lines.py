@@ -23,13 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def split_lines(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, line_no, line) — 0-based positions, lines as split by \\n.
+def split_lines(docs: DataFrame) -> DataFrame:
+    """(doc_id, line_no, line) — 0-based positions, `text` split by \\n.
     Empty lines are kept positionally (they matter for faithful rebuild)
     but are never classified as boilerplate."""
     return docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("line_no", "line"),
     )
 
 

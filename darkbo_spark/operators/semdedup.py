@@ -42,14 +42,9 @@ def fixed_codebook(dim: int, n_cells: int, seed: int = 42) -> list[list[float]]:
     return out
 
 
-def assign_cells(
-    emb: DataFrame,
-    codebook: list[list[float]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, vec, cell): nearest codeword by dot product (codewords are
-    unit vectors, so argmax dot == argmax cosine). Dots are rounded to
+def assign_cells(emb: DataFrame, codebook: list[list[float]]) -> DataFrame:
+    """(vec_id, embedding, cell): nearest codeword by dot product
+    (codewords are unit vectors, so argmax dot == argmax cosine). Dots are rounded to
     9 dp BEFORE the argmax and ties take the first index — the exact rule
     the oracle replays, so cell assignment can never diverge on an
     engine's last-bit summation difference."""
@@ -57,11 +52,11 @@ def assign_cells(
     # fold expressions, parsed JVM-side in one py4j round-trip
     dots = F.expr(
         f"transform({_nested_lit_sql(codebook)},"
-        f" c -> round({_dot_sql(vec_col, 'c')}, 9))"
+        f" c -> round({_dot_sql('embedding', 'c')}, 9))"
     )
     return emb.select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         (F.array_position(dots, F.array_max(dots)) - 1).cast("int").alias("cell"),
     )
 

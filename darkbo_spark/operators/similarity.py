@@ -118,22 +118,23 @@ def lsh_topk(
 
 
 def train_ivf_centroids(
-    corpus, dim: int, vec_col: str = "embedding", id_col: str = "vec_id",
-    n_cells: int = 16, n_train: int = 2000, iters: int = 8, seed: int = 42
+    corpus, dim: int, n_cells: int = 16, n_train: int = 2000, iters: int = 8,
+    seed: int = 42
 ) -> list[list[float]]:
-    """Coarse quantizer for IVF: Lloyd's k-means on a deterministic bounded
-    sample (lowest-id rows), trained driver-side — the standard IVF pattern
-    (the quantizer is tiny; the INDEX is distributed). Seeded init, fixed
-    iteration count → bit-reproducible across runs and parallelism."""
+    """Coarse quantizer for IVF: Lloyd's k-means over `embedding` on a
+    deterministic bounded sample (lowest `vec_id` rows), trained
+    driver-side — the standard IVF pattern (the quantizer is tiny; the
+    INDEX is distributed). Seeded init, fixed iteration count →
+    bit-reproducible across runs and parallelism."""
     import numpy as np
 
     pdf = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.asc(id_col))
+        corpus.select("vec_id", "embedding")
+        .orderBy(F.asc("vec_id"))
         .limit(n_train)
         .toPandas()
     )
-    x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+    x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
     if x.shape[1] != dim:
         raise ValueError(f"embedding width {x.shape[1]} != declared dim {dim}")
     x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)

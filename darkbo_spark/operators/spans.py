@@ -90,18 +90,16 @@ def _tokens_for(text_col: str, tokenizer: str) -> F.Column:
 
 def window_fingerprints(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     hash_mode: str = "fast",
     tokenizer: str = "space",
 ) -> DataFrame:
-    """(doc_id, pos, fp): the hash of every n-token window, with its
+    """(doc_id, pos, fp): the hash of every n-token window of `text`, with its
     0-based token position. Documents shorter than n tokens have no
     windows. Native slide (transform + slice + concat_ws) → posexplode;
     the shuffle payload downstream is the 8-byte fp, not the string."""
     base = df.select(
-        F.col(id_col).alias("doc_id"), _tokens_for(text_col, tokenizer).alias("_t")
+        F.col("doc_id").alias("doc_id"), _tokens_for("text", tokenizer).alias("_t")
     ).filter(F.size("_t") >= n)
     fps = F.transform(
         F.sequence(F.lit(0), F.size("_t") - n),

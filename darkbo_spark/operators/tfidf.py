@@ -230,9 +230,7 @@ def score_query(postings: DataFrame, query_terms: list[str], top_k: int = 10) ->
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
 
 
-def build_tf_index(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame]:
+def build_tf_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The INCREMENTAL form of the sparse index: instead of final BM25
     weights (which depend on global df/avgdl and would all change when one
     document lands), store the RAW sufficient statistics —
@@ -256,10 +254,10 @@ def build_tf_index(
     (tf=0, dl=0): the index is then a complete doc roster, so
     merge_tf_delta can account a replacement of an empty doc exactly, and
     query-time term joins never see the sentinel (no term equals NULL)."""
-    tf = _term_freq(docs, text_col, id_col, persist=False)
+    tf = _term_freq(docs, "text", "doc_id", persist=False)
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     empty = (
-        docs.select(F.col(id_col).alias("doc_id"))
+        docs.select(F.col("doc_id").alias("doc_id"))
         .distinct()
         .join(dl, "doc_id", "left_anti")
         .select(

@@ -432,8 +432,9 @@ ORDER BY id_a, id_b
 @_q("minhash_lsh_pairs_x", _minhash_portable_oracle(16, 4, 3, 42, 500))
 def minhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _neardup_corpus(spark, sf_dir)
-    # persist=True: same banded canonical plan as neardup_clusters_x /
-    # dedup_keep_best_x — one in-session cache entry serves all three
+    # persist=True: the banded frame feeds the bucket sizes and both join
+    # sides. neardup_clusters releases its copy of the same plan once CC
+    # has checkpointed the pairs, so this entry is built here
     return minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4, hash_mode="portable")
 
 

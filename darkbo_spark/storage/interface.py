@@ -18,7 +18,10 @@ Contract semantics (what the shared tests pin):
     incremental no-op returning the current version id when `fingerprint`
     matches the active version.
   * `read(spark)` returns the current version; raises FileNotFoundError
-    when nothing is committed.
+    when nothing is committed. It keeps the published columns, their
+    order and their types. The commit records the version's schema (in
+    Iceberg's table metadata; in SnapshotTable's meta.json marker), so
+    SnapshotTable opens a version without a Spark job.
   * `versions()` lists committed versions oldest-first as dicts carrying
     at least {"seq": int, "fingerprint": str}; `read_version(spark, seq)`
     is time travel to one of them.

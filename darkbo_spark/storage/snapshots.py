@@ -17,6 +17,14 @@ Layout:
     {base}/{name}/v{seq:05d}_{fp8}/        parquet files (written by Spark)
     {base}/{name}/v{seq:05d}_{fp8}/meta.json   (written LAST → commit marker)
     {base}/{name}/current.json             atomic pointer {version, fingerprint}
+
+The commit marker carries the version's Spark schema (the data columns;
+partition columns come back from the directory names, as they do for an
+inferring read), the part of Iceberg's table metadata a reader needs: a
+version opens with that schema and launches no Spark job, where
+inferring it from a parquet footer costs a one-task job per open. A
+marker committed before schemas were recorded has no "schema" key; that
+version opens with the inferring read.
 """
 
 from __future__ import annotations
@@ -30,6 +38,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class SnapshotTable:
@@ -97,12 +106,16 @@ class SnapshotTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
+        meta_pb = list(partition_by or [])
         meta = {
             "version": version,
             "seq": seq,
             "fingerprint": fingerprint,
             "wall_s": round(time.time() - t0, 3),
-            "partition_by": list(partition_by or []),
+            "partition_by": meta_pb,
+            "schema": StructType(
+                [f for f in df.schema.fields if f.name not in meta_pb]
+            ).jsonValue(),
             **(extra_meta or {}),
         }
         # meta.json written last = commit marker (crash before this → version
@@ -128,18 +141,15 @@ class SnapshotTable:
         switch at the pointer swap (Iceberg analog: rewrite_data_files).
         Callers coordinating with concurrent publishers should hold the
         table's BuildLock, same as any publish."""
-        cur = self.current()
-        if cur is None:
-            raise FileNotFoundError(f"no current version for table {self.name}")
-        meta = next(m for m in self.versions() if m["version"] == cur["version"])
+        meta = self._current_meta()
         pb = meta.get("partition_by") or None
-        df = self.read(spark)
+        df = self._open(spark, meta)
         df = df.repartition(*pb) if pb else df.repartition(target_files)
         # cut lineage: the new version's write must not depend on files a
         # concurrent expire() of old versions could remove mid-job
         df = df.localCheckpoint(eager=True)
         return self._write_version(
-            df, cur["fingerprint"], pb, {"compacted_from": cur["version"]}
+            df, meta["fingerprint"], pb, {"compacted_from": meta["version"]}
         )
 
     def data_files(self) -> list[str]:
@@ -155,7 +165,21 @@ class SnapshotTable:
 
     # -- read ---------------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.data_path())
+        return self._open(spark, self._current_meta())
+
+    def _current_meta(self) -> dict:
+        """The commit marker of the version `current` points at."""
+        vdir = os.path.dirname(self.data_path())
+        with open(os.path.join(vdir, "meta.json")) as f:
+            return json.load(f)
+
+    def _open(self, spark: SparkSession, meta: dict) -> DataFrame:
+        """The committed version `meta` describes, opened with the schema
+        its marker carries (no Spark job); a marker without one infers it."""
+        reader = spark.read
+        if "schema" in meta:
+            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        return reader.parquet(os.path.join(self.dir, meta["version"], "data"))
 
     def data_path(self) -> str:
         cur = self.current()
@@ -185,9 +209,7 @@ class SnapshotTable:
         expire() keeps the last N."""
         for meta in self.versions():
             if meta["seq"] == seq:
-                return spark.read.parquet(
-                    os.path.join(self.dir, meta["version"], "data")
-                )
+                return self._open(spark, meta)
         raise FileNotFoundError(
             f"no committed version seq={seq} for table {self.name} (expired?)"
         )
@@ -381,11 +403,7 @@ def maintain(
     files_before = table.data_files()
     bytes_before = sum(os.path.getsize(f) for f in files_before)
     dirs_before = {os.path.dirname(f) for f in files_before}
-    cur = table.current()
-    meta = next(
-        (m for m in table.versions() if cur and m["version"] == cur["version"]), {}
-    )
-    partitioned = bool(meta.get("partition_by"))
+    partitioned = bool(table._current_meta().get("partition_by"))
     threshold = len(dirs_before) if partitioned else target_files
     needs_compact = len(files_before) > threshold
 

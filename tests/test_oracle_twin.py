@@ -284,6 +284,21 @@ def test_neardup_clusters_serve_rewritten_documents(spark, sf_dir, tmp_path):
     assert not old_frame.is_cached
 
 
+def test_neardup_clusters_leave_no_cache_after_clear(spark, sf_dir):
+    """Everything neardup_clusters_x persists is released by
+    clear_session_memo: the memoized clusters frame, and the banded
+    MinHash frame, which neardup_clusters unpersists once connected
+    components has checkpointed the pairs."""
+    from darkbo_spark.queries.common import clear_session_memo
+    from darkbo_spark.queries.dedup_queries import neardup_clusters_portable
+
+    spark.catalog.clearCache()
+    clear_session_memo(spark)
+    assert neardup_clusters_portable(spark, sf_dir).count() > 0
+    clear_session_memo(spark)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_one_persisted_chain_per_dictionary(spark, sf_dir):
     """kg_linked_x and the crawl-dated fact queries read ONE persisted
     chain for the default dictionary, and the NIL-mining queries, which

@@ -405,3 +405,110 @@ def test_maintain_pipeline_excluded_by_pipeline_lock(spark, tmp_path):
     rows = maintain_pipeline(spark, base, retain_last=3)
     assert [r["table"] for r in rows] == ["kg_triples"]
     assert rows[0]["compacted"] is True
+
+
+def _jobs_in(spark, fn):
+    """(fn's result, number of Spark jobs it launched), counted in a job
+    group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _assert_schema_as_inferred(spark, t):
+    """read() and read_version() of the current version carry the schema
+    Spark infers from the version's parquet files."""
+    want = spark.read.parquet(t.data_path()).schema
+    assert t.read(spark).schema == want, t.name
+    assert t.read_version(spark, t.current()["seq"]).schema == want, t.name
+
+
+def test_read_opens_with_stored_schema_without_jobs(spark, tmp_path):
+    """A version's marker carries its schema (data columns only), so
+    read() and read_version() open it without a Spark job; a marker
+    without one (committed before schemas were recorded) reads the same
+    rows through the inferring read, which costs a job."""
+    import json
+
+    t = SnapshotTable(str(tmp_path), "sch")
+    df = spark.createDataFrame(
+        pd.DataFrame({"k": [i % 3 for i in range(30)], "x": range(30),
+                      "s": [f"r{i}" for i in range(30)]})
+    )
+    t.publish(df, "fp_s", partition_by=["k"])
+    meta_path = os.path.join(os.path.dirname(t.data_path()), "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert [f["name"] for f in meta["schema"]["fields"]] == ["x", "s"]
+    cur, jobs = _jobs_in(spark, lambda: t.read(spark))
+    assert jobs == 0
+    v1, jobs = _jobs_in(spark, lambda: t.read_version(spark, 1))
+    assert jobs == 0
+    want = sorted(map(tuple, cur.select("x", "s", "k").collect()))
+    assert len(want) == 30
+    assert sorted(map(tuple, v1.select("x", "s", "k").collect())) == want
+
+    del meta["schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    legacy, jobs = _jobs_in(spark, lambda: t.read(spark))
+    assert jobs >= 1  # the footer read the stored schema saves
+    assert legacy.schema == cur.schema
+    assert sorted(map(tuple, legacy.select("x", "s", "k").collect())) == want
+    assert t.read_version(spark, 1).schema == cur.schema
+
+
+def test_stored_schema_equals_inferred(spark, tmp_path):
+    """The stored schema is the one an inferring read finds: partition
+    columns come back from the directory names (a numeric-string key
+    infers as int, as before), a zero-row version keeps its columns, and
+    a compacted version records the same schema again."""
+    from pyspark.sql import functions as F
+
+    base = spark.range(40).select(
+        F.col("id"),
+        (F.col("id") % 4).cast("int").alias("ik"),
+        (F.col("id") % 3).cast("string").alias("sk"),
+        F.array(F.col("id").cast("string")).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.lit(1.5).alias("b")).alias("st"),
+        F.create_map(F.lit("m"), F.col("id")).alias("mp"),
+        F.to_date(F.lit("2024-01-02")).alias("d"),
+    )
+    cases = [
+        ("int_keys", base, ["ik"]),
+        ("str_keys", base, ["sk"]),
+        ("two_keys", base, ["sk", "ik"]),
+        ("zero_rows", base.filter(F.lit(False)), None),
+        ("plain", base.repartition(4), None),
+    ]
+    for name, df, pb in cases:
+        t = SnapshotTable(str(tmp_path), name)
+        t.publish(df, f"fp_{name}", partition_by=pb)
+        _assert_schema_as_inferred(spark, t)
+        assert t.read(spark).count() == df.count(), name
+    for name in ("int_keys", "plain"):
+        t = SnapshotTable(str(tmp_path), name)
+        t.compact(spark)
+        assert t.versions()[-1]["compacted_from"]
+        _assert_schema_as_inferred(spark, t)
+
+
+def test_kg_tables_read_with_inferred_schema(spark, tmp_path):
+    """Every table a facts_asof + mine_nil pipeline run publishes reads
+    back with the schema an inferring read finds."""
+    from darkbo_spark.kg.pipeline import run_pipeline
+
+    res = run_pipeline(
+        spark, str(tmp_path), n_pages=40, seed=7, facts_asof="2024-01-02",
+        mine_nil=True,
+    )
+    assert len(res.tables) == 11
+    for t in res.tables.values():
+        _assert_schema_as_inferred(spark, t)

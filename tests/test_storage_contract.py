@@ -95,3 +95,23 @@ def test_factory_env_seam(tmp_path, monkeypatch):
 def test_iceberg_backend_present():
     """Marker test: visible skip when the real-Iceberg backend can't run."""
     from darkbo_spark.storage.iceberg import IcebergTable  # noqa: F401
+
+
+def test_read_keeps_published_columns(spark, make):
+    """read() and read_version() hand back the published columns, in
+    order, with their types."""
+    from pyspark.sql import functions as F
+
+    t = make("c4")
+    df = spark.range(6).select(
+        F.col("id"),
+        F.concat(F.lit("r"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") / 2).alias("h"),
+    )
+    t.publish(df, "fp_cols")
+    want = [(f.name, f.dataType) for f in df.schema.fields]
+    assert [(f.name, f.dataType) for f in t.read(spark).schema.fields] == want
+    seq = t.versions()[-1]["seq"]
+    got = t.read_version(spark, seq)
+    assert [(f.name, f.dataType) for f in got.schema.fields] == want
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, df.collect()))
