@@ -89,10 +89,11 @@ def canonicalize_entities(entity_dict: DataFrame, mode: str = "auto") -> DataFra
     """
     if mode == "auto":
         mode = "driver" if dictionary_fits_driver(entity_dict) else "distributed"
-    pairs = _alias_pairs(entity_dict)
     if mode == "driver":
-        return _driver_cc(pairs)
-    edges = pairs.select(
+        # collected whole to the driver: prepped in one partition, the
+        # distinct needs no shuffle
+        return _driver_cc(_alias_pairs(entity_dict.coalesce(1)))
+    edges = _alias_pairs(entity_dict).select(
         F.concat(F.lit("e:"), "eid").alias("src"),
         F.concat(F.lit("a:"), "alias_norm").alias("dst"),
     )

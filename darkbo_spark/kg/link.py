@@ -87,6 +87,10 @@ def link_entities(
 ) -> DataFrame:
     """Attach subj_eid / obj_eid by exact normalized-alias match. Unmatched
     surfaces keep null eids (literals: years, free-text objects)."""
+    if strategy == "broadcast":
+        # the dictionary is collected whole to be broadcast: prepped in one
+        # partition, its aggregate needs no shuffle
+        entity_dict = entity_dict.coalesce(1)
     dict_norm = _prep_dict(entity_dict)
     out = _link_side(raw_triples, dict_norm, "subj", "subj_eid", strategy)
     return _link_side(out, dict_norm, "obj", "obj_eid", strategy)

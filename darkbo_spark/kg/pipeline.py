@@ -1,7 +1,12 @@
 """End-to-end KG construction pipeline with per-stage checkpoint-resume.
 
-    pages ─E→ docs ─S+T→ raw_triples ─L→ linked ─C/M→ kg_triples
-                                                └───→ kg_entities
+    dictionary ─C→ eid_map ─→ kg_entities
+                      └───────────────┐
+    pages ─E→ docs ─S+T→ raw_triples ─L+M→ kg_triples ─→ kg_nil_candidates
+               │                              │
+               └─ warc_ts ─→ fact envelope ←──┘  (one persisted aggregate)
+                               └─→ kg_facts, kg_conflicts, kg_entity_types,
+                                   kg_fact_history, kg_entity_profiles
 
 Every stage runs through storage/stages.stage_run: its output is a
 SnapshotTable version whose fingerprint is
@@ -24,14 +29,24 @@ One dictionary-size decision per run (kg/canonicalize
 .dictionary_fits_driver, made lazily by the first stage that builds)
 picks every plan that collects the dictionary to the driver: union-find
 vs distributed CC, driver vs distributed entity table, single-file vs
-bucketed fusion tables. Rows and fingerprints do not depend on it. The
-link always broadcasts the dictionary.
+bucketed fusion tables (and a one-partition vs shuffle-partitioned fusion
+envelope). Rows and fingerprints do not depend on it. The link always
+broadcasts the dictionary.
 
-Concurrency is one ThreadPoolExecutor: the dictionary stages (C) run as
-one future beside the page stages, the fusion stages as one future each,
-and `.result()` re-raises a stage's failure in the calling thread. The
-kg_triples write salt is kg/materialize.WRITE_SALT and NIL mining keeps
-surfaces seen at least twice; both are in the stage params.
+The five fusion tables (`facts_asof=`) are derivations of ONE persisted
+envelope aggregate of kg_triples ⋈ docs on the (subj_eid, pred, obj)
+fact key (kg/temporal.fusion_envelopes), so the mention stream is joined
+and shuffled once for all five. kg_fact_history, a projection, fills the
+envelope; the other four start once it has.
+
+Concurrency is one ThreadPoolExecutor, and each stage starts once the
+tables it reads are published: eid_map runs beside the page stages,
+kg_entities is submitted the moment eid_map publishes, kg_triples waits
+for raw_triples and eid_map only, and kg_nil_candidates runs beside the
+five fusion stages. Every future is `.result()`ed, which re-raises a
+stage's failure in the calling thread. The kg_triples write salt is
+kg/materialize.WRITE_SALT and NIL mining keeps surfaces seen at least
+twice; both are in the stage params.
 """
 
 from __future__ import annotations
@@ -65,6 +80,13 @@ from darkbo_spark.storage.stages import (
 )
 
 CODE_VERSION = "1"
+# stages in flight at once: the dictionary thread and the entity table
+# beside the page stages, then NIL mining and the fusion stages (an A/B
+# measured all fusion stages in flight fastest — medians 2→3.39 s,
+# 3→3.12 s, 5→2.36 s at 100k pages, OPTIMIZATION_r08.md §9). A
+# job-count, not a core-count: under FIFO scheduling excess in-flight
+# jobs just queue on a saturated cluster.
+_POOL_WORKERS = 6
 
 
 def run_pipeline(
@@ -132,18 +154,18 @@ def run_pipeline(
         )
     assert input_fingerprint, "provide input_fingerprint for external pages input"
 
-    # one pool for every concurrent stage: the dictionary future, then the
-    # five fusion stages all in flight (the dictionary future has finished
-    # before they start). On an exception the pool waits for its running
-    # stages before stage_run releases the lock.
+    # one pool for every concurrent stage: each stage is submitted as
+    # soon as the tables it reads are published, so nothing waits on a
+    # stage it does not read. On an exception the pool waits for its
+    # running stages before stage_run releases the lock.
     with stage_run(spark, out_dir, "pipeline", CODE_VERSION) as run, \
-            ThreadPoolExecutor(max_workers=5) as pool:
+            ThreadPoolExecutor(max_workers=_POOL_WORKERS) as pool:
         stage = run.stage
         # ---- C: canonicalize — depends ONLY on the dictionary, so it runs
         # as a CONCURRENT future overlapping the page stages (Spark
         # schedules jobs from separate threads onto free task slots; the
         # dictionary jobs are single-task and fill the gaps between the big
-        # stages' tasks). The two threads touch disjoint tables and
+        # stages' tasks). The threads touch disjoint tables and
         # `run.stage()` is thread-safe; `.result()` re-raises a failure
         # before anything depends on eid_map. ------------------------------
         entity_dict = (
@@ -157,20 +179,17 @@ def run_pipeline(
         # the run's one dictionary-size decision: driver-side plans while
         # the dictionary's estimated collected bytes fit the broadcast
         # budget, distributed ones beyond it. Made at most once, by the
-        # first stage that builds (the lock keeps concurrent fusion builders
-        # from racing it), so a rerun where every stage skips runs no
-        # estimate job. Both sides publish the same rows, so the params
-        # strings (content identity) leave the choice out.
-        _fits: list[bool] = []
-        _fits_lock = threading.Lock()
+        # first stage that builds (the lock keeps concurrent builders from
+        # racing it), so a rerun where every stage skips runs no estimate
+        # job. Both sides publish the same rows, so the params strings
+        # (content identity) leave the choice out.
+        fits_driver = _Once(lambda: dictionary_fits_driver(entity_dict))
 
-        def fits_driver() -> bool:
-            with _fits_lock:
-                if not _fits:
-                    _fits.append(dictionary_fits_driver(entity_dict))
-                return _fits[0]
+        # stages submitted from other threads; every one is `.result()`ed
+        # before the run returns, so no failure goes unseen
+        futures = []
 
-        def _dict_stages():
+        def _eid_map():
             eidmap_tbl, fp_m = stage(
                 "eid_map", dict_parent, "cc_v2_auto",
                 lambda: canonicalize_entities(
@@ -178,17 +197,19 @@ def run_pipeline(
                     mode="driver" if fits_driver() else "distributed",
                 ).coalesce(1),
             )
-            stage(
-                "kg_entities", fp_m, "entities_v1",
+            # the entity table reads eid_map only: it starts the moment
+            # eid_map publishes, beside the page stages and the link
+            futures.append(pool.submit(
+                stage, "kg_entities", fp_m, "entities_v1",
                 lambda: (
                     build_entity_table_driver
                     if fits_driver()
                     else build_entity_table
                 )(entity_dict, eidmap_tbl.read(spark)).coalesce(1),
-            )
+            ))
             return eidmap_tbl, fp_m
 
-        dict_future = pool.submit(_dict_stages)
+        eid_future = pool.submit(_eid_map)
         # ---- E: extract (the expensive byte-exact UDF runs exactly ONCE)
         docs_tbl, fp_d = stage(
             "docs", input_fingerprint, "clean_v1", lambda: extract_docs(pages)
@@ -198,7 +219,7 @@ def run_pipeline(
             "raw_triples", fp_d, "en_only",
             lambda: extract_doc_triples_df(docs_tbl.read(spark)),
         )
-        eidmap_tbl, fp_m = dict_future.result()
+        eidmap_tbl, fp_m = eid_future.result()
 
         # ---- fused L+M: link → bucketize in ONE pass ----------------------
         # The link dictionary is pre-resolved to CANONICAL ids (dict ⋈
@@ -237,16 +258,17 @@ def run_pipeline(
 
         # ---- optional NIL mining: the dictionary-growth worklist ----------
         # Depends only on kg_triples (unlinked surfaces are right there in
-        # the published link output). Recurring-surface-bounded — far
-        # smaller than the mention stream — so the worklist writes
-        # single-file; the NEXT run consumes it via grown_dictionary().
+        # the published link output), so it runs in the pool beside the
+        # fusion stages. Recurring-surface-bounded — far smaller than the
+        # mention stream — so the worklist writes single-file; the NEXT
+        # run consumes it via grown_dictionary().
         if mine_nil:
             from darkbo_spark.kg.temporal import nil_candidates
 
-            stage(
-                "kg_nil_candidates", fp_k, "nil_min2_v1",
+            futures.append(pool.submit(
+                stage, "kg_nil_candidates", fp_k, "nil_min2_v1",
                 lambda: nil_candidates(kg_tbl.read(spark), min_mentions=2).coalesce(1),
-            )
+            ))
 
         # ---- optional temporal fusion: facts as-of + conflict inventory ---
         # Depends on kg_triples AND docs (the per-page crawl date joins back
@@ -262,14 +284,11 @@ def run_pipeline(
         # shapes (schema and content are shape-invariant; only physical
         # layout changes, so the fingerprint — content identity — excludes
         # the shape).
+        envelope = None
         if facts_asof:
-            from darkbo_spark.kg.temporal import (
-                detect_conflicts,
-                entity_profiles,
-                entity_types,
-                fact_history,
-                resolve_facts,
-            )
+            from pyspark import StorageLevel
+
+            from darkbo_spark.kg import temporal
 
             def _fusion_shape(df: DataFrame, key_col: str) -> DataFrame:
                 out = df.withColumn(
@@ -280,62 +299,87 @@ def run_pipeline(
                     return out.coalesce(1)
                 return out.repartition(n_buckets, F.col("fact_bucket"))
 
-            # ONE join of kg_triples ⋈ docs shared by all five fusion
-            # stages, persisted for the duration of the block — unpersisted,
-            # each stage re-reads and re-joins the full triple stream (5× the
-            # dominant input). MEMORY_AND_DISK: spills instead of OOM at
-            # scale, and recompute-from-lineage stays available if evicted.
-            from pyspark import StorageLevel
+            def _envelope() -> DataFrame:
+                # ONE envelope aggregate of kg_triples ⋈ docs on the fact
+                # key (kg/temporal.fusion_envelopes), persisted for the
+                # block: the five fusion tables are derivations of this
+                # collapsed frame, so the mention stream is joined and
+                # shuffled once. While the dictionary is driver-sized the
+                # tables are written single-file anyway, so the envelope
+                # is kept in one partition too and no derivation shuffles.
+                # MEMORY_AND_DISK: spills instead of OOM at scale, and
+                # recompute-from-lineage stays available if evicted.
+                env = temporal.fusion_envelopes(
+                    kg_tbl.read(spark).join(
+                        docs_tbl.read(spark).select("url", "warc_ts"), "url"
+                    ),
+                    as_of=facts_asof,
+                )
+                if fits_driver():
+                    env = env.coalesce(1)
+                return env.persist(StorageLevel.MEMORY_AND_DISK)
 
-            linked_ts = (
-                kg_tbl.read(spark)
-                .join(docs_tbl.read(spark).select("url", "warc_ts"), "url")
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # NOTE: pre-materializing this persist before the pool (so the
-            # five concurrent jobs never race on an unfilled cache) was
-            # A/B'd and measured neutral (medians 2.22 s racing vs 2.25 s
-            # prefilled at 100k pages) — Spark's per-partition cache locking
-            # already bounds duplicated fill work, so the extra serialized
-            # pass buys nothing and is not taken.
-            try:
-                # cutoff-independent tables don't carry facts_asof in their
-                # fingerprints, so moving the cutoff recomputes kg_facts alone
-                fusion_jobs = [
-                    ("kg_facts", f"asof_{facts_asof}_v2",
-                     lambda: _fusion_shape(
-                         resolve_facts(linked_ts, as_of=facts_asof), "subj_eid"
-                     )),
-                ] + [
-                    # bind fn/key per iteration (late-binding lambda trap)
-                    (name, params,
-                     lambda fn=fn, key=key: _fusion_shape(fn(linked_ts), key))
-                    for name, params, fn, key in (
-                        ("kg_conflicts", "conflicts_v2", detect_conflicts, "subj_eid"),
-                        ("kg_entity_types", "types_v2", entity_types, "subj_eid"),
-                        ("kg_fact_history", "history_v2", fact_history, "subj_eid"),
-                        ("kg_entity_profiles", "profiles_v2", entity_profiles, "eid"),
-                    )
-                ]
-                # the five fusion tables are mutually independent (disjoint
-                # output tables, shared read-only input), so publish them
-                # from a thread pool: Spark schedules concurrent jobs onto
-                # free task slots, and the next stage's tasks back-fill the
-                # tail of the previous one (guide §2.6). All five in flight:
-                # an interleaved A/B measured that fastest (medians: 2→3.39
-                # s, 3→3.12 s, 5→2.36 s at 100k pages — OPTIMIZATION_r08.md
-                # §9). A job-count, not a core-count: under FIFO scheduling
-                # excess in-flight jobs just queue on a saturated cluster.
-                futures = [
-                    pool.submit(stage, name, fp_k + fp_d, params, build)
-                    for name, params, build in fusion_jobs
-                ]
-                wait(futures)  # every stage settles before the unpersist
-                for f in futures:
-                    f.result()  # surface the first failure
-            finally:
-                linked_ts.unpersist()
+            # made by the first fusion stage that builds, like the
+            # dictionary decision, so a rerun that skips them runs no job
+            envelope = _Once(_envelope)
+
+            def _submit(name, params, derive, key):
+                futures.append(pool.submit(
+                    stage, name, fp_k + fp_d, params,
+                    lambda: _fusion_shape(derive(envelope()), key),
+                ))
+                return futures[-1]
+
+            # kg_fact_history, a projection, fills the envelope first:
+            # the other four then read a materialized cache instead of
+            # each launching a job that waits on the fill (5 fewer
+            # jobs; an A/B against letting all five race on the fill
+            # measured it no slower). Cutoff-independent tables don't
+            # carry facts_asof in their fingerprints, so moving the
+            # cutoff recomputes kg_facts alone. The other four are
+            # mutually independent (disjoint output tables, shared
+            # read-only input), so they are in flight at once: Spark
+            # schedules concurrent jobs onto free task slots, and the
+            # next stage's tasks back-fill the tail of the previous one
+            # (guide §2.6; OPTIMIZATION_r08.md §9).
+            wait([_submit("kg_fact_history", "history_v2",
+                          temporal.history_from_envelopes, "subj_eid")])
+            _submit("kg_facts", f"asof_{facts_asof}_v2",
+                    temporal.facts_from_envelopes, "subj_eid")
+            _submit("kg_conflicts", "conflicts_v2",
+                    temporal.conflicts_from_envelopes, "subj_eid")
+            _submit("kg_entity_types", "types_v2",
+                    temporal.types_from_envelopes, "subj_eid")
+            _submit("kg_entity_profiles", "profiles_v2",
+                    temporal.profiles_from_envelopes, "eid")
+        # kg_entities was submitted from the eid_map thread, which has
+        # returned, so `futures` is complete; every stage settles before
+        # the unpersist
+        try:
+            wait(futures)
+            for f in futures:
+                f.result()  # surface the first failure
+        finally:
+            if envelope is not None and envelope.value is not None:
+                envelope.value.unpersist()
     return run.result
+
+
+class _Once:
+    """A value built by the first call, under a lock, so the stages of
+    one run that race for it share one build; `value` is None until
+    then."""
+
+    def __init__(self, build):
+        self._build = build
+        self._lock = threading.Lock()
+        self.value = None
+
+    def __call__(self):
+        with self._lock:
+            if self.value is None:
+                self.value = self._build()
+            return self.value
 
 
 def maintain_pipeline(

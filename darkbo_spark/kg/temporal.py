@@ -10,16 +10,23 @@ dict insertion order); this generalizes that to crawl-timestamped triple
 streams, the standard "fact fusion by recency" step (cf. Dong et al.,
 Knowledge Vault) re-expressed as one window/aggregate.
 
-Each fusion rule has one implementation: the envelope aggregate
-(fact_envelopes — resolve_facts and fact_history build on it) and
-latest-wins (_latest_wins — resolve_from_envelopes and fact_changes pick
-their winners with it). The crawl timestamp column is always `warc_ts`
-and the functional slots are always FUNCTIONAL_PREDS.
+Each fusion rule has one implementation. The envelope aggregate
+(fusion_envelopes) collapses the mention stream to one row per
+(subj_eid, pred, obj) fact key; fact_envelopes, the crawl's mergeable
+state, is its projection. The five fusion tables are derivations of that
+collapsed frame (*_from_envelopes), and the public resolve_facts /
+detect_conflicts / entity_types / fact_history / entity_profiles are
+"envelope, then derivation" — the code kg/pipeline.py runs over its one
+persisted envelope. Latest-wins (_latest_wins) picks the winners of
+resolve_from_envelopes and fact_changes; the modal-type vote (_type_vote)
+types kg_entity_types and kg_entity_profiles. The crawl timestamp column
+is always `warc_ts` and the functional slots are always FUNCTIONAL_PREDS.
 
-Scale shape (100 TB): both operators shuffle the triple stream ONCE on
-the (subj_eid, pred) fact key — a fine-grained key (entities × predicates),
-so no reducer sees more than one entity-slot's mentions; there is no
-self-join, no product, and the window never funnels through a single
+Scale shape (100 TB): the envelope shuffles the triple stream ONCE on
+the (subj_eid, pred, obj) fact key — a fine-grained key, map-side
+combined, so no reducer sees more than one fact's mentions; every
+derivation then moves only the COLLAPSED fact table. There is no
+self-join, no product, and no window funnels through a single
 partition. Head entities are bounded by mentions-per-slot, the same skew
 envelope as the link stage's salted join upstream.
 """
@@ -34,6 +41,10 @@ from pyspark.sql.window import Window
 # worth resolving / flagging); multi-valued predicates (acquired,
 # partnered_with, launched, works_at...) are excluded by default.
 FUNCTIONAL_PREDS = ("founded_in", "founded_by", "based_in", "is_a")
+
+
+# the crawl's envelope state schema (fact_envelopes, merge_fact_envelopes)
+_ENVELOPE_COLS = ("subj_eid", "pred", "obj", "first_ts", "last_ts", "n_mentions")
 
 
 def _latest_wins(ts: Column) -> Column:
@@ -51,58 +62,60 @@ def _latest_wins(ts: Column) -> Column:
     )
 
 
-def resolve_facts(linked: DataFrame, as_of: str) -> DataFrame:
-    """Functional-slot-aware fact resolution as of a cutoff date.
+def fusion_envelopes(linked: DataFrame, as_of: str | None = None) -> DataFrame:
+    """The collapsed fact frame every fusion table derives from: ONE
+    map-side-combinable aggregate on the fact key over the linked
+    subjects, carrying per key
 
-    * FUNCTIONAL slots (`pred` in FUNCTIONAL_PREDS) collapse to ONE
-      value — the obj asserted by the most recent page with ts on or
-      before `as_of`, ties at the winning timestamp breaking to the max
-      obj (deterministic, layout-invariant).
-    * MULTI-VALUED slots (acquired, launched, works_at, …) publish their
-      FULL value set: one row per distinct obj asserted on or before the
-      cutoff. Reference analog: the KB's dict-insertion-order
-      last-write-wins applies per unique KEY — the functional case only;
-      collapsing `acquired` to its latest object would silently drop
-      facts.
+    * first_ts / last_ts / n_mentions — the envelope over all mentions
+      (null timestamps count as mentions, and min/max skip them);
+    * given `as_of`, asof_first_ts / asof_last_ts / asof_n — the same
+      three counted only over mentions dated on or before the cutoff
+      (day-inclusive; a null timestamp is never inside it). asof_n = 0
+      marks a value first asserted after the cutoff.
 
-    The cutoff is DAY-INCLUSIVE for timestamp inputs: `as_of='2024-01-05'`
-    keeps a page crawled 2024-01-05 10:00 (`to_date(ts) <= as_of`, not a
-    midnight-upcast `ts <= as_of`).
+    obj_eid is a group key, not an aggregate: inside one link run it is a
+    function of obj (both sides link the same normalized surface), so the
+    key adds no rows, and a string key (unlike a string max) keeps the
+    aggregate hash-based. A frame without obj_eid (no linked objects)
+    groups on the fact key alone and carries a null obj_eid.
 
-    Every published value carries its validity envelope: `fact_date` =
-    most recent assertion date (the envelope end — the winning date for
-    functional slots), `first_seen` = earliest assertion date,
-    `n_mentions` = assertion count, all within the cutoff.
-
-    Scale shape: one map-side-combinable aggregate on the fine-grained
-    (subj_eid, pred, obj) fact key collapses the mention stream; the
-    latest-wins window then moves only the ALREADY-COLLAPSED fact table
-    (one row per distinct value), never the mentions — same envelope as
-    fact_support. Returns (subj_eid, pred, obj, fact_date, first_seen,
-    n_mentions)."""
-    scoped = linked.filter(F.to_date("warc_ts") <= F.lit(as_of).cast("date"))
-    return resolve_from_envelopes(fact_envelopes(scoped))
+    Returns (subj_eid, pred, obj, obj_eid, first_ts, last_ts, n_mentions
+    [, asof_first_ts, asof_last_ts, asof_n]), obj_eid last when added."""
+    has_obj_eid = "obj_eid" in linked.columns
+    ts = F.col("warc_ts")
+    aggs = [
+        F.min(ts).alias("first_ts"),
+        F.max(ts).alias("last_ts"),
+        F.count("*").cast("bigint").alias("n_mentions"),
+    ]
+    if as_of is not None:
+        in_cut = F.to_date(ts) <= F.lit(as_of).cast("date")
+        aggs += [
+            F.min(F.when(in_cut, ts)).alias("asof_first_ts"),
+            F.max(F.when(in_cut, ts)).alias("asof_last_ts"),
+            F.count(F.when(in_cut, 1)).cast("bigint").alias("asof_n"),
+        ]
+    env = (
+        linked.filter(F.col("subj_eid").isNotNull())
+        .groupBy("subj_eid", "pred", "obj", *(["obj_eid"] if has_obj_eid else []))
+        .agg(*aggs)
+    )
+    return env if has_obj_eid else env.withColumn("obj_eid", F.lit(None).cast("string"))
 
 
 def fact_envelopes(linked: DataFrame) -> DataFrame:
     """MERGEABLE sufficient statistics of the fact state: one row per
-    (subj_eid, pred, obj) with (first_ts, last_ts, n_mentions). This is
-    the table an INCREMENTAL fact state persists — max/min/count are
-    associative and commutative, so a crawl cycle's delta merges into
-    the stored state with one aggregate and NO re-read of historical
-    mentions (merge_fact_envelopes); winner selection is a separate,
-    cheap pass over the dictionary-bounded state (resolve_from_envelopes).
-    Mentions only ever ACCUMULATE (a crawl never retracts an assertion),
-    which is exactly why the envelope algebra is sufficient."""
-    return (
-        linked.filter(F.col("subj_eid").isNotNull())
-        .groupBy("subj_eid", "pred", "obj")
-        .agg(
-            F.min("warc_ts").alias("first_ts"),
-            F.max("warc_ts").alias("last_ts"),
-            F.count("*").cast("bigint").alias("n_mentions"),
-        )
-    )
+    (subj_eid, pred, obj) with (first_ts, last_ts, n_mentions) — the
+    fusion_envelopes aggregate on the fact key alone, which an
+    INCREMENTAL fact state persists. max/min/count are associative and
+    commutative, so a crawl cycle's delta merges into the stored state
+    with one aggregate and NO re-read of historical mentions
+    (merge_fact_envelopes); winner selection is a separate, cheap pass
+    over the dictionary-bounded state (resolve_from_envelopes). Mentions
+    only ever ACCUMULATE (a crawl never retracts an assertion), which is
+    exactly why the envelope algebra is sufficient."""
+    return fusion_envelopes(linked.drop("obj_eid")).select(*_ENVELOPE_COLS)
 
 
 def merge_fact_envelopes(state: DataFrame, delta: DataFrame) -> DataFrame:
@@ -111,12 +124,8 @@ def merge_fact_envelopes(state: DataFrame, delta: DataFrame) -> DataFrame:
     aggregate on the fact key over the union (min/max/sum are the
     envelope algebra). Commutative and associative: any merge order
     yields the same state, so cycles can land out of order."""
-    both = state.select(
-        "subj_eid", "pred", "obj", "first_ts", "last_ts", "n_mentions"
-    ).unionByName(
-        delta.select(
-            "subj_eid", "pred", "obj", "first_ts", "last_ts", "n_mentions"
-        )
+    both = state.select(*_ENVELOPE_COLS).unionByName(
+        delta.select(*_ENVELOPE_COLS)
     )
     return both.groupBy("subj_eid", "pred", "obj").agg(
         F.min("first_ts").alias("first_ts"),
@@ -146,26 +155,166 @@ def resolve_from_envelopes(env: DataFrame) -> DataFrame:
     )
 
 
+def facts_from_envelopes(env: DataFrame) -> DataFrame:
+    """kg_facts from a fusion_envelopes frame built with a cutoff: the
+    in-cutoff statistics as an envelope state, then resolve_from_envelopes."""
+    return resolve_from_envelopes(
+        env.filter(F.col("asof_n") > 0).select(
+            "subj_eid",
+            "pred",
+            "obj",
+            F.col("asof_first_ts").alias("first_ts"),
+            F.col("asof_last_ts").alias("last_ts"),
+            F.col("asof_n").alias("n_mentions"),
+        )
+    )
+
+
+def resolve_facts(linked: DataFrame, as_of: str) -> DataFrame:
+    """Functional-slot-aware fact resolution as of a cutoff date.
+
+    * FUNCTIONAL slots (`pred` in FUNCTIONAL_PREDS) collapse to ONE
+      value — the obj asserted by the most recent page with ts on or
+      before `as_of`, ties at the winning timestamp breaking to the max
+      obj (deterministic, layout-invariant).
+    * MULTI-VALUED slots (acquired, launched, works_at, …) publish their
+      FULL value set: one row per distinct obj asserted on or before the
+      cutoff. Reference analog: the KB's dict-insertion-order
+      last-write-wins applies per unique KEY — the functional case only;
+      collapsing `acquired` to its latest object would silently drop
+      facts.
+
+    The cutoff is DAY-INCLUSIVE for timestamp inputs: `as_of='2024-01-05'`
+    keeps a page crawled 2024-01-05 10:00 (`to_date(ts) <= as_of`, not a
+    midnight-upcast `ts <= as_of`).
+
+    Every published value carries its validity envelope: `fact_date` =
+    most recent assertion date (the envelope end — the winning date for
+    functional slots), `first_seen` = earliest assertion date,
+    `n_mentions` = assertion count, all within the cutoff.
+
+    Scale shape: the envelope aggregate collapses the mention stream;
+    the latest-wins window then moves only the ALREADY-COLLAPSED fact
+    table (one row per distinct value), never the mentions. Returns
+    (subj_eid, pred, obj, fact_date, first_seen, n_mentions)."""
+    return facts_from_envelopes(fusion_envelopes(linked, as_of))
+
+
+def history_from_envelopes(env: DataFrame) -> DataFrame:
+    """kg_fact_history from a fusion_envelopes frame: a projection."""
+    return env.select(
+        "subj_eid",
+        "pred",
+        "obj",
+        F.date_format("first_ts", "yyyy-MM-dd").alias("first_seen"),
+        F.date_format("last_ts", "yyyy-MM-dd").alias("last_seen"),
+        "n_mentions",
+    )
+
+
+def fact_history(linked: DataFrame) -> DataFrame:
+    """Temporal scoping: the validity envelope of every asserted (slot,
+    value) — first/last crawl date it was seen and its mention count.
+    The fact-history table a temporal KG serves intervals from (and the
+    input recency-fusion reads its cutoffs against).
+    Returns (subj_eid, pred, obj, first_seen, last_seen, n_mentions)."""
+    return history_from_envelopes(fusion_envelopes(linked))
+
+
+def conflicts_from_envelopes(env: DataFrame) -> DataFrame:
+    """kg_conflicts from a fusion_envelopes frame: one aggregate on the
+    slot key. obj is an envelope key, so counting the slot's non-null
+    objs counts its distinct values — no distinct aggregate, no Expand."""
+    return (
+        env.filter(F.col("pred").isin(*FUNCTIONAL_PREDS))
+        .groupBy("subj_eid", "pred")
+        .agg(
+            F.count("obj").cast("bigint").alias("n_values"),
+            F.sum("n_mentions").cast("bigint").alias("n_mentions"),
+            F.min("obj").alias("first_obj"),
+            F.max("obj").alias("last_obj"),
+        )
+        .filter(F.col("n_values") > 1)
+    )
+
+
+def detect_conflicts(linked: DataFrame) -> DataFrame:
+    """Functional-dependency violations: (subj_eid, pred) slots asserting
+    >1 distinct value anywhere in the corpus — the curation worklist that
+    precedes resolution. Value extremes (not an array) summarize the
+    disagreement cross-engine-stably.
+    Returns (subj_eid, pred, n_values, n_mentions, first_obj, last_obj)."""
+    return conflicts_from_envelopes(fusion_envelopes(linked))
+
+
+def _type_vote() -> Column:
+    """An envelope row's vote for its obj as the subject's type: the min
+    over an entity's is_a rows is its modal type, ties to the smallest
+    type (struct order: -n_mentions, then obj)."""
+    return F.struct(
+        (-F.col("n_mentions")).alias("neg_n"), F.col("obj").alias("entity_type")
+    )
+
+
+def types_from_envelopes(env: DataFrame) -> DataFrame:
+    """kg_entity_types from a fusion_envelopes frame: one aggregate, the
+    min _type_vote over each entity's is_a rows."""
+    return (
+        env.filter(F.col("pred") == "is_a")
+        .groupBy("subj_eid")
+        .agg(F.min(_type_vote()).alias("_v"))
+        .select(
+            "subj_eid",
+            F.col("_v.entity_type").alias("entity_type"),
+            (-F.col("_v.neg_n")).alias("n_mentions"),
+        )
+    )
+
+
 def entity_types(linked: DataFrame) -> DataFrame:
     """Majority-vote type assignment: each entity's `is_a` assertions
     across the corpus are tallied and the modal type wins (ties break to
     the lexicographically smallest type, so the published type table is
-    deterministic). The ontology layer of KG construction — one count
-    aggregate + one window over the entity key.
+    deterministic). The ontology layer of KG construction.
     Returns (subj_eid, entity_type, n_mentions)."""
-    counts = (
-        linked.filter(F.col("subj_eid").isNotNull() & (F.col("pred") == "is_a"))
-        .groupBy("subj_eid", F.col("obj").alias("entity_type"))
-        .agg(F.count("*").cast("bigint").alias("n_mentions"))
+    return types_from_envelopes(fusion_envelopes(linked))
+
+
+def profiles_from_envelopes(env: DataFrame) -> DataFrame:
+    """kg_entity_profiles from a fusion_envelopes frame: one aggregate by
+    eid over the union of every row's subject role (a distinct fact, an
+    out-neighbour when its object linked, a type vote when it is is_a)
+    and, when its object linked, its object role (an in-neighbour).
+    Degrees count DISTINCT neighbours, so each entity's neighbour set is
+    held in its aggregation buffer — entity-bounded, like the table."""
+    subj = env.select(
+        F.col("subj_eid").alias("eid"),
+        F.lit(True).alias("_fact"),
+        F.col("obj_eid").alias("_out"),
+        F.when(F.col("pred") == "is_a", _type_vote()).alias("_vote"),
     )
-    w = Window.partitionBy("subj_eid").orderBy(
-        F.col("n_mentions").desc(), F.col("entity_type").asc()
+    obj = env.filter(F.col("obj_eid").isNotNull()).select(
+        F.col("obj_eid").alias("eid"), F.col("subj_eid").alias("_in")
     )
     return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("subj_eid", "entity_type", "n_mentions")
+        subj.unionByName(obj, allowMissingColumns=True)
+        .groupBy("eid")
+        .agg(
+            F.min("_vote").getField("entity_type").alias("entity_type"),
+            F.count("_fact").cast("bigint").alias("n_facts"),
+            F.size(F.collect_set("_out")).cast("bigint").alias("out_deg"),
+            F.size(F.collect_set("_in")).cast("bigint").alias("in_deg"),
+        )
     )
+
+
+def entity_profiles(linked: DataFrame) -> DataFrame:
+    """The entity page a constructed KG serves: one row per entity with
+    its modal type (null when never typed), distinct asserted fact count,
+    and in/out degree over the distinct resolved (subj_eid, obj_eid) edge
+    set. Universe = entities in the edge set ∪ entities asserting any
+    fact. Returns (eid, entity_type, n_facts, out_deg, in_deg)."""
+    return profiles_from_envelopes(fusion_envelopes(linked))
 
 
 def fact_support(linked: DataFrame) -> DataFrame:
@@ -192,23 +341,6 @@ def fact_support(linked: DataFrame) -> DataFrame:
             F.col("support").cast("double") / F.sum("support").over(w).cast("double"),
             6,
         ).alias("confidence"),
-    )
-
-
-def fact_history(linked: DataFrame) -> DataFrame:
-    """Temporal scoping: the validity envelope of every asserted (slot,
-    value) — first/last crawl date it was seen and its mention count.
-    The fact-history table a temporal KG serves intervals from (and the
-    input recency-fusion reads its cutoffs against): fact_envelopes with
-    its timestamps formatted as dates.
-    Returns (subj_eid, pred, obj, first_seen, last_seen, n_mentions)."""
-    return fact_envelopes(linked).select(
-        "subj_eid",
-        "pred",
-        "obj",
-        F.date_format("first_ts", "yyyy-MM-dd").alias("first_seen"),
-        F.date_format("last_ts", "yyyy-MM-dd").alias("last_seen"),
-        "n_mentions",
     )
 
 
@@ -275,70 +407,6 @@ def nil_candidates(
             F.min("surface").alias("example_surface"),
         )
         .filter(F.col("n_mentions") >= min_mentions)
-    )
-
-
-def entity_profiles(linked: DataFrame) -> DataFrame:
-    """The entity page a constructed KG serves: one row per entity with
-    its modal type (null when never typed), distinct asserted fact count,
-    and in/out degree over the fully-resolved edge set. Universe =
-    entities in the edge set ∪ entities asserting any fact (a full-outer
-    join of two aggregates — every join here keys on the entity id, so
-    the composition adds no shape a 100 TB corpus hasn't already paid
-    for in the parts). Returns (eid, entity_type, n_facts, out_deg,
-    in_deg)."""
-    from darkbo_spark.operators.graph import degree_centrality
-
-    edges = linked.filter(
-        F.col("subj_eid").isNotNull() & F.col("obj_eid").isNotNull()
-    ).select(F.col("subj_eid").alias("src"), F.col("obj_eid").alias("dst"))
-    deg = degree_centrality(edges).select(
-        F.col("node").alias("eid"), "out_deg", "in_deg"
-    )
-    ty = entity_types(linked).select(
-        F.col("subj_eid").alias("eid"), "entity_type"
-    )
-    # fact identity = (pred, value) joined on a non-text separator — obj
-    # is free text and must not merge with pred under a printable glue
-    fc = (
-        linked.filter(F.col("subj_eid").isNotNull())
-        .groupBy(F.col("subj_eid").alias("eid"))
-        .agg(
-            F.countDistinct(F.concat_ws("\x1f", "pred", "obj"))
-            .cast("bigint")
-            .alias("n_facts")
-        )
-    )
-    return (
-        deg.join(fc, "eid", "full_outer")
-        .join(ty, "eid", "left")
-        .select(
-            "eid",
-            "entity_type",
-            F.coalesce("n_facts", F.lit(0)).cast("bigint").alias("n_facts"),
-            F.coalesce("out_deg", F.lit(0)).cast("bigint").alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).cast("bigint").alias("in_deg"),
-        )
-    )
-
-
-def detect_conflicts(linked: DataFrame) -> DataFrame:
-    """Functional-dependency violations: (subj_eid, pred) slots asserting
-    >1 distinct value anywhere in the corpus — the curation worklist that
-    precedes resolution. One map-side-combinable aggregate; value extremes
-    (not an array) summarize the disagreement cross-engine-stably.
-    Returns (subj_eid, pred, n_values, n_mentions, first_obj, last_obj)."""
-    return (
-        linked.filter(F.col("subj_eid").isNotNull())
-        .filter(F.col("pred").isin(*FUNCTIONAL_PREDS))
-        .groupBy("subj_eid", "pred")
-        .agg(
-            F.countDistinct("obj").cast("bigint").alias("n_values"),
-            F.count("*").cast("bigint").alias("n_mentions"),
-            F.min("obj").alias("first_obj"),
-            F.max("obj").alias("last_obj"),
-        )
-        .filter(F.col("n_values") > 1)
     )
 
 

@@ -188,17 +188,29 @@ def _minhash_lsh(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    k: int = 16,
-    bands: int = 4,
-    n: int = 3,
-    seed: int = 42,
     max_bucket: int = 500,
-    hash_mode: str = "fast",
     persist: bool = True,
+    **band_kwargs,
 ) -> tuple[DataFrame, DataFrame]:
     """minhash_lsh_pairs' pairs, and the banded frame they join (persisted
     when `persist`), for a caller that can release it once it has
     consumed the pairs."""
+    banded = _minhash_banded(df, text_col, id_col, **band_kwargs)
+    return _minhash_pairs(banded, max_bucket, persist), banded
+
+
+def _minhash_banded(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int = 16,
+    bands: int = 4,
+    n: int = 3,
+    seed: int = 42,
+    hash_mode: str = "fast",
+) -> DataFrame:
+    """(doc_id, band, bucket): each document's MinHash signature cut into
+    `bands` band buckets."""
     assert k % bands == 0
     rows_per_band = k // bands
     sig = minhash_signatures(df, text_col, id_col, k, n, seed, hash_mode)
@@ -213,11 +225,14 @@ def _minhash_lsh(
         F.struct(F.lit(b).alias("band"), _bucket(b).alias("bucket"))
         for b in range(bands)
     ]
-    banded = sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")).select(
+    return sig.select("doc_id", F.explode(F.array(*band_cols)).alias("bb")).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
-    pairs = _capped_bucket_pairs(banded, ["band", "bucket"], [], max_bucket, persist)
-    return pairs, banded
+
+
+def _minhash_pairs(banded: DataFrame, max_bucket: int, persist: bool) -> DataFrame:
+    """Candidate pairs of a _minhash_banded frame."""
+    return _capped_bucket_pairs(banded, ["band", "bucket"], [], max_bucket, persist)
 
 
 def _simhash_nbits(hash_mode: str) -> int:
@@ -275,6 +290,15 @@ def simhash_neardup_pairs(
     hamming with native bit_count(xor). One shuffle on the band key, exact
     verification only within buckets, degenerate buckets capped like the
     MinHash path."""
+    banded = _simhash_banded(df, text_col, id_col, max_hamming, hash_mode)
+    return _simhash_pairs(banded, max_hamming, max_bucket, persist=True)
+
+
+def _simhash_banded(
+    df: DataFrame, text_col: str, id_col: str, max_hamming: int, hash_mode: str
+) -> DataFrame:
+    """(doc_id, simhash, band, bits): each document's SimHash cut into
+    max_hamming+1 bands."""
     nbits = _simhash_nbits(hash_mode)
     n_bands = max_hamming + 1
     width = nbits // n_bands
@@ -293,10 +317,16 @@ def simhash_neardup_pairs(
             for i in range(n_bands)
         ]
     )
-    banded = sig.select("doc_id", "simhash", F.explode(bands).alias("bb")).select(
+    return sig.select("doc_id", "simhash", F.explode(bands).alias("bb")).select(
         "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bits").alias("bits")
     )
-    cand = _capped_bucket_pairs(banded, ["band", "bits"], ["simhash"], max_bucket)
+
+
+def _simhash_pairs(
+    banded: DataFrame, max_hamming: int, max_bucket: int, persist: bool
+) -> DataFrame:
+    """Verified pairs (id_a, id_b, hamming) of a _simhash_banded frame."""
+    cand = _capped_bucket_pairs(banded, ["band", "bits"], ["simhash"], max_bucket, persist)
     return (
         cand.select(
             "id_a",

@@ -151,14 +151,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str, spread: bool = True) -> Data
     return session_plan(spark, ("_t", sf_dir, name, bool(spread), fp), build)
 
 
-def _terms_df(spark: SparkSession, terms: list[str]) -> DataFrame:
-    """Tiny literal term table via pandas/Arrow (createDataFrame on a plain
-    list takes the RDD-pickle path and spins a python task)."""
-    import pandas as pd
-
-    return spark.createDataFrame(pd.DataFrame({"token": list(terms)}))
-
-
 def _corpus_fp(sf_dir: str, table: str) -> str:
     """Corpus fingerprint for stored-index skip: sf_dir identity + each
     parquet file's (name, size, mtime) — a corpus replaced with preserved

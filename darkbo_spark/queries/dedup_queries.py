@@ -11,13 +11,18 @@ engines, every computed column is aliased identically in Spark and SQL).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from darkbo_spark.functions import text_analysis as ta
 from darkbo_spark.operators.dedup import (
+    _minhash_banded,
+    _minhash_pairs,
+    _simhash_banded,
+    _simhash_pairs,
     exact_dedup,
-    minhash_lsh_pairs,
     simhash,
     token_jaccard_pairs,
 )
@@ -142,10 +147,31 @@ _NEARDUP_CORPUS_SQL = f"""
 """
 
 
+def _session_banded(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """`build()`'s banded LSH frame, persisted as the session memo's entry
+    for (`name`, documents fingerprint): it feeds the bucket-size
+    aggregate and both self-join sides, and clear_session_memo or a
+    rewrite of the documents table releases it."""
+    from pyspark import StorageLevel
+
+    from darkbo_spark.queries.common import _corpus_fp, session_plan
+
+    return session_plan(
+        spark,
+        (name, sf_dir, _corpus_fp(sf_dir, "documents")),
+        lambda: build().persist(StorageLevel.MEMORY_AND_DISK),
+    )
+
+
 @_q("minhash_lsh_pairs")  # rows-only: containment vs exact Jaccard in pytest
 def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _neardup_corpus(spark, sf_dir)
-    return minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4)
+    banded = _session_banded(
+        spark, sf_dir, "minhash_bands_fast",
+        lambda: _minhash_banded(_neardup_corpus(spark, sf_dir), "text", "doc_id"),
+    )
+    return _minhash_pairs(banded, 500, persist=False)
 
 
 @_q("simhash_docs")  # rows-only: determinism + hamming properties in pytest
@@ -156,10 +182,14 @@ def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q("simhash_neardup_pairs")  # rows-only: banded == brute-force in pytest
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from darkbo_spark.operators.dedup import simhash_neardup_pairs
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return simhash_neardup_pairs(docs, "text", "doc_id", max_hamming=8)
+    banded = _session_banded(
+        spark, sf_dir, "simhash_bands_fast_8",
+        lambda: _simhash_banded(
+            _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200),
+            "text", "doc_id", 8, "fast",
+        ),
+    )
+    return _simhash_pairs(banded, 8, 500, persist=False)
 
 
 def _simhash_sig_oracle(id_limit: int) -> str:
@@ -431,21 +461,28 @@ ORDER BY id_a, id_b
 
 @_q("minhash_lsh_pairs_x", _minhash_portable_oracle(16, 4, 3, 42, 500))
 def minhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _neardup_corpus(spark, sf_dir)
-    # persist=True: the banded frame feeds the bucket sizes and both join
-    # sides. neardup_clusters releases its copy of the same plan once CC
+    # neardup_clusters releases its copy of the same banded plan once CC
     # has checkpointed the pairs, so this entry is built here
-    return minhash_lsh_pairs(docs, "text", "doc_id", k=16, bands=4, hash_mode="portable")
+    banded = _session_banded(
+        spark, sf_dir, "minhash_bands_portable",
+        lambda: _minhash_banded(
+            _neardup_corpus(spark, sf_dir), "text", "doc_id", hash_mode="portable"
+        ),
+    )
+    return _minhash_pairs(banded, 500, persist=False)
 
 
 @_q("simhash_neardup_pairs_x", _simhash_portable_oracle(3, 500, 200))
 def simhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from darkbo_spark.operators.dedup import simhash_neardup_pairs
-
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    # the banded simhash frame is persisted: it feeds the bucket-size agg
-    # and both self-join sides — unpersisted, the vote/pack pipeline runs 3×
-    return simhash_neardup_pairs(docs, "text", "doc_id", max_hamming=3, hash_mode="portable")
+    # unpersisted, the vote/pack pipeline of the banded frame runs 3×
+    banded = _session_banded(
+        spark, sf_dir, "simhash_bands_portable_3",
+        lambda: _simhash_banded(
+            _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200),
+            "text", "doc_id", 3, "portable",
+        ),
+    )
+    return _simhash_pairs(banded, 3, 500, persist=False)
 
 
 # ---------------------------------------------------------------------------

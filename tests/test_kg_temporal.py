@@ -2,6 +2,8 @@
 as-of filtering, latest-wins with deterministic ties, functional-slot
 violation inventory, partitioning invariance."""
 
+from collections import Counter
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -472,7 +474,7 @@ def test_envelope_merge_algebra(spark):
 
 def test_fusion_pool_failure_leaves_no_pointer_and_resumes(spark, tmp_path, monkeypatch):
     """A failure inside the fusion pool fails the run without publishing
-    the failed tables; the rerun builds only those. `entity_types` feeds
+    the failed tables; the rerun builds only those. `_type_vote` feeds
     two stages — kg_entity_types and kg_entity_profiles (which derives
     each entity's type from it) — so both fail and the other three
     fusion stages publish."""
@@ -489,7 +491,7 @@ def test_fusion_pool_failure_leaves_no_pointer_and_resumes(spark, tmp_path, monk
     def _raise(*_a, **_k):
         raise ValueError("entity_types exploded")
 
-    monkeypatch.setattr(kt, "entity_types", _raise)
+    monkeypatch.setattr(kt, "_type_vote", _raise)
     with pytest.raises(ValueError, match="entity_types exploded"):
         run_pipeline(spark, out, n_pages=60, seed=3, facts_asof="2024-01-02")
     for name in failing:
@@ -500,3 +502,169 @@ def test_fusion_pool_failure_leaves_no_pointer_and_resumes(spark, tmp_path, monk
     res = run_pipeline(spark, out, n_pages=60, seed=3, facts_asof="2024-01-02")
     assert set(res.stages_run) == failing
     assert {"kg_facts", "kg_conflicts", "kg_fact_history"} <= set(res.stages_skipped)
+
+
+# ---------------------------------------------------------------------------
+# The fusion tables against their pre-envelope formulations: each of the
+# five is written below as it was before the tables became derivations of
+# one fact-envelope aggregate (a filter, a group and a window per table
+# over the mention stream), and the pipeline's tables must match them row
+# for row.
+# ---------------------------------------------------------------------------
+
+
+def _ref_envelopes(linked):
+    return (
+        linked.filter(F.col("subj_eid").isNotNull())
+        .groupBy("subj_eid", "pred", "obj")
+        .agg(
+            F.min("warc_ts").alias("first_ts"),
+            F.max("warc_ts").alias("last_ts"),
+            F.count("*").cast("bigint").alias("n_mentions"),
+        )
+    )
+
+
+def _ref_resolve_facts(linked, as_of):
+    from darkbo_spark.kg.temporal import resolve_from_envelopes
+
+    scoped = linked.filter(F.to_date("warc_ts") <= F.lit(as_of).cast("date"))
+    return resolve_from_envelopes(_ref_envelopes(scoped))
+
+
+def _ref_detect_conflicts(linked):
+    from darkbo_spark.kg.temporal import FUNCTIONAL_PREDS
+
+    return (
+        linked.filter(F.col("subj_eid").isNotNull())
+        .filter(F.col("pred").isin(*FUNCTIONAL_PREDS))
+        .groupBy("subj_eid", "pred")
+        .agg(
+            F.countDistinct("obj").cast("bigint").alias("n_values"),
+            F.count("*").cast("bigint").alias("n_mentions"),
+            F.min("obj").alias("first_obj"),
+            F.max("obj").alias("last_obj"),
+        )
+        .filter(F.col("n_values") > 1)
+    )
+
+
+def _ref_entity_types(linked):
+    from pyspark.sql.window import Window
+
+    counts = (
+        linked.filter(F.col("subj_eid").isNotNull() & (F.col("pred") == "is_a"))
+        .groupBy("subj_eid", F.col("obj").alias("entity_type"))
+        .agg(F.count("*").cast("bigint").alias("n_mentions"))
+    )
+    w = Window.partitionBy("subj_eid").orderBy(
+        F.col("n_mentions").desc(), F.col("entity_type").asc()
+    )
+    return (
+        counts.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") == 1)
+        .select("subj_eid", "entity_type", "n_mentions")
+    )
+
+
+def _ref_fact_history(linked):
+    return _ref_envelopes(linked).select(
+        "subj_eid",
+        "pred",
+        "obj",
+        F.date_format("first_ts", "yyyy-MM-dd").alias("first_seen"),
+        F.date_format("last_ts", "yyyy-MM-dd").alias("last_seen"),
+        "n_mentions",
+    )
+
+
+def _ref_entity_profiles(linked):
+    from darkbo_spark.operators.graph import degree_centrality
+
+    edges = linked.filter(
+        F.col("subj_eid").isNotNull() & F.col("obj_eid").isNotNull()
+    ).select(F.col("subj_eid").alias("src"), F.col("obj_eid").alias("dst"))
+    deg = degree_centrality(edges).select(
+        F.col("node").alias("eid"), "out_deg", "in_deg"
+    )
+    ty = _ref_entity_types(linked).select(
+        F.col("subj_eid").alias("eid"), "entity_type"
+    )
+    fc = (
+        linked.filter(F.col("subj_eid").isNotNull())
+        .groupBy(F.col("subj_eid").alias("eid"))
+        .agg(
+            F.countDistinct(F.concat_ws("\x1f", "pred", "obj"))
+            .cast("bigint")
+            .alias("n_facts")
+        )
+    )
+    return (
+        deg.join(fc, "eid", "full_outer")
+        .join(ty, "eid", "left")
+        .select(
+            "eid",
+            "entity_type",
+            F.coalesce("n_facts", F.lit(0)).cast("bigint").alias("n_facts"),
+            F.coalesce("out_deg", F.lit(0)).cast("bigint").alias("out_deg"),
+            F.coalesce("in_deg", F.lit(0)).cast("bigint").alias("in_deg"),
+        )
+    )
+
+
+def test_fusion_tables_match_pre_envelope_formulations(spark, tmp_path):
+    """The pipeline's five fusion tables equal the pre-envelope
+    formulations over kg_triples ⋈ docs. The crawl dates are spread over
+    four days with every 11th page undated, so the corpus holds a slot
+    asserted on both sides of the cutoff, mentions with a null warc_ts,
+    unlinked objects (null obj_eid) and an is_a tie."""
+    from darkbo_spark.kg.pages import synth_pages
+    from darkbo_spark.kg.pipeline import run_pipeline
+
+    asof = "2024-01-02"
+    day = F.col("page_id") % 4
+    pages = synth_pages(
+        spark, 160, seed=5, columns=["page_id", "url", "warc_ts", "text", "lang"]
+    ).withColumn(
+        "warc_ts",
+        F.when(F.col("page_id") % 11 == 0, F.lit(None).cast("timestamp")).otherwise(
+            F.col("warc_ts") + F.make_interval(days=day.cast("int"))
+        ),
+    )
+    res = run_pipeline(
+        spark, str(tmp_path / "kg"), pages=pages, input_fingerprint="fusion-ref",
+        facts_asof=asof,
+    )
+    linked = (
+        res.tables["kg_triples"].read(spark)
+        .join(res.tables["docs"].read(spark).select("url", "warc_ts"), "url")
+        .cache()
+    )
+
+    subj = linked.filter(F.col("subj_eid").isNotNull())
+    d = F.to_date("warc_ts")
+    cut = F.lit(asof).cast("date")
+    assert subj.groupBy("subj_eid", "pred").agg(
+        F.max(F.when(d <= cut, 1)).alias("before"), F.max(F.when(d > cut, 1)).alias("after")
+    ).filter("before = 1 AND after = 1").count() > 0
+    assert subj.filter(F.col("warc_ts").isNull()).count() > 0
+    assert subj.filter(F.col("obj_eid").isNull()).count() > 0
+    votes = subj.filter(F.col("pred") == "is_a").groupBy("subj_eid", "obj").count()
+    top = votes.groupBy("subj_eid").agg(F.max("count").alias("count"))
+    tied = votes.join(top, ["subj_eid", "count"]).groupBy("subj_eid").count()
+    assert tied.filter(F.col("count") > 1).count() > 0
+
+    want = {
+        "kg_facts": _ref_resolve_facts(linked, asof),
+        "kg_conflicts": _ref_detect_conflicts(linked),
+        "kg_entity_types": _ref_entity_types(linked),
+        "kg_fact_history": _ref_fact_history(linked),
+        "kg_entity_profiles": _ref_entity_profiles(linked),
+    }
+    for name, ref in want.items():
+        got = res.tables[name].read(spark).drop("fact_bucket")
+        assert got.columns == ref.columns, name
+        got_rows = Counter(tuple(r) for r in got.collect())
+        assert got_rows == Counter(tuple(r) for r in ref.collect()), name
+        assert got_rows, name
+    linked.unpersist()

@@ -299,6 +299,26 @@ def test_neardup_clusters_leave_no_cache_after_clear(spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_banded_lsh_queries_leave_no_cache_after_clear(spark, sf_dir):
+    """The banded frames the four LSH pair queries persist are session
+    memo entries, so clear_session_memo releases every one of them."""
+    from darkbo_spark.queries.common import clear_session_memo
+    from darkbo_spark.queries.dedup_queries import (
+        minhash_pairs,
+        minhash_pairs_portable,
+        simhash_pairs,
+        simhash_pairs_portable,
+    )
+
+    spark.catalog.clearCache()
+    clear_session_memo(spark)
+    for query in (minhash_pairs_portable, simhash_pairs_portable,
+                  minhash_pairs, simhash_pairs):
+        query(spark, sf_dir).count()
+    clear_session_memo(spark)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_one_persisted_chain_per_dictionary(spark, sf_dir):
     """kg_linked_x and the crawl-dated fact queries read ONE persisted
     chain for the default dictionary, and the NIL-mining queries, which

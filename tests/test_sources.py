@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 from darkbo_spark import reference_impl as ref
 from darkbo_spark.sources.ingest_documents import PLACEHOLDER_TEXT, ingest_documents
 from darkbo_spark.sources.readers import (
+    read_attachments,
     read_faq_json,
     read_kb_json,
     read_project_registry,
@@ -92,6 +93,21 @@ def test_text_fallback_decoding(spark, tmp_path):
     }
     assert got["ok.txt"] == "utf-8 text ✓"
     assert got["legacy.txt"] == "café"
+
+
+def test_attachments_are_opaque_blobs(spark, tmp_path):
+    """S10/S11: every file under the path comes back byte-exact with its
+    length, whatever its encoding."""
+    (tmp_path / "att").mkdir()
+    blobs = {"scan.pdf": b"%PDF-1.4\x00\xff\xfe", "note.txt": "naïve\n".encode("latin-1")}
+    for name, data in blobs.items():
+        (tmp_path / "att" / name).write_bytes(data)
+    df = read_attachments(spark, str(tmp_path / "att"))
+    assert df.columns == ["path", "length", "modificationTime", "content"]
+    got = {
+        r.path.rsplit("/", 1)[-1]: (r.length, bytes(r.content)) for r in df.collect()
+    }
+    assert got == {name: (len(data), data) for name, data in blobs.items()}
 
 
 def test_ingest_documents_end_to_end(spark, tmp_path):
