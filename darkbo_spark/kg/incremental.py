@@ -16,12 +16,24 @@ refetched page whose new content yields ZERO triples still has to retire
 its stale triples. `upsert_triples_by_url` therefore takes `delta_urls`
 as a required argument (derive it from the pages frame), and the
 zero-triple retirement case is pinned in tests/test_kg_incremental.py.
+
+`refresh` is the crawl cycle, composed once as one stage_run: upsert the
+live triples, merge the cycle's envelopes into the stored state
+(kg/temporal), resolve the facts. Envelopes accumulate mentions, so a
+re-run merge double-counts: only the fingerprint skip makes a replay safe.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from darkbo_spark.storage import make_table
+from darkbo_spark.storage.stages import WAIT_S, StageResult, stage_run
+
+CODE_VERSION = "1"
+# the tables `refresh` maintains, in publish order
+REFRESH_TABLES = ("live_triples", "fact_envelopes", "facts")
 
 
 def extract_and_link(
@@ -59,3 +71,50 @@ def upsert_triples_by_url(
     is small relative to the corpus by construction)."""
     kept = stale.join(F.broadcast(delta_urls.select("url")), "url", "left_anti")
     return kept.unionByName(fresh.select(*stale.columns))
+
+
+def refresh(
+    spark: SparkSession,
+    out_dir: str,
+    pages: DataFrame,
+    dictionary: DataFrame,
+    cycle_fp: str,
+) -> StageResult:
+    """One crawl cycle over `out_dir`'s REFRESH_TABLES: the refetched
+    `pages` (url, warc_ts, lang, text) re-run extract_and_link against
+    `dictionary`, then live_triples is upserted by the pages' urls,
+    fact_envelopes merges the fresh mentions dated by warc_ts, and facts
+    is resolved from it. Stage fingerprints chain from `cycle_fp` (the
+    identity of pages + dictionary): a replayed cycle skips every stage,
+    and one that crashed between publishes rebuilds only what did not
+    commit. A table with no version yet reads as empty."""
+    from darkbo_spark.kg.temporal import (
+        fact_envelopes,
+        merge_fact_envelopes,
+        resolve_from_envelopes,
+    )
+
+    def current(name: str, like: DataFrame) -> DataFrame:
+        tbl = make_table(out_dir, name)
+        return tbl.read(spark) if tbl.current_fingerprint() else like.limit(0)
+
+    live, env, facts = REFRESH_TABLES
+    # lazy: computed once, by the first stage that rebuilds
+    fresh = extract_and_link(pages, dictionary).persist()
+    try:
+        with stage_run(spark, out_dir, "kg_refresh", CODE_VERSION, WAIT_S) as run:
+            urls = pages.select("url")
+            _, fp = run.stage(live, cycle_fp, "url-upsert", lambda: (
+                upsert_triples_by_url(current(live, fresh), fresh, urls)))
+
+            def merged() -> DataFrame:
+                dated = fresh.join(pages.select("url", "warc_ts"), "url")
+                delta = fact_envelopes(dated)
+                return merge_fact_envelopes(current(env, delta), delta)
+
+            env_tbl, fp = run.stage(env, fp, "merge", merged)
+            run.stage(facts, fp, "latest-wins",
+                      lambda: resolve_from_envelopes(env_tbl.read(spark)))
+    finally:
+        fresh.unpersist()
+    return run.result

@@ -7,11 +7,12 @@ stages COMPOSE without semantic drift — the hash covers every filter
 decision, the cap's total order, the sampler's member set, and the global
 prefix sum, end to end.
 
-Spark side: the real operators chained exactly as a corpus pipeline runs
-them (one job, no materialization between stages — Catalyst fuses the
-gates into the scan, the only shuffles are the dedup window, the cap's
-two bounded windows, and the pack's range partition). DuckDB: the staged
-CTE replay.
+Spark side: training/pipeline.training_stages — the stage list the
+resumable runner publishes stage by stage — folded into one plan (no
+materialization between stages — Catalyst fuses the gates into the scan,
+the only shuffles are the dedup window, the cap's two bounded windows,
+and the pack's range partition). DuckDB: the staged CTE replay, rendered
+from the runner's constants.
 
 Part of the driver-contract query corpus (see darkbo_spark/entry_queries.py
 for the registry, driver-window ordering, and the shared float discipline).
@@ -25,16 +26,19 @@ from pyspark.sql import functions as F
 from darkbo_spark.functions import text_analysis as ta
 from darkbo_spark.queries.common import _q, _t
 from darkbo_spark.queries.domain_queries import _DOC_URL_SQL, _SQL_DOMAIN
-
-_PIPE_K = 5          # per-domain cap
-_PIPE_FRACTION = 0.8  # deterministic sample keep rate
-_PIPE_SALT = "pipe1"
-_PIPE_BUDGET = 2000   # tokens per shard
+from darkbo_spark.training.pipeline import (
+    CAP_K,
+    QUALITY_MIN,
+    SAMPLE_FRACTION,
+    SAMPLE_SALT,
+    SHARD_BUDGET,
+    training_stages,
+)
 
 _PIPELINE_ORACLE = f"""
 WITH gated AS (
   SELECT doc_id, text, lang, n_chars FROM documents
-  WHERE {ta.sql_lang_id('text')} = 'en_like' AND {ta.sql_quality_score('text')} >= 0.7
+  WHERE {ta.sql_lang_id('text')} = 'en_like' AND {ta.sql_quality_score('text')} >= {QUALITY_MIN}
 ),
 dedup_keys AS (
   SELECT MIN(doc_id) AS doc_id FROM gated GROUP BY md5(text)
@@ -46,12 +50,12 @@ capped AS (
            ROW_NUMBER() OVER (PARTITION BY {_SQL_DOMAIN}
                               ORDER BY n_chars DESC, doc_id) AS rk
     FROM dd
-  ) WHERE rk <= {_PIPE_K}
+  ) WHERE rk <= {CAP_K}
 ),
 sampled AS (
   SELECT doc_id, domain FROM capped
-  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS STRING) || ':{_PIPE_SALT}'), 1, 15)) AS BIGINT)
-        % 1000000 < {round(_PIPE_FRACTION * 1000000)}
+  WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS STRING) || ':{SAMPLE_SALT}'), 1, 15)) AS BIGINT)
+        % 1000000 < {round(SAMPLE_FRACTION * 1000000)}
 ),
 toks AS (
   SELECT s.doc_id, s.domain, CAST({ta.sql_token_count('d.text')} AS BIGINT) AS n_tokens
@@ -63,8 +67,8 @@ packed AS (
   FROM toks
 )
 SELECT doc_id, domain, n_tokens, cum_tokens,
-       CAST(((cum_tokens - n_tokens) - (cum_tokens - n_tokens) % {_PIPE_BUDGET})
-            / {_PIPE_BUDGET} AS BIGINT) AS shard_id
+       CAST(((cum_tokens - n_tokens) - (cum_tokens - n_tokens) % {SHARD_BUDGET})
+            / {SHARD_BUDGET} AS BIGINT) AS shard_id
 FROM packed
 ORDER BY doc_id
 """
@@ -72,29 +76,9 @@ ORDER BY doc_id
 
 @_q("training_pipeline_x", _PIPELINE_ORACLE)
 def training_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from darkbo_spark.operators.dedup import exact_dedup
-    from darkbo_spark.operators.domains import (
-        cap_per_domain,
-        host_of,
-        with_registered_domain,
-    )
-    from darkbo_spark.operators.sampling import deterministic_sample
-    from darkbo_spark.operators.sharding import pack_shards
-
-    docs = _t(spark, sf_dir, "documents")
-    gated = docs.filter(
-        (ta.lang_id_heuristic(F.col("text")) == "en_like")
-        & (ta.quality_score(F.col("text")) >= 0.7)
-    )
-    dd = exact_dedup(gated, "text", "doc_id")
-    with_domain = with_registered_domain(
-        dd, host_of(F.expr(_DOC_URL_SQL)), "domain"
-    )
-    capped = cap_per_domain(with_domain, k=_PIPE_K, order_by=[F.col("n_chars").desc()])
-    sampled = deterministic_sample(capped, _PIPE_FRACTION, salt=_PIPE_SALT)
-    toks = sampled.select(
-        "doc_id", "domain", ta.token_count(F.col("text")).cast("bigint").alias("n_tokens")
-    )
-    return pack_shards(toks, budget=_PIPE_BUDGET).select(
-        "doc_id", "domain", "n_tokens", "cum_tokens", "shard_id"
-    )
+    df = _t(spark, sf_dir, "documents")
+    for _name, _params, build in training_stages(
+        F.expr(_DOC_URL_SQL), _DOC_URL_SQL, SAMPLE_FRACTION
+    ):
+        df = build(df)
+    return df.select("doc_id", "domain", "n_tokens", "cum_tokens", "shard_id")

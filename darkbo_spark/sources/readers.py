@@ -9,7 +9,8 @@ readers (SURVEY.md §2.1).
 * Project registry TSV (S3): tab-split id→name (behavior api/storage.py:44-57).
 * Text/markdown files (S7): utf-8 with latin-1 fallback (behavior
   api/simple_processor.py:34-47).
-* Binary attachments (S10/S11): `binaryFile` format.
+* Binary attachments (S10/S11): `binaryFile` format, plus the
+  zero-length files that scan skips.
 * Unified index items (§1.1): FAQ ∪ KB with `content = question ⧺ answer`
   (behavior api/index_versioning.py:350-383, concat at :366).
 """
@@ -134,9 +135,33 @@ def read_text_files(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_attachments(spark: SparkSession, path: str) -> DataFrame:
-    """S10/S11 — opaque binary blobs + metadata."""
-    return spark.read.format("binaryFile").load(path).select(
+    """S10/S11 — opaque binary blobs + metadata. The `binaryFile` scan
+    skips zero-length files, so those the Hadoop FileSystem lists under
+    `path` (a file, directory or glob; hidden `_`/`.` entries excepted,
+    as in the scan) come back as rows with length 0 and empty content."""
+    blobs = spark.read.format("binaryFile").load(path).select(
         "path", "length", "modificationTime", "content"
+    )
+    jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(conf)
+    todo, empty = list(fs.globStatus(root) or []), []
+    while todo:
+        st = todo.pop()
+        if st.isDirectory():
+            todo.extend(c for c in fs.listStatus(st.getPath())
+                        if not c.getPath().getName().startswith(("_", ".")))
+        elif st.getLen() == 0:
+            empty.append((st.getPath().toString(), st.getModificationTime()))
+    if not empty:
+        return blobs
+    return blobs.unionByName(
+        spark.createDataFrame(empty, "path string, ms bigint").select(
+            "path",
+            F.lit(0).cast("bigint").alias("length"),
+            F.timestamp_millis("ms").alias("modificationTime"),
+            F.lit(bytearray()).alias("content"),
+        )
     )
 
 

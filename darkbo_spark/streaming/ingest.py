@@ -6,19 +6,23 @@ streaming restatement is `readStream` over the landing path with
 `foreachBatch` running exactly the batch stage transforms per micro-batch —
 one code path for batch and stream.
 
-* `stream_pages_to_triples` — file-source stream of pages parquet →
-  extract+segment+extract-triples per micro-batch, appended to a triples
-  sink; checkpointLocation gives exactly-once per-batch resume.
-* `windowed_event_counts` — tumbling-window counts per event type with a
-  watermark for late data (the per-window metrics rows of the north rule
-  in streaming form).
-* `sessionize_stream` — custom stateful operator via
-  applyInPandasWithState: the streaming twin of operators/events.sessionize
-  (gap-based sessions with per-user state and processing-time timeout).
+* Page streams (an output and its checkpoint share one lifetime):
+  `stream_pages_to_triples` (extract + S+T), `stream_pages_to_linked_triples`
+  (+ entity link) and `stream_pages_to_kg_upsert` (one crawl cycle,
+  kg/incremental.refresh, per micro-batch).
+* `stream_docs_to_tf_index` / `read_tf_index` — incremental sparse-index
+  maintenance over a SnapshotTable, and its reader.
+* `stream_asof_candidates` / `asof_reduce` — the watermarked stream-stream
+  interval join of the as-of twin, and the per-event reduction over it.
+* `windowed_event_counts` (tumbling windows with a late-data watermark),
+  `dedup_stream` (exact dedup within a watermark) and `sessionize_stream`
+  (gap-based sessions via applyInPandasWithState, the streaming twin of
+  operators/events.sessionize).
 """
 
 from __future__ import annotations
 
+import os
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -38,40 +42,35 @@ from darkbo_spark.kg.pages import PAGES_SCHEMA
 from darkbo_spark.kg.triples import extract_doc_triples_df
 
 
-def _batch_id_sink(output_path: str, checkpoint_path: str):
-    """The idempotent foreachBatch sink both page streams write through:
-    dynamic partition overwrite keyed by batch_id, so a replayed batch
-    (foreachBatch is at-least-once: a crash between the sink write and
-    the offset commit replays it) rewrites its own partition instead of
-    appending duplicates — the standard exactly-once-effect pattern.
-
-    checkpoint_path and output_path therefore share ONE lifetime:
-    resetting the checkpoint while keeping the output would restart
-    batch_id at 0 and leave stale higher-numbered batch partitions mixed
-    into downstream reads. A populated output with no checkpoint is
-    refused up front (ValueError) instead of silently corrupting.
-    Returns the `write(df, batch_id)` callback."""
-    import os
-
+def _refuse_output_without_checkpoint(
+    output_path: str, checkpoint_path: str, markers: tuple[str, ...]
+) -> None:
+    """Every page stream's lifetime rule: an output and its checkpoint
+    live and die together. Without the checkpoint batch_id restarts at 0
+    and replays into the output, so an output that is populated (an entry
+    starting with one of `markers`) is refused up front (ValueError)."""
+    entries = os.listdir(output_path) if os.path.isdir(output_path) else []
     if not os.path.exists(checkpoint_path) and any(
-        e.startswith("batch_id=") for e in (
-            os.listdir(output_path) if os.path.isdir(output_path) else []
-        )
+        e.startswith(markers) for e in entries
     ):
         raise ValueError(
-            f"output_path {output_path!r} already holds batch_id partitions "
-            f"but checkpoint_path {checkpoint_path!r} does not exist — "
-            "batch_id numbering would restart at 0 and strand stale "
-            "partitions; clear the output or restore its checkpoint"
+            f"output {output_path!r} is populated but checkpoint_path "
+            f"{checkpoint_path!r} does not exist; clear the output or restore "
+            "its checkpoint"
         )
 
+
+def _batch_id_sink(output_path: str, checkpoint_path: str):
+    """The idempotent foreachBatch sink both triple streams write through:
+    each micro-batch overwrites its own `batch_id=<id>` directory, so a
+    replayed batch (foreachBatch is at-least-once: a crash between the
+    sink write and the offset commit replays it) rewrites its partition
+    instead of appending duplicates. Returns `write(df, batch_id)`."""
+    _refuse_output_without_checkpoint(output_path, checkpoint_path, ("batch_id=",))
+
     def write(df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
+        df.write.mode("overwrite").parquet(
+            f"{output_path.rstrip('/')}/batch_id={batch_id}"
         )
 
     return write
@@ -463,97 +462,29 @@ def stream_docs_to_tf_index(
     )
 
 
-def read_kg_upsert_table(spark: SparkSession, kg_path: str) -> DataFrame:
-    """The materialized url-bucketed KG triple table (empty frame with the
-    canonical schema when nothing has landed yet)."""
-    import os
-
-    schema = (
-        "url string, sent_idx bigint, subj string, pred string, obj string, "
-        "subj_eid string, obj_eid string, url_bucket int"
-    )
-    if not os.path.isdir(kg_path):
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(kg_path)
-
-
 def stream_pages_to_kg_upsert(
     spark: SparkSession,
     input_path: str,
-    kg_path: str,
+    kg_dir: str,
     checkpoint_path: str,
     entity_dict: DataFrame,
-    n_buckets: int = 32,
     max_files_per_trigger: int = 4,
 ):
-    """Streaming KG MAINTENANCE at delta cost: each micro-batch of
-    (re)fetched pages runs E→S→T→L and upserts by url into a triple table
-    partitioned by url-hash bucket — only the buckets containing the
-    batch's urls are read and rewritten (dynamic partition overwrite), so
-    per-batch I/O scales with the delta's bucket footprint, never the
-    corpus (the batch twin is kg/incremental.upsert_triples_by_url; the
-    store layout mirrors parsed_search_stored's token-bucket pruning).
+    """Streaming KG MAINTENANCE: each micro-batch of (re)fetched pages is
+    one crawl cycle, kg/incremental.refresh(..., f"batch{batch_id}"), over
+    the live tables in `kg_dir`. A replayed batch whose cycle committed
+    skips every stage; one that crashed between publishes rebuilds only
+    what did not commit. Replaying committed batches under a NEW
+    checkpoint would count their envelope mentions twice, so a populated
+    `kg_dir` without its checkpoint is refused (ValueError). Two versions
+    of one url inside a SINGLE file batch have undefined last-writer
+    order — refetches land in separate batches in a crawl frontier."""
+    from darkbo_spark.kg.incremental import REFRESH_TABLES, refresh
 
-    Exactly-once EFFECT without a fingerprint: url-keyed delete-and-insert
-    is IDEMPOTENT — replaying a committed batch removes the very rows it
-    previously inserted and reinserts them, converging to the same table.
-    A crash mid-way through the multi-bucket overwrite can leave a reader
-    seeing some buckets new and some old until the replay converges; the
-    production swap is an Iceberg MERGE (one atomic multi-partition
-    commit) through the same storage seam (docs in storage/interface.py).
-
-    Same caveat as the tf-index stream: two versions of one url inside a
-    SINGLE file batch have undefined last-writer order — refetches land
-    in separate files/batches by construction of a crawl frontier."""
-    from darkbo_spark.kg.incremental import extract_and_link, upsert_triples_by_url
-
-    def _bucket(col):
-        return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+    _refuse_output_without_checkpoint(kg_dir, checkpoint_path, REFRESH_TABLES)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        fresh = extract_and_link(batch_df, entity_dict)
-        fresh = fresh.withColumn("url_bucket", _bucket(F.col("url")))
-        delta_urls = batch_df.select("url").distinct()
-        # bounded driver materialization: at most n_buckets ints
-        buckets = [
-            r.b for r in delta_urls.select(_bucket(F.col("url")).alias("b"))
-            .distinct().collect()
-        ]
-        if os.path.isdir(kg_path):
-            # partition-pruned read of ONLY the delta's buckets
-            stale = read_kg_upsert_table(spark, kg_path).filter(
-                F.col("url_bucket").isin(buckets)
-            )
-            merged = upsert_triples_by_url(stale, fresh, delta_urls)
-        else:
-            merged = fresh
-        # the merged plan reads the same partitions the write overwrites —
-        # cut the dependency before writing
-        merged = merged.localCheckpoint(eager=True)
-        (
-            merged.repartition("url_bucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("url_bucket")
-            .parquet(kg_path)
-        )
-        # dynamic overwrite only rewrites partitions that received rows: a
-        # delta bucket whose every triple was retired (refetch with no
-        # extractable content) would silently keep its stale partition —
-        # drop such buckets explicitly (idempotent: a replay re-drops)
-        import shutil
-
-        present = {
-            r.b for r in merged.select(F.col("url_bucket").alias("b"))
-            .distinct().collect()
-        }
-        for b in buckets:
-            if b not in present:
-                shutil.rmtree(
-                    os.path.join(kg_path, f"url_bucket={b}"), ignore_errors=True
-                )
+        refresh(spark, kg_dir, batch_df, entity_dict, f"batch{batch_id}")
 
     return _micro_batches(
         spark, PAGES_SCHEMA, input_path, checkpoint_path,

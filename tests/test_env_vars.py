@@ -4,7 +4,8 @@ Walks every module under darkbo_spark/ with `ast` and collects each
 `os.environ.get(NAME)`, `os.environ[NAME]` and `os.getenv(NAME)` read,
 resolving NAME through the module's string constants. A new env knob
 fails this test until it is added to ALLOWED on purpose; a read whose
-name cannot be resolved statically fails it too.
+name cannot be resolved statically fails it too. The same walk ratchets
+the package's settable values (test_settable_values_do_not_grow).
 """
 
 import ast
@@ -29,6 +30,10 @@ ALLOWED = {
     "DARKBO_REAL_QUALITY",
     "DARKBO_QUALITY_MODEL",
 }
+
+# the settable-value count (test_settable_values_do_not_grow) may only
+# fall; lower this when an option goes
+MAX_SETTABLE = 240
 
 
 def _env_reads(tree: ast.Module) -> set[str]:
@@ -76,12 +81,26 @@ def _env_reads(tree: ast.Module) -> set[str]:
     return found
 
 
-def test_env_reads_match_allow_list():
+def _package_trees():
     root = pathlib.Path(darkbo_spark.__file__).parent
-    reads = {}
     for path in sorted(root.rglob("*.py")):
-        for name in _env_reads(ast.parse(path.read_text(), str(path))):
-            reads.setdefault(name, []).append(str(path.relative_to(root)))
+        yield str(path.relative_to(root)), ast.parse(path.read_text(), str(path))
+
+
+def _defaulted_params(tree: ast.Module) -> int:
+    return sum(
+        len(node.args.defaults)
+        + sum(d is not None for d in node.args.kw_defaults)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    )
+
+
+def test_env_reads_match_allow_list():
+    reads = {}
+    for rel, tree in _package_trees():
+        for name in _env_reads(tree):
+            reads.setdefault(name, []).append(rel)
     assert set(reads) == ALLOWED, {
         "unlisted": {n: reads[n] for n in set(reads) - ALLOWED},
         "listed but never read": sorted(ALLOWED - set(reads)),
@@ -103,3 +122,28 @@ def test_env_scan_catches_a_new_knob():
         "DARKBO_THIRD",
         "<unresolved: name_from_somewhere>",
     }
+
+
+def test_settable_values_do_not_grow():
+    """The ratchet on "no option without a caller". A settable value is
+    either a defaulted parameter — a positional default or a keyword-only
+    default of any `def` under darkbo_spark/ (functions, methods and
+    nested functions; lambdas are not counted) — or one environment
+    variable the package reads (distinct names, as _env_reads finds
+    them). Fails when the total rises above MAX_SETTABLE."""
+    trees = list(_package_trees())
+    params = sum(_defaulted_params(t) for _rel, t in trees)
+    env = set().union(*(_env_reads(t) for _rel, t in trees))
+    assert params + len(env) <= MAX_SETTABLE, (params, sorted(env))
+
+
+def test_settable_count_method():
+    src = (
+        "import os\n"
+        "def f(a, b=1, *, c=2, d): pass\n"
+        "class K:\n"
+        "    def m(self, x=None):\n"
+        "        def inner(y=0): pass\n"
+        "g = lambda z=1: z\n"
+    )
+    assert _defaulted_params(ast.parse(src)) == 4

@@ -97,9 +97,13 @@ def test_text_fallback_decoding(spark, tmp_path):
 
 def test_attachments_are_opaque_blobs(spark, tmp_path):
     """S10/S11: every file under the path comes back byte-exact with its
-    length, whatever its encoding."""
+    length, whatever its encoding — a zero-length file too."""
     (tmp_path / "att").mkdir()
-    blobs = {"scan.pdf": b"%PDF-1.4\x00\xff\xfe", "note.txt": "naïve\n".encode("latin-1")}
+    blobs = {
+        "scan.pdf": b"%PDF-1.4\x00\xff\xfe",
+        "note.txt": "naïve\n".encode("latin-1"),
+        "empty.bin": b"",
+    }
     for name, data in blobs.items():
         (tmp_path / "att" / name).write_bytes(data)
     df = read_attachments(spark, str(tmp_path / "att"))

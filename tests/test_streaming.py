@@ -7,6 +7,7 @@ import os
 
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from darkbo_spark import reference_impl as ref
 from darkbo_spark.kg.extract import extract_docs
@@ -288,6 +289,30 @@ def test_stream_asof_join_restart(spark, tmp_path):
     assert got == exp and len(got) == 6
 
 
+def _drop_newest_commit(spark, query, ckpt_dir):
+    """Simulate a crash between a micro-batch's sink write and its offset
+    commit: stop `query` and delete the newest commit marker of its
+    checkpoint, so the next start replays that batch. The prior query is
+    drained fully first: Spark refuses a checkpoint that a
+    not-yet-deregistered query still claims ("concurrently using")."""
+    import time as _time
+
+    query.stop()
+    for _ in range(100):
+        if not any(x.isActive for x in spark.streams.active):
+            break
+        _time.sleep(0.1)
+    commits = sorted(
+        p for p in (ckpt_dir / "commits").iterdir() if not p.name.startswith(".")
+    )
+    commits[-1].unlink()
+    # the Hadoop local FS keeps a .N.crc sidecar; leaving it behind makes
+    # the replayed commit write look like a concurrent query's tampering
+    crc = commits[-1].parent / f".{commits[-1].name}.crc"
+    if crc.exists():
+        crc.unlink()
+
+
 def test_stream_linked_triples_equals_batch(spark, tmp_path):
     """Streaming extract→triples→LINK twin: the appended linked triples
     equal the batch path's output on the same pages, including eids; a
@@ -324,29 +349,10 @@ def test_stream_linked_triples_equals_batch(spark, tmp_path):
     assert spark.read.parquet(outp).count() == len(batch)
 
     # crash INSIDE the at-least-once window: the sink write committed but
-    # the offset didn't (simulated by deleting the newest commit marker).
-    # The restart replays that batch; the idempotent per-batch-partition
-    # overwrite must leave the output byte-identical — no duplicates.
-    # Drain the prior query fully first: Spark refuses a checkpoint that a
-    # not-yet-deregistered query still claims ("concurrently using").
-    import time as _time
-
-    q2.stop()
-    for _ in range(100):
-        if not any(x.isActive for x in spark.streams.active):
-            break
-        _time.sleep(0.1)
-    commits = sorted(
-        p
-        for p in (tmp_path / "ckpt_link" / "commits").iterdir()
-        if not p.name.startswith(".")
-    )
-    commits[-1].unlink()
-    # the Hadoop local FS keeps a .N.crc sidecar; leaving it behind makes
-    # the replayed commit write look like a concurrent query's tampering
-    crc = commits[-1].parent / f".{commits[-1].name}.crc"
-    if crc.exists():
-        crc.unlink()
+    # the offset didn't. The restart replays that batch; the idempotent
+    # per-batch-partition overwrite must leave the output byte-identical —
+    # no duplicates.
+    _drop_newest_commit(spark, q2, tmp_path / "ckpt_link")
     q3 = stream_pages_to_linked_triples(spark, inp, outp, ckpt, d)
     q3.awaitTermination(120)
     replayed = {
@@ -357,25 +363,44 @@ def test_stream_linked_triples_equals_batch(spark, tmp_path):
     assert spark.read.parquet(outp).count() == len(batch)
 
 
-def test_stream_refuses_output_without_checkpoint(spark, tmp_path):
-    """batch_id-keyed idempotence requires the checkpoint and output to
-    share a lifetime: a populated output with a missing checkpoint would
-    restart batch_id at 0 and strand stale partitions — refused up front."""
-    import pytest
+@pytest.mark.parametrize("stream", ["triples", "kg"])
+def test_stream_refuses_output_without_checkpoint(spark, tmp_path, stream):
+    """An output and its checkpoint share one lifetime: a populated output
+    with a missing checkpoint would restart batch_id at 0 and replay into
+    it (stale batch partitions stranded beside the triples; envelope
+    mentions counted twice in the KG) — refused up front."""
+    import shutil
+
+    from darkbo_spark.kg.pages import entity_dictionary_df
+    from darkbo_spark.storage.snapshots import SnapshotTable
+    from darkbo_spark.streaming.ingest import stream_pages_to_kg_upsert
 
     inp = str(tmp_path / "pages_in2")
-    outp = str(tmp_path / "triples_out2")
+    outp = str(tmp_path / "out2")
     ckpt = str(tmp_path / "ckpt2")
     synth_pages(spark, 10, seed=5).write.parquet(inp)
-    q = stream_pages_to_triples(spark, inp, outp, ckpt)
-    q.awaitTermination(120)
-    assert spark.read.parquet(outp).count() > 0
+    if stream == "kg":
+        d = entity_dictionary_df(spark).select("alias", "eid")
 
-    import shutil
+        def start(ck):
+            return stream_pages_to_kg_upsert(spark, inp, outp, ck, d)
+
+        def rows():
+            return SnapshotTable(outp, "live_triples").read(spark).count()
+    else:
+        def start(ck):
+            return stream_pages_to_triples(spark, inp, outp, ck)
+
+        def rows():
+            return spark.read.parquet(outp).count()
+
+    start(ckpt).awaitTermination(120)
+    assert rows() > 0
 
     shutil.rmtree(ckpt)
     with pytest.raises(ValueError, match="checkpoint"):
-        stream_pages_to_triples(spark, inp, outp, str(tmp_path / "ckpt2_new"))
+        start(str(tmp_path / "ckpt2_new"))
+    assert not spark.streams.active
 
 
 def test_stream_incremental_tf_index_equals_batch_build(spark, tmp_path):
@@ -430,19 +455,18 @@ def test_stream_incremental_tf_index_equals_batch_build(spark, tmp_path):
 def test_stream_kg_upsert_equals_batch_rebuild(spark, tmp_path):
     """Streaming KG maintenance: after a wave of new pages and a wave of
     REFETCHES (changed content + a page that loses all its triples), the
-    bucketed triple table equals a batch E→S→T→L over the final corpus;
-    re-processing everything from a fresh checkpoint (one-batch replay)
-    converges to the same table."""
-    from darkbo_spark.kg.incremental import extract_and_link
+    live triples equal a batch E→S→T→L over the final corpus and the
+    envelope state holds every mention of both waves; a crash-replayed
+    batch whose cycle committed leaves all three tables unchanged."""
+    from darkbo_spark.kg.incremental import REFRESH_TABLES, extract_and_link
     from darkbo_spark.kg.oracle_twin import twin_entity_dict
-    from darkbo_spark.streaming.ingest import (
-        read_kg_upsert_table,
-        stream_pages_to_kg_upsert,
-    )
+    from darkbo_spark.kg.temporal import fact_envelopes, resolve_from_envelopes
+    from darkbo_spark.storage.snapshots import SnapshotTable
+    from darkbo_spark.streaming.ingest import stream_pages_to_kg_upsert
 
     inp = str(tmp_path / "pages_in")
     kg = str(tmp_path / "kg_tbl")
-    ckpt = str(tmp_path / "kg_ckpt")
+    ckpt = tmp_path / "kg_ckpt"
     dictionary = twin_entity_dict(spark)
 
     def pages_df(rows):
@@ -457,16 +481,18 @@ def test_stream_kg_upsert_equals_batch_rebuild(spark, tmp_path):
                  F.col("html").cast("binary").alias("html"), "text",
                  F.lit("en").alias("lang"))
 
+    def start():
+        return stream_pages_to_kg_upsert(
+            spark, inp, kg, str(ckpt), dictionary, max_files_per_trigger=1
+        )
+
     wave1 = [
         ("u/0", "Acme Systems was founded in 1990."),
         ("u/1", "Quantum Labs is based in Berlin."),
         ("u/2", "Maria Garcia works at Stellar Dynamics."),
     ]
     pages_df(wave1).coalesce(1).write.mode("append").parquet(inp)
-    q = stream_pages_to_kg_upsert(
-        spark, inp, kg, ckpt, dictionary, max_files_per_trigger=1, n_buckets=8
-    )
-    q.awaitTermination(120)
+    start().awaitTermination(120)
 
     wave2 = [
         ("u/0", "Acme Systems acquired Vertex Holdings."),  # changed triples
@@ -474,31 +500,37 @@ def test_stream_kg_upsert_equals_batch_rebuild(spark, tmp_path):
         ("u/3", "Wei Chen is the CEO of Nimbus Labs."),      # new page
     ]
     pages_df(wave2).coalesce(1).write.mode("append").parquet(inp)
-    q2 = stream_pages_to_kg_upsert(
-        spark, inp, kg, ckpt, dictionary, max_files_per_trigger=1, n_buckets=8
-    )
+    q2 = start()
     q2.awaitTermination(120)
-
-    final = dict(wave1)
-    final.update(dict(wave2))
-    want = extract_and_link(pages_df(sorted(final.items())), dictionary)
-    got = read_kg_upsert_table(spark, kg).drop("url_bucket")
 
     def keys(df):
         return {tuple(r) for r in df.collect()}
 
-    assert keys(got) == keys(want)
-    assert got.filter(F.col("url") == "u/2").count() == 0  # retired bucket
+    def tables():
+        return {n: keys(SnapshotTable(kg, n).read(spark)) for n in REFRESH_TABLES}
 
-    # replay convergence: fresh checkpoint reprocesses ALL files against
-    # the already-updated table — the url-keyed upsert must be idempotent
-    # (note: one batch per file keeps wave order, so last-writer is wave2)
-    q3 = stream_pages_to_kg_upsert(
-        spark, inp, kg, str(tmp_path / "kg_ckpt2"), dictionary,
-        max_files_per_trigger=1, n_buckets=8,
-    )
-    q3.awaitTermination(120)
-    assert keys(read_kg_upsert_table(spark, kg).drop("url_bucket")) == keys(want)
+    final = dict(wave1)
+    final.update(dict(wave2))
+    want = extract_and_link(pages_df(sorted(final.items())), dictionary)
+    got = tables()
+    assert got["live_triples"] == keys(want)
+    assert not any(t[0] == "u/2" for t in got["live_triples"])  # retired page
+    # envelopes accumulate: the retired wave-1 mentions still count
+    mentions = extract_and_link(pages_df(wave1), dictionary).unionByName(
+        extract_and_link(pages_df(wave2), dictionary)
+    ).withColumn("warc_ts", F.lit("2024-01-01").cast("timestamp"))
+    env = fact_envelopes(mentions)
+    assert got["fact_envelopes"] == keys(env)
+    assert got["facts"] == keys(resolve_from_envelopes(env))
+
+    # crash between the last cycle's publishes and its offset commit: the
+    # replayed batch carries the committed cycle fingerprint, so every
+    # stage skips and no mention is counted twice
+    versions = {n: SnapshotTable(kg, n).current()["version"] for n in REFRESH_TABLES}
+    _drop_newest_commit(spark, q2, ckpt)
+    start().awaitTermination(120)
+    assert tables() == got
+    assert {n: SnapshotTable(kg, n).current()["version"] for n in REFRESH_TABLES} == versions
 
 
 def test_streaming_fetch_dedup_on_canonical_url_key(spark, tmp_path):
@@ -548,8 +580,6 @@ def test_linked_stream_refuses_output_without_checkpoint(spark, tmp_path):
     triples stream, so it refuses the same way: a fresh checkpoint over an
     output that already holds batch_id partitions would restart batch_id
     at 0 and strand the stale partitions."""
-    import pytest
-
     from darkbo_spark.kg.pages import entity_dictionary_df
     from darkbo_spark.streaming.ingest import stream_pages_to_linked_triples
 

@@ -4,15 +4,14 @@ import os
 
 from pyspark.sql import functions as F
 
-from darkbo_spark.operators.domains import host_of, registered_domain
 from darkbo_spark.queries.domain_queries import _DOC_URL_SQL
 from darkbo_spark.queries.pipeline_queries import training_pipeline
 from darkbo_spark.training.pipeline import run_training_pipeline
 
 SF = "/root/testdata/sf0.001"
 
-def _domain():
-    return registered_domain(host_of(F.expr(_DOC_URL_SQL)))
+def _url():
+    return F.expr(_DOC_URL_SQL)
 
 
 def _docs(spark):
@@ -31,7 +30,7 @@ def _packed_rows(res, spark):
 
 def test_staged_equals_one_job_composition(spark, tmp_path):
     res = run_training_pipeline(
-        spark, str(tmp_path / "tp"), _docs(spark), "fp_a", _domain(), "docurl-v1"
+        spark, str(tmp_path / "tp"), _docs(spark), "fp_a", _url(), "docurl-v1"
     )
     assert res.stages_run == ["gated", "deduped", "capped", "sampled", "packed"]
     want = {
@@ -43,16 +42,16 @@ def test_staged_equals_one_job_composition(spark, tmp_path):
 
 def test_resume_skips_all_then_downstream_only(spark, tmp_path):
     out = str(tmp_path / "tp")
-    run_training_pipeline(spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1")
+    run_training_pipeline(spark, out, _docs(spark), "fp_a", _url(), "docurl-v1")
     # unchanged rerun: everything skips
-    res2 = run_training_pipeline(spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1")
+    res2 = run_training_pipeline(spark, out, _docs(spark), "fp_a", _url(), "docurl-v1")
     assert res2.stages_run == [] and len(res2.stages_skipped) == 5
     # kill-resume: invalidate a mid stage (as a crash before its commit
     # would) → ONLY that stage recomputes; upstream skips, and downstream
     # stays valid too because the fingerprint CHAIN is unchanged (the
     # recomputed stage reproduces identical content by construction)
     os.remove(os.path.join(out, "capped", "current.json"))
-    res3 = run_training_pipeline(spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1")
+    res3 = run_training_pipeline(spark, out, _docs(spark), "fp_a", _url(), "docurl-v1")
     assert res3.stages_run == ["capped"]
     assert res3.stages_skipped == ["gated", "deduped", "sampled", "packed"]
     want = {
@@ -64,9 +63,9 @@ def test_resume_skips_all_then_downstream_only(spark, tmp_path):
 
 def test_param_change_invalidates_downstream_only(spark, tmp_path):
     out = str(tmp_path / "tp")
-    run_training_pipeline(spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1")
+    run_training_pipeline(spark, out, _docs(spark), "fp_a", _url(), "docurl-v1")
     res = run_training_pipeline(
-        spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1", sample_fraction=0.5
+        spark, out, _docs(spark), "fp_a", _url(), "docurl-v1", sample_fraction=0.5
     )
     assert res.stages_skipped == ["gated", "deduped", "capped"]
     assert res.stages_run == ["sampled", "packed"]
@@ -87,7 +86,7 @@ def test_run_waits_for_a_live_holder(spark, tmp_path):
     assert lock.acquire("other-run")
     releaser = threading.Timer(1.0, lock.release, args=("other-run",))
     releaser.start()
-    res = run_training_pipeline(spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1")
+    res = run_training_pipeline(spark, out, _docs(spark), "fp_a", _url(), "docurl-v1")
     releaser.join()
     assert len(res.stages_run) == 5
     assert lock.owner() is None
@@ -101,7 +100,7 @@ def test_retention_covers_metrics_and_every_stage(spark, tmp_path):
     out = str(tmp_path / "tp")
     for frac in (0.5, 0.6, 0.7, 0.8):
         res = run_training_pipeline(
-            spark, out, _docs(spark), "fp_a", _domain(), "docurl-v1",
+            spark, out, _docs(spark), "fp_a", _url(), "docurl-v1",
             sample_fraction=frac,
         )
         assert "sampled" in res.stages_run
