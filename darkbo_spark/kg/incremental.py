@@ -104,17 +104,16 @@ def refresh(
     try:
         with stage_run(spark, out_dir, "kg_refresh", CODE_VERSION, WAIT_S) as run:
             urls = pages.select("url")
-            _, fp = run.stage(live, cycle_fp, "url-upsert", lambda: (
-                upsert_triples_by_url(current(live, fresh), fresh, urls)))
+            upserted = run.start(live, [(fresh, cycle_fp)], "url-upsert", lambda f: (
+                upsert_triples_by_url(current(live, f), f, urls)))
 
-            def merged() -> DataFrame:
+            def merged(_live: DataFrame) -> DataFrame:
                 dated = fresh.join(pages.select("url", "warc_ts"), "url")
                 delta = fact_envelopes(dated)
                 return merge_fact_envelopes(current(env, delta), delta)
 
-            env_tbl, fp = run.stage(env, fp, "merge", merged)
-            run.stage(facts, fp, "latest-wins",
-                      lambda: resolve_from_envelopes(env_tbl.read(spark)))
+            envs = run.start(env, [upserted], "merge", merged)
+            run.start(facts, [envs], "latest-wins", resolve_from_envelopes)
     finally:
         fresh.unpersist()
     return run.result

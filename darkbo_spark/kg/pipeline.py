@@ -36,15 +36,16 @@ broadcasts the dictionary.
 The five fusion tables (`facts_asof=`) are derivations of ONE persisted
 envelope aggregate of kg_triples ⋈ docs on the (subj_eid, pred, obj)
 fact key (kg/temporal.fusion_envelopes), so the mention stream is joined
-and shuffled once for all five. kg_fact_history, a projection, fills the
-envelope; the other four start once it has.
+and shuffled once for all five. The first fusion stage that builds fills
+the envelope (persist + count); the others read the cache.
 
-Concurrency is one ThreadPoolExecutor, and each stage starts once the
-tables it reads are published: eid_map runs beside the page stages,
-kg_entities is submitted the moment eid_map publishes, kg_triples waits
-for raw_triples and eid_map only, and kg_nil_candidates runs beside the
-five fusion stages. Every future is `.result()`ed, which re-raises a
-stage's failure in the calling thread. The kg_triples write salt is
+Each stage is declared with the stages it reads (storage/stages
+`run.start`) and runs in its own thread once they have published:
+eid_map runs beside the page stages, kg_entities starts the moment
+eid_map publishes, kg_triples waits for raw_triples and eid_map only,
+and kg_nil_candidates runs beside the five fusion stages. A failed stage
+fails only the stages that read it, and the run raises the first failure
+once every stage has settled. The kg_triples write salt is
 kg/materialize.WRITE_SALT and NIL mining keeps surfaces seen at least
 twice; both are in the stage params.
 """
@@ -54,7 +55,6 @@ from __future__ import annotations
 import os
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor, wait
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,7 +67,7 @@ from darkbo_spark.kg.canonicalize import (
 )
 from darkbo_spark.kg.extract import extract_docs
 from darkbo_spark.kg.link import link_entities
-from darkbo_spark.kg.materialize import WRITE_SALT, bucketize_triples
+from darkbo_spark.kg.materialize import DEFAULT_BUCKETS, WRITE_SALT, bucketize_triples
 from darkbo_spark.kg.pages import entity_dictionary_df, synth_pages
 from darkbo_spark.kg.triples import extract_doc_triples_df
 from darkbo_spark.storage import make_table
@@ -80,13 +80,6 @@ from darkbo_spark.storage.stages import (
 )
 
 CODE_VERSION = "1"
-# stages in flight at once: the dictionary thread and the entity table
-# beside the page stages, then NIL mining and the fusion stages (an A/B
-# measured all fusion stages in flight fastest — medians 2→3.39 s,
-# 3→3.12 s, 5→2.36 s at 100k pages, OPTIMIZATION_r08.md §9). A
-# job-count, not a core-count: under FIFO scheduling excess in-flight
-# jobs just queue on a saturated cluster.
-_POOL_WORKERS = 6
 
 
 def run_pipeline(
@@ -95,7 +88,7 @@ def run_pipeline(
     pages: DataFrame | None = None,
     n_pages: int = 1000,
     seed: int = 42,
-    n_buckets: int = 32,
+    n_buckets: int = DEFAULT_BUCKETS,
     input_fingerprint: str | None = None,
     fuzzy_fallback: str | None = None,
     facts_asof: str | None = None,
@@ -154,231 +147,189 @@ def run_pipeline(
         )
     assert input_fingerprint, "provide input_fingerprint for external pages input"
 
-    # one pool for every concurrent stage: each stage is submitted as
-    # soon as the tables it reads are published, so nothing waits on a
-    # stage it does not read. On an exception the pool waits for its
-    # running stages before stage_run releases the lock.
-    with stage_run(spark, out_dir, "pipeline", CODE_VERSION) as run, \
-            ThreadPoolExecutor(max_workers=_POOL_WORKERS) as pool:
-        stage = run.stage
-        # ---- C: canonicalize — depends ONLY on the dictionary, so it runs
-        # as a CONCURRENT future overlapping the page stages (Spark
-        # schedules jobs from separate threads onto free task slots; the
-        # dictionary jobs are single-task and fill the gaps between the big
-        # stages' tasks). The threads touch disjoint tables and
-        # `run.stage()` is thread-safe; `.result()` re-raises a failure
-        # before anything depends on eid_map. ------------------------------
-        entity_dict = (
-            dictionary if dictionary is not None else entity_dictionary_df(spark)
-        )
-        # the dictionary is a pipeline INPUT like pages: its fingerprint
-        # feeds every dictionary-derived stage, so a grown dictionary
-        # republishes eid_map/kg_entities/kg_triples while an unchanged one
-        # skips
-        dict_parent = fingerprint(input_fingerprint, "dict", dictionary_fingerprint)
-        # the run's one dictionary-size decision: driver-side plans while
-        # the dictionary's estimated collected bytes fit the broadcast
-        # budget, distributed ones beyond it. Made at most once, by the
-        # first stage that builds (the lock keeps concurrent builders from
-        # racing it), so a rerun where every stage skips runs no estimate
-        # job. Both sides publish the same rows, so the params strings
-        # (content identity) leave the choice out.
-        fits_driver = _Once(lambda: dictionary_fits_driver(entity_dict))
-
-        # stages submitted from other threads; every one is `.result()`ed
-        # before the run returns, so no failure goes unseen
-        futures = []
-
-        def _eid_map():
-            eidmap_tbl, fp_m = stage(
-                "eid_map", dict_parent, "cc_v2_auto",
-                lambda: canonicalize_entities(
-                    entity_dict,
-                    mode="driver" if fits_driver() else "distributed",
+    entity_dict = (
+        dictionary if dictionary is not None else entity_dictionary_df(spark)
+    )
+    # the dictionary is a pipeline INPUT like pages: its fingerprint feeds
+    # every dictionary-derived stage, so a grown dictionary republishes
+    # eid_map/kg_entities/kg_triples while an unchanged one skips
+    dict_parent = fingerprint(input_fingerprint, "dict", dictionary_fingerprint)
+    # the run's one dictionary-size decision: driver-side plans while the
+    # dictionary's estimated collected bytes fit the broadcast budget,
+    # distributed ones beyond it. Made at most once, by the first stage
+    # that builds (the lock keeps concurrent builders from racing it), so
+    # a rerun where every stage skips runs no estimate job. Both sides
+    # publish the same rows, so the params strings (content identity)
+    # leave the choice out.
+    fits_driver = _Once(lambda: dictionary_fits_driver(entity_dict))
+    envelope = None
+    try:
+        with stage_run(spark, out_dir, "pipeline", CODE_VERSION) as run:
+            start = run.start
+            # ---- C: canonicalize — reads ONLY the dictionary, so it runs
+            # beside the page stages (Spark schedules jobs from separate
+            # threads onto free task slots; the dictionary jobs are
+            # single-task and fill the gaps between the big stages' tasks)
+            eid_map = start(
+                "eid_map", [(entity_dict, dict_parent)], "cc_v2_auto",
+                lambda d: canonicalize_entities(
+                    d, mode="driver" if fits_driver() else "distributed"
                 ).coalesce(1),
             )
-            # the entity table reads eid_map only: it starts the moment
-            # eid_map publishes, beside the page stages and the link
-            futures.append(pool.submit(
-                stage, "kg_entities", fp_m, "entities_v1",
-                lambda: (
-                    build_entity_table_driver
-                    if fits_driver()
-                    else build_entity_table
-                )(entity_dict, eidmap_tbl.read(spark)).coalesce(1),
-            ))
-            return eidmap_tbl, fp_m
-
-        eid_future = pool.submit(_eid_map)
-        # ---- E: extract (the expensive byte-exact UDF runs exactly ONCE)
-        docs_tbl, fp_d = stage(
-            "docs", input_fingerprint, "clean_v1", lambda: extract_docs(pages)
-        )
-        # ---- fused S→T over persisted docs (ONE UDF pass, one explode)
-        triples_tbl, fp_t = stage(
-            "raw_triples", fp_d, "en_only",
-            lambda: extract_doc_triples_df(docs_tbl.read(spark)),
-        )
-        eidmap_tbl, fp_m = eid_future.result()
-
-        # ---- fused L+M: link → bucketize in ONE pass ----------------------
-        # The link dictionary is pre-resolved to CANONICAL ids (dict ⋈
-        # eid_map, both dictionary-sized, folded on the small side), so
-        # linking attaches canonical entity ids directly — two broadcast
-        # joins total instead of link + remap (four). Materializing an
-        # intermediate `linked` table would only add a full write+read of
-        # every triple; resume granularity stays per-stage (a crash here
-        # re-reads persisted raw_triples, never re-extracts). The output is
-        # written flat, clustered one-file-per (bucket, salt) by the
-        # repartition — with Iceberg this is hidden partitioning
-        # `bucket(N, subj_eid)`; file-level min/max stats on subj_bucket
-        # give the same pruning locally without the dynamic partitionBy
-        # writer's per-task sort.
-        def build_kg():
-            eid_map = eidmap_tbl.read(spark)
-            resolved_dict = entity_dict.join(eid_map, "eid").select(
-                "alias", F.col("canon_eid").alias("eid")
+            start(
+                "kg_entities", [eid_map], "entities_v1",
+                lambda m: (
+                    build_entity_table_driver if fits_driver() else build_entity_table
+                )(entity_dict, m).coalesce(1),
             )
-            linked = link_entities(triples_tbl.read(spark), resolved_dict)
-            if fuzzy_fallback:
-                from darkbo_spark.kg.link import apply_fuzzy_fallback
+            # ---- E: extract (the expensive byte-exact UDF runs exactly ONCE)
+            docs = start("docs", [(pages, input_fingerprint)], "clean_v1", extract_docs)
+            # ---- fused S→T over persisted docs (ONE UDF pass, one explode)
+            raw = start("raw_triples", [docs], "en_only", extract_doc_triples_df)
 
-                linked = apply_fuzzy_fallback(
-                    linked, resolved_dict, method=fuzzy_fallback
+            # ---- fused L+M: link → bucketize in ONE pass ------------------
+            # The link dictionary is pre-resolved to CANONICAL ids (dict ⋈
+            # eid_map, both dictionary-sized, folded on the small side), so
+            # linking attaches canonical entity ids directly — two
+            # broadcast joins total instead of link + remap (four).
+            # Materializing an intermediate `linked` table would only add a
+            # full write+read of every triple; resume granularity stays
+            # per-stage (a crash here re-reads persisted raw_triples, never
+            # re-extracts). The output is written flat, clustered
+            # one-file-per (bucket, salt) by the repartition — with Iceberg
+            # this is hidden partitioning `bucket(N, subj_eid)`; file-level
+            # min/max stats on subj_bucket give the same pruning locally
+            # without the dynamic partitionBy writer's per-task sort.
+            def build_kg(triples: DataFrame, eid_map: DataFrame) -> DataFrame:
+                resolved_dict = entity_dict.join(eid_map, "eid").select(
+                    "alias", F.col("canon_eid").alias("eid")
                 )
-            return bucketize_triples(linked, n_buckets=n_buckets)
+                linked = link_entities(triples, resolved_dict)
+                if fuzzy_fallback:
+                    from darkbo_spark.kg.link import apply_fuzzy_fallback
 
-        kg_tbl, fp_k = stage(
-            "kg_triples",
-            fp_t + fp_m,
-            f"linkc_broadcast_buckets_{n_buckets}_salt_{WRITE_SALT}"
-            f"_fb_{fuzzy_fallback or 'none'}",
-            build_kg,
-        )
+                    linked = apply_fuzzy_fallback(
+                        linked, resolved_dict, method=fuzzy_fallback
+                    )
+                return bucketize_triples(linked, n_buckets=n_buckets)
 
-        # ---- optional NIL mining: the dictionary-growth worklist ----------
-        # Depends only on kg_triples (unlinked surfaces are right there in
-        # the published link output), so it runs in the pool beside the
-        # fusion stages. Recurring-surface-bounded — far smaller than the
-        # mention stream — so the worklist writes single-file; the NEXT
-        # run consumes it via grown_dictionary().
-        if mine_nil:
-            from darkbo_spark.kg.temporal import nil_candidates
+            kg = start(
+                "kg_triples", [raw, eid_map],
+                f"linkc_broadcast_buckets_{n_buckets}_salt_{WRITE_SALT}"
+                f"_fb_{fuzzy_fallback or 'none'}",
+                build_kg,
+            )
 
-            futures.append(pool.submit(
-                stage, "kg_nil_candidates", fp_k, "nil_min2_v1",
-                lambda: nil_candidates(kg_tbl.read(spark), min_mentions=2).coalesce(1),
-            ))
+            # ---- optional NIL mining: the dictionary-growth worklist ------
+            # Reads only kg_triples (unlinked surfaces are right there in
+            # the published link output), so it runs beside the fusion
+            # stages. Recurring-surface-bounded — far smaller than the
+            # mention stream — so the worklist writes single-file; the NEXT
+            # run consumes it via grown_dictionary().
+            if mine_nil:
+                from darkbo_spark.kg.temporal import nil_candidates
 
-        # ---- optional temporal fusion: facts as-of + conflict inventory ---
-        # Depends on kg_triples AND docs (the per-page crawl date joins back
-        # on the page key — at crawl scale a co-keyed join, never a
-        # product). Write shape: the fusion tables are entity-bounded, but
-        # the entity universe GROWS (nil_candidates exists to grow the
-        # dictionary; a real KG's is 10^8–10^9), so `coalesce(1)` is only
-        # safe while the dictionary is provably small: single file while
-        # the run's dictionary decision says driver-sized, else the
-        # kg_triples convention, bucketed on pmod(xxhash64(entity key), N)
-        # so no single task funnels the fact state and per-entity reads
-        # prune to one bucket. Every row carries `fact_bucket` in BOTH
-        # shapes (schema and content are shape-invariant; only physical
-        # layout changes, so the fingerprint — content identity — excludes
-        # the shape).
-        envelope = None
-        if facts_asof:
-            from pyspark import StorageLevel
-
-            from darkbo_spark.kg import temporal
-
-            def _fusion_shape(df: DataFrame, key_col: str) -> DataFrame:
-                out = df.withColumn(
-                    "fact_bucket",
-                    F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int"),
+                start(
+                    "kg_nil_candidates", [kg], "nil_min2_v1",
+                    lambda k: nil_candidates(k, min_mentions=2).coalesce(1),
                 )
-                if fits_driver():
-                    return out.coalesce(1)
-                return out.repartition(n_buckets, F.col("fact_bucket"))
 
-            def _envelope() -> DataFrame:
-                # ONE envelope aggregate of kg_triples ⋈ docs on the fact
-                # key (kg/temporal.fusion_envelopes), persisted for the
-                # block: the five fusion tables are derivations of this
-                # collapsed frame, so the mention stream is joined and
-                # shuffled once. While the dictionary is driver-sized the
-                # tables are written single-file anyway, so the envelope
-                # is kept in one partition too and no derivation shuffles.
-                # MEMORY_AND_DISK: spills instead of OOM at scale, and
-                # recompute-from-lineage stays available if evicted.
-                env = temporal.fusion_envelopes(
-                    kg_tbl.read(spark).join(
-                        docs_tbl.read(spark).select("url", "warc_ts"), "url"
-                    ),
-                    as_of=facts_asof,
-                )
-                if fits_driver():
-                    env = env.coalesce(1)
-                return env.persist(StorageLevel.MEMORY_AND_DISK)
+            # ---- optional temporal fusion: facts as-of + conflict inventory
+            # Reads kg_triples AND docs (the per-page crawl date joins back
+            # on the page key — at crawl scale a co-keyed join, never a
+            # product). Write shape: the fusion tables are entity-bounded,
+            # but the entity universe GROWS (nil_candidates exists to grow
+            # the dictionary; a real KG's is 10^8–10^9), so `coalesce(1)` is
+            # only safe while the dictionary is provably small: single file
+            # while the run's dictionary decision says driver-sized, else
+            # the kg_triples convention, bucketed on pmod(xxhash64(entity
+            # key), N) so no single task funnels the fact state and
+            # per-entity reads prune to one bucket. Every row carries
+            # `fact_bucket` in BOTH shapes (schema and content are
+            # shape-invariant; only physical layout changes, so the
+            # fingerprint — content identity — excludes the shape).
+            if facts_asof:
+                from pyspark import StorageLevel
 
-            # made by the first fusion stage that builds, like the
-            # dictionary decision, so a rerun that skips them runs no job
-            envelope = _Once(_envelope)
+                from darkbo_spark.kg import temporal
 
-            def _submit(name, params, derive, key):
-                futures.append(pool.submit(
-                    stage, name, fp_k + fp_d, params,
-                    lambda: _fusion_shape(derive(envelope()), key),
-                ))
-                return futures[-1]
+                def _fusion_shape(df: DataFrame, key_col: str) -> DataFrame:
+                    out = df.withColumn(
+                        "fact_bucket",
+                        F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int"),
+                    )
+                    if fits_driver():
+                        return out.coalesce(1)
+                    return out.repartition(n_buckets, F.col("fact_bucket"))
 
-            # kg_fact_history, a projection, fills the envelope first:
-            # the other four then read a materialized cache instead of
-            # each launching a job that waits on the fill (5 fewer
-            # jobs; an A/B against letting all five race on the fill
-            # measured it no slower). Cutoff-independent tables don't
-            # carry facts_asof in their fingerprints, so moving the
-            # cutoff recomputes kg_facts alone. The other four are
-            # mutually independent (disjoint output tables, shared
-            # read-only input), so they are in flight at once: Spark
-            # schedules concurrent jobs onto free task slots, and the
-            # next stage's tasks back-fill the tail of the previous one
-            # (guide §2.6; OPTIMIZATION_r08.md §9).
-            wait([_submit("kg_fact_history", "history_v2",
-                          temporal.history_from_envelopes, "subj_eid")])
-            _submit("kg_facts", f"asof_{facts_asof}_v2",
-                    temporal.facts_from_envelopes, "subj_eid")
-            _submit("kg_conflicts", "conflicts_v2",
-                    temporal.conflicts_from_envelopes, "subj_eid")
-            _submit("kg_entity_types", "types_v2",
-                    temporal.types_from_envelopes, "subj_eid")
-            _submit("kg_entity_profiles", "profiles_v2",
-                    temporal.profiles_from_envelopes, "eid")
-        # kg_entities was submitted from the eid_map thread, which has
-        # returned, so `futures` is complete; every stage settles before
-        # the unpersist
-        try:
-            wait(futures)
-            for f in futures:
-                f.result()  # surface the first failure
-        finally:
-            if envelope is not None and envelope.value is not None:
-                envelope.value.unpersist()
+                def _envelope(kg_df: DataFrame, docs_df: DataFrame) -> DataFrame:
+                    # ONE envelope aggregate of kg_triples ⋈ docs on the fact
+                    # key, persisted and filled under the _Once lock: the
+                    # five fusion tables are derivations of it, so the
+                    # mention stream is joined and shuffled once and the
+                    # stages queued behind the fill read the cache. One
+                    # partition while the tables are written single-file,
+                    # so no derivation shuffles. MEMORY_AND_DISK: spills
+                    # instead of OOM at scale.
+                    env = temporal.fusion_envelopes(
+                        kg_df.join(docs_df.select("url", "warc_ts"), "url"),
+                        as_of=facts_asof,
+                    )
+                    if fits_driver():
+                        env = env.coalesce(1)
+                    env = env.persist(StorageLevel.MEMORY_AND_DISK)
+                    try:
+                        env.count()
+                    except BaseException:
+                        env.unpersist()
+                        raise
+                    return env
+
+                # made by the first fusion stage that builds, like the
+                # dictionary decision, so a rerun that skips them runs no
+                # job. Only kg_facts carries facts_asof in its fingerprint.
+                # The five are in flight at once: the next stage's tasks
+                # back-fill the tail of the previous one (guide §2.6;
+                # OPTIMIZATION_r08.md §9).
+                envelope = _Once(_envelope)
+                for name, params, derive, key in (
+                    ("kg_fact_history", "history_v2",
+                     temporal.history_from_envelopes, "subj_eid"),
+                    ("kg_facts", f"asof_{facts_asof}_v2",
+                     temporal.facts_from_envelopes, "subj_eid"),
+                    ("kg_conflicts", "conflicts_v2",
+                     temporal.conflicts_from_envelopes, "subj_eid"),
+                    ("kg_entity_types", "types_v2",
+                     temporal.types_from_envelopes, "subj_eid"),
+                    ("kg_entity_profiles", "profiles_v2",
+                     temporal.profiles_from_envelopes, "eid"),
+                ):
+                    start(
+                        name, [kg, docs], params,
+                        lambda k, d, derive=derive, key=key: _fusion_shape(
+                            derive(envelope(k, d)), key
+                        ),
+                    )
+    finally:
+        if envelope is not None and envelope.value is not None:
+            envelope.value.unpersist()
     return run.result
 
 
 class _Once:
-    """A value built by the first call, under a lock, so the stages of
-    one run that race for it share one build; `value` is None until
-    then."""
+    """A value built by the first call (from that call's arguments), under
+    a lock, so the stages of one run that race for it share one build;
+    `value` is None until then."""
 
     def __init__(self, build):
         self._build = build
         self._lock = threading.Lock()
         self.value = None
 
-    def __call__(self):
+    def __call__(self, *args):
         with self._lock:
             if self.value is None:
-                self.value = self._build()
+                self.value = self._build(*args)
             return self.value
 
 

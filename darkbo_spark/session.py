@@ -7,8 +7,10 @@ Common-Crawl pages) while remaining correct on local[N] test runs:
   salting in the link stage is still the primary skew defense).
 * Arrow enabled for the vectorized pandas UDF path (the only Python that
   ever touches row data).
-* shuffle partitions default to 2×cores locally; on a real cluster this is
-  set per-job to ~2-3× total executor cores via spark-submit --conf.
+* local mode runs local[SPARK_GRAFT_CPUS] (default: this machine's
+  cores); shuffle partitions default to 2×cores locally; on a real
+  cluster this is set per-job to ~2-3× total executor cores via
+  spark-submit --conf.
 """
 
 from __future__ import annotations
@@ -18,12 +20,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cpus() -> int:
+    """Local parallelism: SPARK_GRAFT_CPUS, else this machine's cores."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return os.cpu_count() or 1
+    if not raw.strip().isdecimal() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw!r}")
+    return int(raw)
+
+
 def get_spark(
     app_name: str = "darkbo-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # local[N] → N is the parallelism; a real cluster overrides via --conf.

@@ -8,12 +8,14 @@ publish → pointer swap → unlock → keep-last-N retention).
   is a single try), then raises RuntimeError naming the holder. A crashed
   same-host holder is taken over inside the wait (BuildLock.acquire).
 * `stage_run(spark, out_dir, lock_name, code_version, wait_s)` holds one
-  lock for a whole pipeline run. `run.stage(name, parent_fp, params,
-  build)` checks the stage fingerprint under that lock and, when it is
-  stale, heartbeats, builds and publishes; it records ran/skipped, wall
-  and row count (parquet footers, no Spark job). A run that completes
-  publishes its per-file rows to `_metrics` and expires every table it
-  touched; a run that raises only releases the lock.
+  lock for a whole pipeline run. `run.start(name, inputs, params, build)`
+  runs a stage in its own thread once its inputs have published; its
+  parent fingerprint is theirs joined in order. When the stage is stale
+  it heartbeats, publishes `build(*frames)` and records wall and row
+  count (parquet footers, no Spark job). The run waits for every started
+  stage; a run that completes publishes its per-file rows to `_metrics`
+  and expires every table it touched, one that raises only releases the
+  lock.
 """
 
 from __future__ import annotations
@@ -23,9 +25,10 @@ import os
 import threading
 import time
 import uuid
+from concurrent.futures import Future
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Callable, Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,15 +75,14 @@ class StageResult:
     stages_run: list = field(default_factory=list)
     stages_skipped: list = field(default_factory=list)
     rows: dict = field(default_factory=dict)  # name -> rows, from footers
-    # name -> thread wall seconds of build + publish; a stage built from a
-    # concurrent thread includes task-slot wait
+    # name -> wall seconds of build + publish, in the stage's own thread;
+    # stages run concurrently, so every wall includes task-slot wait
     timings: dict = field(default_factory=dict)
 
 
 class StageRun:
-    """The stages of one locked run. `stage()` may be called from several
-    threads at once (each on its own table): the bookkeeping it shares is
-    guarded by one mutex."""
+    """The stages of one locked run, each started in its own thread: the
+    bookkeeping they share is guarded by one mutex."""
 
     def __init__(self, spark: SparkSession, out_dir: str, code_version: str,
                  heartbeat: Callable[[], None]):
@@ -92,9 +94,37 @@ class StageRun:
         self._t0 = time.time()
         self._metrics_rows: list[dict] = []
         self._mu = threading.Lock()
+        self._started: list[Future] = []
 
-    def stage(self, name: str, parent_fp: str, params: str,
-              build: Callable[[], DataFrame]):
+    def start(self, name: str, inputs: Sequence, params: str,
+              build: Callable[..., DataFrame]) -> Future:
+        """Future of stage `name`'s (table, fingerprint). Each input is an
+        earlier `start`'s Future or an external (DataFrame, fingerprint)
+        pair; a published input is read only if the stage builds, and a
+        failed one fails the stage, unbuilt, with the same exception."""
+        done: Future = Future()
+
+        def body():
+            try:
+                got = [i.result() if isinstance(i, Future) else i for i in inputs]
+
+                def built():
+                    return build(*(
+                        src.read(self.spark) if isinstance(i, Future) else src
+                        for i, (src, _fp) in zip(inputs, got)
+                    ))
+
+                parent = "".join(fp for _src, fp in got)
+                done.set_result(self._stage(name, parent, params, built))
+            except BaseException as e:  # settled through the future
+                done.set_exception(e)
+
+        self._started.append(done)
+        threading.Thread(target=body, name=f"stage-{name}").start()
+        return done
+
+    def _stage(self, name: str, parent_fp: str, params: str,
+               build: Callable[[], DataFrame]):
         """Publish `build()` as table `name` unless its current version
         already carries this stage's fingerprint. Returns (table, fp)."""
         res = self.result
@@ -141,8 +171,16 @@ class StageRun:
 def stage_run(spark: SparkSession, out_dir: str, lock_name: str,
               code_version: str, wait_s: float = 0.0) -> Iterator[StageRun]:
     """One pipeline run under `out_dir`'s `lock_name` BuildLock; the run's
-    result is `run.result` after the with-block."""
+    result is `run.result` after the with-block. Every started stage
+    settles before the lock is released, also when the with-body raises;
+    then the first stage failure in start order is raised."""
     with locked(out_dir, lock_name, wait_s) as heartbeat:
         run = StageRun(spark, out_dir, code_version, heartbeat)
-        yield run
+        try:
+            yield run
+        finally:
+            for f in run._started:
+                f.exception()  # wait; raising is left to the loop below
+        for f in run._started:
+            f.result()
         run.finish()

@@ -16,8 +16,6 @@ of settings, and two compositions run it:
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,8 +82,7 @@ def run_training_pipeline(
     with stage_run(
         spark, out_dir, "training_pipeline", CODE_VERSION, wait_s=WAIT_S
     ) as run:
-        df, fp = docs, input_fingerprint
+        src = (docs, input_fingerprint)
         for name, params, build in training_stages(url, url_desc, sample_fraction):
-            tbl, fp = run.stage(name, fp, params, partial(build, df))
-            df = tbl.read(spark)
+            src = run.start(name, [src], params, build)
     return run.result

@@ -16,12 +16,14 @@ import time
 
 
 def main() -> int:
+    from darkbo_spark.kg.materialize import DEFAULT_BUCKETS
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", type=int, default=2000)
     ap.add_argument("--seed", type=int, default=42)
     ap.add_argument("--out", default="/tmp/kg_out")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--buckets", type=int, default=32)
+    ap.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS)
     ap.add_argument("--facts-asof", default=None,
                     help="YYYY-MM-DD: add the temporal fusion stages")
     ap.add_argument("--mine-nil", action="store_true",

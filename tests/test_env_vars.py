@@ -147,3 +147,26 @@ def test_settable_count_method():
         "g = lambda z=1: z\n"
     )
     assert _defaulted_params(ast.parse(src)) == 4
+
+
+def test_spark_cpus_default_to_this_machine(monkeypatch):
+    """Without SPARK_GRAFT_CPUS, local mode gets one task slot per core."""
+    import os
+
+    from darkbo_spark.session import _cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _cpus() == os.cpu_count()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _cpus() == 3
+
+
+def test_bad_spark_cpus_names_the_variable(monkeypatch):
+    import pytest
+
+    from darkbo_spark.session import get_spark
+
+    for bad in ("four", "2.5", "0", "-1", "", "²"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            get_spark(master="local[1]")

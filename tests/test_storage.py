@@ -196,12 +196,10 @@ def test_lock_wait_takes_over_dead_holder(tmp_path):
 
 
 def test_stage_run_records_every_concurrent_stage(spark, tmp_path):
-    """run.stage() is called from several threads at once (the KG
-    pipeline's dictionary thread and fusion pool): no stage's bookkeeping
-    or metrics rows may be lost."""
+    """Twelve independent stages started at once each publish from their
+    own thread: no stage's bookkeeping or metrics rows may be lost."""
     import sys
     from collections import Counter
-    from concurrent.futures import ThreadPoolExecutor
 
     from darkbo_spark.storage.stages import stage_run
 
@@ -210,13 +208,9 @@ def test_stage_run_records_every_concurrent_stage(spark, tmp_path):
     sys.setswitchinterval(1e-5)
     try:
         with stage_run(spark, str(tmp_path), "stress", "t1") as run:
-            with ThreadPoolExecutor(max_workers=len(want)) as pool:
-                futures = [
-                    pool.submit(run.stage, name, "root", "p", lambda n=n: _df(spark, n))
-                    for name, n in want.items()
-                ]
-                for f in futures:
-                    f.result(timeout=120)
+            root = (_df(spark, 1), "root")
+            for name, n in want.items():
+                run.start(name, [root], "p", lambda _root, n=n: _df(spark, n))
     finally:
         sys.setswitchinterval(old)
     res = run.result
@@ -226,6 +220,90 @@ def test_stage_run_records_every_concurrent_stage(spark, tmp_path):
     for r in SnapshotTable(str(tmp_path), "_metrics").read(spark).collect():
         metrics[r.stage] += r.rows
     assert dict(metrics) == want
+
+
+def test_start_parent_is_inputs_joined_in_order(spark, tmp_path):
+    """A diamond a → (b, c) → d: d's parent is b's then c's fingerprint,
+    and every stage builds from its inputs' published frames."""
+    from darkbo_spark.storage.stages import fingerprint, stage_run
+
+    with stage_run(spark, str(tmp_path), "diamond", "t1") as run:
+        a = run.start("a", [(_df(spark, 4), "ext")], "p", lambda df: df)
+        b = run.start("b", [a], "pb", lambda df: df.filter("x < 3"))
+        c = run.start("c", [a], "pc", lambda df: df.filter("x >= 2"))
+        d = run.start("d", [c, b], "pd", lambda cf, bf: cf.unionByName(bf))
+    fa = fingerprint("ext", "a", "p", "t1")
+    fb = fingerprint(fa, "b", "pb", "t1")
+    fc = fingerprint(fa, "c", "pc", "t1")
+    tbl, fd = d.result()
+    assert fd == fingerprint(fc + fb, "d", "pd", "t1")
+    assert tbl.current_fingerprint() == fd
+    assert sorted(r.x for r in tbl.read(spark).collect()) == [0, 1, 2, 2, 3]
+    assert run.result.rows == {"a": 4, "b": 3, "c": 2, "d": 5}
+
+
+def test_failed_input_fails_dependents_unbuilt(spark, tmp_path):
+    """One input fails: its dependent re-raises that exception without
+    building or publishing, an independent sibling still publishes, the
+    run raises the first failure in start order as the same object, and
+    the lock is released."""
+    import pytest
+
+    from darkbo_spark.storage.stages import stage_run
+
+    out = str(tmp_path)
+    first, later = RuntimeError("first"), ValueError("later")
+    built = []
+
+    def _raise(exc):
+        def build(*_frames):
+            raise exc
+        return build
+
+    def _dependent(df):
+        built.append("dep")
+        return df
+
+    with pytest.raises(RuntimeError) as ei:
+        with stage_run(spark, out, "faults", "t1") as run:
+            root = (_df(spark, 2), "root")
+            bad = run.start("bad", [root], "p", _raise(first))
+            dep = run.start("dep", [bad], "p", _dependent)
+            run.start("sibling", [root], "p", lambda df: df)
+            run.start("bad2", [root], "p", _raise(later))
+    assert ei.value is first
+    assert dep.exception() is first and not built
+    for name in ("bad", "dep", "bad2"):
+        assert not os.path.exists(os.path.join(out, name, "current.json")), name
+    assert os.path.exists(os.path.join(out, "sibling", "current.json"))
+    assert run.result.stages_run == ["sibling"]
+    assert not os.path.exists(os.path.join(out, ".faults.lock"))
+
+
+def test_run_settles_started_stages_when_the_body_raises(spark, tmp_path):
+    """A with-body that raises after starting a stage still waits for it
+    before the lock is released, and its own exception is the one
+    raised."""
+    import threading
+
+    import pytest
+
+    from darkbo_spark.storage.stages import stage_run
+
+    out = str(tmp_path)
+    release = threading.Event()
+
+    def slow(df):
+        release.wait(30)
+        return df
+
+    with pytest.raises(KeyError):
+        with stage_run(spark, out, "body", "t1") as run:
+            started = run.start("slow", [(_df(spark, 1), "root")], "p", slow)
+            threading.Timer(0.5, release.set).start()
+            raise KeyError("body")
+    assert started.done() and run.result.stages_run == ["slow"]
+    assert not os.path.exists(os.path.join(out, ".body.lock"))
 
 
 def test_stored_table_recovers_from_crashed_publisher(spark, tmp_path, monkeypatch):
